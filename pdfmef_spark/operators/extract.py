@@ -89,10 +89,6 @@ def _figure_captions(s: str) -> list[str]:
     return [c for _, c in caps]
 
 
-class _RowError(Exception):
-    """Carries an already-formatted per-row error message verbatim."""
-
-
 def extract_html_bytes(
     raw: bytes,
 ) -> tuple[str, list[str], str | None, list[str], int]:
@@ -112,6 +108,32 @@ def extract_html_bytes(
     blocks = [" ".join(line.split()) for line in s.split("\n")]
     blocks = [b for b in blocks if b]
     return "\n".join(blocks), links, title, figures, len(blocks)
+
+
+def extract_row(raw, extract_fn=extract_html_bytes, runner=None) -> tuple:
+    """One page's EXTRACTED fields with per-row error capture:
+    (text, links, title, figures, n_blocks, error). The batch stage
+    (:func:`extract_pages`) and the per-document service call this same
+    function.
+
+    A failure is data, never an exception: a null page or a raising
+    `extract_fn` gives all-null fields and ``error = "Type: msg"``; under
+    a `runner` (functions/deadline.DeadlineRunner) its verbatim error
+    string, e.g. ``"Timeout"``.
+    """
+    try:
+        if raw is None:
+            raise ValueError("null html")
+        if runner is None:
+            return (*extract_fn(bytes(raw)), None)
+        out, err = runner.run(extract_fn, bytes(raw))
+    except Exception as exc:  # error is data, never a task failure
+        return (None, None, None, None, None, f"{type(exc).__name__}: {exc}")
+    if err is not None:
+        # err is already "Type: msg" (or "Timeout") — carry it verbatim
+        # so the error column matches the in-process path exactly
+        return (None, None, None, None, None, err)
+    return (*out, None)
 
 
 def extract_pages(
@@ -139,48 +161,17 @@ def extract_pages(
         runner = DeadlineRunner(row_timeout) if row_timeout else None
         try:
             for pdf in batches:
-                urls, texts, links_col, titles = [], [], [], []
-                figs_col, nblocks, errs = [], [], []
-                for url, raw in zip(pdf["url"], pdf["html"]):  # noqa: B905
-                    urls.append(url)
-                    try:
-                        if raw is None:
-                            raise ValueError("null html")
-                        if runner is not None:
-                            out, err = runner.run(extract_fn, bytes(raw))
-                            if err is not None:
-                                # err is already "Type: msg" (or "Timeout")
-                                # — carry it verbatim so the error column
-                                # matches the in-process path exactly
-                                raise _RowError(err)
-                            text, links, title, figures, nb = out
-                        else:
-                            text, links, title, figures, nb = extract_fn(bytes(raw))
-                        texts.append(text)
-                        links_col.append(links)
-                        titles.append(title)
-                        figs_col.append(figures)
-                        nblocks.append(nb)
-                        errs.append(None)
-                    except Exception as exc:  # error is data, never a task failure
-                        texts.append(None)
-                        links_col.append(None)
-                        titles.append(None)
-                        figs_col.append(None)
-                        nblocks.append(None)
-                        msg = (
-                            str(exc)
-                            if isinstance(exc, _RowError)
-                            else f"{type(exc).__name__}: {exc}"
-                        )
-                        errs.append(msg)
+                out = [extract_row(raw, extract_fn, runner) for raw in pdf["html"]]
+                texts, links, titles, figures, nblocks, errs = (
+                    list(zip(*out)) or [()] * 6
+                )
                 yield pd.DataFrame(
                     {
-                        "url": urls,
+                        "url": pdf["url"],
                         "text": texts,
-                        "links": links_col,
+                        "links": links,
                         "title": titles,
-                        "figures": figs_col,
+                        "figures": figures,
                         "n_blocks": pd.array(nblocks, dtype="Int32"),
                         "lang": pdf["lang"] if "lang" in pdf else None,
                         "error": errs,

@@ -189,6 +189,51 @@ def extract_relations(text: str) -> list[tuple]:
     return out
 
 
+def doc_triples(
+    url: str,
+    text: str | None,
+    links=None,
+    figures=None,
+    relation_fn=extract_relations,
+    runner=None,
+) -> list[tuple]:
+    """One document's TRIPLES rows (tuples in schema column order), in
+    document order: the relation rows of `relation_fn` with the
+    ``__URL__`` subject replaced by `url`, then a ``cites`` row per link
+    and a ``hasFigure`` row per figure caption; exact duplicates on
+    (url, subj, pred, obj) collapse to their first occurrence. The batch
+    stage (:func:`extract_triples`) and the per-document service call
+    this same function.
+
+    Under a `runner` (functions/deadline.DeadlineRunner) a relation_fn
+    that times out or raises yields ONE sentinel row
+    (pred='__error__', obj_type='ERR', obj=the error string) instead.
+    """
+    if runner is not None:
+        rels, err = runner.run(relation_fn, text or "")
+        if err is not None:
+            return [(url, url, "__error__", err, "DOC", "ERR", None, None, 0.0)]
+    else:
+        rels = relation_fn(text or "")
+    rows = [
+        (url, url if s == "__URL__" else s, p, o, st, ot, a, b, conf)
+        for (s, p, o, st, ot, a, b, conf) in rels
+    ]
+    # per-doc figure entities (reference: figures2.py emits figure+caption
+    # records per document); links/figures may be numpy arrays, so test
+    # for None rather than truth
+    for pred, objs, obj_type in (("cites", links, "DOC"), ("hasFigure", figures, "TERM")):
+        if objs is not None:
+            rows.extend((url, url, pred, o, "DOC", obj_type, None, None, 1.0) for o in objs)
+    seen: set[tuple] = set()
+    out = []
+    for r in rows:
+        if r[1:4] not in seen:
+            seen.add(r[1:4])
+            out.append(r)
+    return out
+
+
 def extract_triples(
     extracted: DataFrame,
     lang_gate: str | None = "en",
@@ -244,46 +289,13 @@ def extract_triples(
 
     def _run_batches(batches, runner) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: list[dict] = []
+            rows: list[tuple] = []
             figs = pdf["figures"] if "figures" in pdf else [None] * len(pdf)
             for url, text, links, figures in zip(
                 pdf["url"], pdf["text"], pdf["links"], figs
             ):
                 try:
-                    if runner is not None:
-                        rels, err = runner.run(relation_fn, text or "")
-                        if err is not None:
-                            rows.append({
-                                "url": url, "subj": url, "pred": "__error__",
-                                "obj": err, "subj_type": "DOC",
-                                "obj_type": "ERR", "span_start": None,
-                                "span_end": None, "conf": 0.0,
-                            })
-                            continue
-                    else:
-                        rels = relation_fn(text or "")
-                    for (s, p, o, st, ot, a, b, conf) in rels:
-                        rows.append({
-                            "url": url, "subj": url if s == "__URL__" else s,
-                            "pred": p, "obj": o, "subj_type": st, "obj_type": ot,
-                            "span_start": a, "span_end": b, "conf": conf,
-                        })
-                    if links is not None:
-                        for href in links:
-                            rows.append({
-                                "url": url, "subj": url, "pred": "cites",
-                                "obj": href, "subj_type": "DOC", "obj_type": "DOC",
-                                "span_start": None, "span_end": None, "conf": 1.0,
-                            })
-                    if figures is not None:
-                        # per-doc figure entities (reference: figures2.py
-                        # emits figure+caption records per document)
-                        for cap in figures:
-                            rows.append({
-                                "url": url, "subj": url, "pred": "hasFigure",
-                                "obj": cap, "subj_type": "DOC", "obj_type": "TERM",
-                                "span_start": None, "span_end": None, "conf": 1.0,
-                            })
+                    rows.extend(doc_triples(url, text, links, figures, relation_fn, runner))
                 except Exception:
                     # row-level containment; a malformed page yields no triples
                     continue
@@ -307,10 +319,7 @@ def _extract_triples_fast(src: DataFrame) -> DataFrame:
         for pdf in batches:
             rows: list[tuple] = []
             for url, text in zip(pdf["url"], pdf["text"]):  # noqa: B905
-                for (s, p, o, st, ot, a, b, conf) in extract_relations(text or ""):
-                    rows.append(
-                        (url, url if s == "__URL__" else s, p, o, st, ot, a, b, conf)
-                    )
+                rows.extend(doc_triples(url, text))
             yield pd.DataFrame(rows, columns=cols)
 
     rel = src.select("url", "text").mapInPandas(run_rel, schema=schemas.TRIPLES)

@@ -182,11 +182,14 @@ def _write_stage(
          metrics_json)
     )
     _append_manifest(out_dir, records)
-    if int(totals["rows_out"] or 0) == 0:
+    if int(totals["rows_out"] or 0) == 0 and sum(_per_partition_counts(path)) == 0:
         # a zero-row stage under dynamic partition overwrite writes no
         # parquet files (first incremental batch with e.g. no triples),
         # so a read-back can't infer a schema — return an empty frame
-        # with the stage's own schema instead of failing the run
+        # with the stage's own schema instead of failing the run. Only
+        # when the DIRECTORY holds no rows (footer counts): a zero-row
+        # append or dynamic overwrite leaves the accumulated table in
+        # place, and it must be read back whole
         return spark.createDataFrame([], df.schema)
     # read back with the KNOWN schema (round 6, VERDICT r5 #6): with an
     # inferred schema the reader additionally opens parquet FOOTERS at

@@ -4,40 +4,74 @@ The reference's WSGI service serves per-document verbs — GET
 ``/extractor/<id>/(header|citations|text|file)``, POST upload (5 MB
 cap), DELETE — re-extracting from a temp-dir file on every GET
 (src/service.py:43-85, 110-150). The Spark-first analog serves the
-same verbs over the ENGINE's bucket-partitioned document store:
+same verbs over the ENGINE's bucket-partitioned document store, and
+every per-document verb runs in the driver process with NO Spark job
+(a one-row Spark job costs hundreds of milliseconds of scheduling and
+JVM<->Python round trips; the point path costs milliseconds):
 
-* point lookups compute the url-hash bucket DRIVER-SIDE (the pure-
+* point lookups compute the url-hash bucket driver-side (the pure-
   python XXH64 that is parity-pinned against Spark's ``xxhash64``,
-  functions/xxh64.py) and read exactly ONE hive bucket directory —
-  partition pruning by construction, so a GET touches 1/N of the
-  table's files no matter how big the store grows;
-* header/citations/text run the SAME Arrow-batched operator stages as
-  the batch pipeline (operators/extract.py, operators/triples.py) on
-  the one-row DataFrame — serving and batch can never drift;
-* upload/delete are the MERGE/DELETE sinks (sinks.py), copy-on-write
-  over only the affected bucket, with the reference's 5 MB upload cap
-  enforced as a rejected request rather than a cgi.maxlen crash;
+  functions/xxh64.py) and read exactly ONE hive bucket directory with
+  pyarrow, filtered on url (sinks.lookup) — partition pruning by
+  construction, so a GET touches 1/N of the table's files no matter
+  how big the store grows;
+* header/citations/text call the SAME pure per-row kernels the batch
+  Arrow stages call (extract.extract_row, triples.doc_triples) —
+  serving and batch share one implementation and cannot drift (pinned
+  by tests/test_service.py against the Spark operator chain);
+* upload/delete are the point MERGE/DELETE sinks (sinks.upsert_rows,
+  sinks.delete_keys): copy-on-write of only the affected bucket with
+  pyarrow, through the same temp-dir-then-rename swap as the bulk
+  DataFrame sinks, with the reference's 5 MB upload cap enforced as a
+  rejected request rather than a cgi.maxlen crash;
 * xml/json rendering mirrors the reference's ``output=xml|json`` param
   (stdlib only — the reference shells out to xmltodict).
 
+Only :meth:`DocService.init_from`, the bulk load, is a Spark job.
+
 ``serve()`` wraps the service in a stdlib ``http.server`` for live
-parity demos; in production the driver process owning the SparkSession
-would sit behind a real WSGI front exactly like the reference does.
+parity demos. It is single-threaded (``HTTPServer``, not
+``ThreadingHTTPServer``): requests run one at a time, so a read never
+races the two renames of a bucket swap. In production the driver
+process would sit behind a real WSGI front exactly like the reference
+does, with writes serialized against reads of the same bucket.
 """
 
 from __future__ import annotations
 
+import datetime
+import hashlib
 import json
-import os
 from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pdfmef_spark import sinks
-from pdfmef_spark.functions.xxh64 import xxh64_signed
+from pdfmef_spark.operators import extract, triples
 
 MAX_UPLOAD_BYTES = 5 * 1024 * 1024  # the reference's cgi.maxlen cap
 HEADER_PREDS = ("hasTitle", "hasAuthor", "hasKeyword", "affiliatedWith", "hasAbstract")
+_SINGLE_VALUED = ("hasTitle", "hasAbstract")
+
+
+def header_of(url: str, rows) -> dict:
+    """Title/authors/keywords/affiliations/abstract of one document from
+    its TRIPLES rows in document order (tuples or Rows in schema column
+    order). A single-valued field keeps its FIRST value in document
+    order; multi-valued fields are sorted."""
+    out: dict = {"url": url}
+    for r in rows:
+        pred, obj = r[2], r[3]
+        if pred in _SINGLE_VALUED:
+            out.setdefault(pred, obj)
+        elif pred in HEADER_PREDS:
+            out.setdefault(pred, []).append(obj)
+    return {k: sorted(v) if isinstance(v, list) else v for k, v in out.items()}
+
+
+def citations_of(rows) -> list[str]:
+    """Sorted distinct ``cites`` targets of one document's TRIPLES rows."""
+    return sorted({r[3] for r in rows if r[2] == "cites"})
 
 
 class DocService:
@@ -60,76 +94,54 @@ class DocService:
         )
 
     def _bucket(self, url: str) -> int:
-        # python % already yields pmod semantics for positive modulus
-        return xxh64_signed(url.encode("utf-8")) % self.n_buckets
+        return sinks.bucket_of_key(url, self.n_buckets)
 
-    def _doc(self, url: str) -> DataFrame | None:
-        """One-bucket point lookup: lists and reads ONLY bucket=<k>."""
-        part = f"{self.table_dir}/bucket={self._bucket(url)}"
-        if not os.path.isdir(part):
+    def _html(self, url: str) -> tuple[bool, bytes | None]:
+        """(found, stored html) from a one-bucket point lookup."""
+        t = sinks.lookup(self.table_dir, "url", url, self.n_buckets, columns=["html"])
+        if t is None or t.num_rows == 0:
+            return False, None
+        return True, t["html"][0].as_py()
+
+    def _extracted(self, url: str) -> tuple | None:
+        """extract.extract_row of the stored page, None if absent."""
+        found, html = self._html(url)
+        return extract.extract_row(html) if found else None
+
+    def _triples(self, url: str) -> list[tuple] | None:
+        ex = self._extracted(url)
+        if ex is None:
             return None
-        df = self.spark.read.parquet(part).filter(F.col("url") == url)
-        return df if df.limit(1).count() else None
+        text, links, _title, figures, _n_blocks, _error = ex
+        # no lang gate here: a point GET is an explicit request for THIS
+        # document (the batch gate remains in the pipeline path)
+        return triples.doc_triples(url, text, links, figures)
 
     # -- GET verbs (reference Extractor.GET methods) ------------------------
 
     def text(self, url: str) -> str | None:
-        """Extracted plain text (reference `method == 'text'`)."""
-        from pdfmef_spark.operators import extract
-
-        doc = self._doc(url)
-        if doc is None:
+        """Extracted plain text (reference `method == 'text'`); None for a
+        missing document or one whose extraction recorded an error."""
+        ex = self._extracted(url)
+        if ex is None or ex[-1] is not None:
             return None
-        row = extract.extract_pages(doc).select("text", "error").first()
-        if row is None or row["error"] is not None:
-            return None
-        return row["text"]
-
-    def _triples(self, url: str) -> list | None:
-        from pdfmef_spark.operators import extract, triples as triples_op
-
-        doc = self._doc(url)
-        if doc is None:
-            return None
-        # no lang gate here: a point GET is an explicit request for THIS
-        # document (the batch gate remains in the pipeline path)
-        return triples_op.extract_triples(
-            extract.extract_pages(doc), lang_gate=None
-        ).collect()
+        return ex[0]
 
     def header(self, url: str) -> dict | None:
         """Title/authors/keywords/affiliations/abstract as a dict
         (reference `method == 'header'` -> TEItoHeader fields)."""
         rows = self._triples(url)
-        if rows is None:
-            return None
-        out: dict = {"url": url}
-        for r in rows:
-            if r.pred not in HEADER_PREDS:
-                continue
-            key = r.pred
-            if key in ("hasTitle", "hasAbstract"):
-                out[key] = r.obj
-            else:
-                out.setdefault(key, []).append(r.obj)
-        for k in out:
-            if isinstance(out[k], list):
-                out[k] = sorted(out[k])
-        return out
+        return None if rows is None else header_of(url, rows)
 
     def citations(self, url: str) -> list[str] | None:
         """Outgoing cites targets (reference `method == 'citations'`)."""
         rows = self._triples(url)
-        if rows is None:
-            return None
-        return sorted({r.obj for r in rows if r.pred == "cites"})
+        return None if rows is None else citations_of(rows)
 
     def raw(self, url: str) -> bytes | None:
-        """The stored source bytes (reference `method == 'file'`)."""
-        doc = self._doc(url)
-        if doc is None:
-            return None
-        return bytes(doc.select("html").first()["html"])
+        """The stored source bytes (reference `method == 'file'`); None
+        for a missing document or one stored without bytes."""
+        return self._html(url)[1]
 
     # -- mutation verbs -----------------------------------------------------
 
@@ -137,47 +149,26 @@ class DocService:
         """POST analog: MERGE the document into its bucket (one-match
         contract; oversized payloads rejected like the reference's cap).
         The row takes the same PAGES shape the batch/stream ingest uses
-        (streaming/ingest.py) — one document schema everywhere."""
-        import datetime as _dt
-        import hashlib
-
-        from pyspark.sql import types as T
-
+        (streaming/ingest.py) — one document schema everywhere — cast to
+        the store's own schema (sinks.upsert_rows)."""
         raw = html.encode("utf-8") if isinstance(html, str) else bytes(html)
         if len(raw) > MAX_UPLOAD_BYTES:
             raise ValueError(
                 f"upload exceeds {MAX_UPLOAD_BYTES} bytes (reference 5 MB cap)"
             )
-        vals = {
+        row = {
             "url": url,
-            "warc_ts": warc_ts or _dt.datetime(1970, 1, 1),
+            "warc_ts": warc_ts or datetime.datetime(1970, 1, 1),
             "html": raw,
             "text": "",
             "lang": "en",
             "sha256_text": hashlib.sha256(b"").hexdigest(),
         }
-        # the updates row takes the STORE's schema (minus the hive bucket
-        # column), nullable for any columns this verb doesn't populate —
-        # robust to stores that carry extra per-document columns
-        data_fields = [
-            T.StructField(f.name, f.dataType, True)
-            for f in self.spark.read.parquet(self.table_dir).schema
-            if f.name != "bucket"
-        ]
-        updates = self.spark.createDataFrame(
-            [tuple(vals.get(f.name) for f in data_fields)],
-            T.StructType(data_fields),
-        )
-        return sinks.upsert_by_key(
-            self.spark, self.table_dir, "url", updates, n_buckets=self.n_buckets
-        )
+        return sinks.upsert_rows(self.table_dir, "url", [row], self.n_buckets)
 
     def delete(self, url: str) -> dict:
         """DELETE analog: copy-on-write delete of one url's bucket."""
-        doomed = self.spark.createDataFrame([(url,)], "url string")
-        return sinks.delete_by_key(
-            self.spark, self.table_dir, "url", doomed, n_buckets=self.n_buckets
-        )
+        return sinks.delete_keys(self.table_dir, "url", [url], self.n_buckets)
 
 
 # -- output rendering (reference output=xml|json param) ---------------------

@@ -19,20 +19,59 @@ then swapped in by rename (crash between the two renames leaves the old
 data recoverable in a hidden dir; Iceberg's metadata commit makes the
 same operation atomic, see _swap_in). Untouched partition directories
 are never listed, read, or rewritten (asserted by test).
+
+Two write paths share that one swap (:func:`_swap_in`, which takes the
+writer as a callable):
+
+* the BULK path (:func:`delete_by_key`, :func:`upsert_by_key`) takes
+  DataFrames and runs Spark jobs — the right tool for many keys;
+* the POINT path (:func:`lookup`, :func:`upsert_rows`,
+  :func:`delete_keys`) takes a handful of keys and runs in the driver
+  process with pyarrow, no Spark job: the key's bucket is computed with
+  the pure-python XXH64 (:func:`bucket_of_key`), and only that bucket
+  directory is read and rewritten, so a per-document request costs
+  milliseconds instead of several Spark job round trips. The point path
+  writes files Spark reads back as the same table: the rows take the
+  store's own schema with its schema metadata (Spark's row-schema key
+  rides along), and timestamps are written as INT96 like Spark's own
+  parquet output — pyarrow's default nanosecond timestamps make every
+  full Spark read of the table fail with a column type mismatch.
+  Results and replies equal the bulk path's (pinned by
+  tests/test_sinks.py, which runs the bulk path as the reference).
+
+Neither path locks: a reader that lists a bucket between the two
+renames of a swap finds it missing. Callers serialize writers against
+readers (service.serve is single-threaded for this reason).
 """
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
 import uuid
+from collections import Counter, defaultdict
+from typing import Callable
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from pdfmef_spark.functions.xxh64 import xxh64_signed
 
 
 def bucket_of(key, n_buckets: int):
     """The layout's bucketing function (matches sources/store.py)."""
     return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
+
+
+def bucket_of_key(key: str, n_buckets: int) -> int:
+    """:func:`bucket_of` for one string key, computed driver-side (the
+    pure-python XXH64 is parity-pinned against Spark's ``xxhash64``;
+    python ``%`` already has pmod semantics for a positive modulus)."""
+    return xxh64_signed(key.encode("utf-8")) % n_buckets
 
 
 def _part_dirs(table_dir: str, bucket_col: str, n_buckets: int | None) -> list[str]:
@@ -82,7 +121,7 @@ def delete_by_key(
             if doomed == 0:
                 continue
             remaining = sub.join(F.broadcast(keys), key_col, "left_anti")
-            _swap_in(spark, src, remaining)
+            _swap_in(src, remaining.write.parquet)
             rows_deleted += doomed
             rewritten += 1
         return {
@@ -97,25 +136,31 @@ def delete_by_key(
     if doomed == 0:
         return {"rows_deleted": 0, "partitions_rewritten": 0, "partitions_total": 1}
     remaining = tbl.join(F.broadcast(keys), key_col, "left_anti")
-    _swap_in(spark, table_dir, remaining)
+    _swap_in(table_dir, remaining.write.parquet)
     return {"rows_deleted": doomed, "partitions_rewritten": 1, "partitions_total": 1}
 
 
-def _swap_in(spark: SparkSession, target_dir: str, df: DataFrame) -> None:
-    """Write df to a hidden temp sibling, then swap it into place with two
-    renames (never read-and-overwrite the same path in one job).
+def _swap_in(target_dir: str, write: Callable[[str], None]) -> None:
+    """Run ``write(tmp)`` into a hidden temp sibling of target_dir, then
+    swap it into place with two renames (never read-and-overwrite the
+    same path in one job). A target that does not exist yet (a brand-new
+    bucket) is a single rename.
 
-    Temp/old dirs are dot-prefixed BASENAMES so Spark partition discovery
-    and the `bucket=` listings in this module never see them. The swap is
-    two renames, not one atomic exchange: a crash between them leaves the
-    data recoverable in the hidden `.<name>.old-*` dir rather than
-    committed — on an Iceberg catalog this whole operation is a single
-    atomic metadata commit, which is what a production deployment should
-    use; this is the explicit plain-parquet fallback.
+    Temp/old dirs are dot-prefixed BASENAMES so Spark partition discovery,
+    pyarrow dataset discovery and the `bucket=` listings in this module
+    never see them. The swap is two renames, not one atomic exchange: a
+    crash between them leaves the data recoverable in the hidden
+    `.<name>.old-*` dir rather than committed — on an Iceberg catalog
+    this whole operation is a single atomic metadata commit, which is
+    what a production deployment should use; this is the explicit
+    plain-parquet fallback.
     """
     parent, base = os.path.dirname(target_dir), os.path.basename(target_dir)
     tmp = os.path.join(parent, f".{base}.tmp-{uuid.uuid4().hex[:8]}")
-    df.write.mode("overwrite").parquet(tmp)
+    write(tmp)
+    if not os.path.isdir(target_dir):
+        os.rename(tmp, target_dir)
+        return
     old = os.path.join(parent, f".{base}.old-{uuid.uuid4().hex[:8]}")
     os.rename(target_dir, old)
     os.rename(tmp, target_dir)
@@ -172,11 +217,10 @@ def upsert_by_key(
                 merged = sub.join(
                     F.broadcast(u.select(key_col)), key_col, "left_anti"
                 ).unionByName(u)
-                _swap_in(spark, src, merged)
+                _swap_in(src, merged.write.parquet)
             else:  # brand-new bucket: all inserts
                 matched = 0
-                os.makedirs(src, exist_ok=True)
-                _swap_in(spark, src, u)
+                _swap_in(src, u.write.parquet)
             n_up = u.count()
             rows_updated += matched
             rows_inserted += n_up - matched
@@ -193,10 +237,164 @@ def upsert_by_key(
     merged = tbl.join(
         F.broadcast(updates.select(key_col)), key_col, "left_anti"
     ).unionByName(updates.select(*tbl.columns))
-    _swap_in(spark, table_dir, merged)
+    _swap_in(table_dir, merged.write.parquet)
     return {
         "rows_updated": matched,
         "rows_inserted": updates.count() - matched,
         "partitions_rewritten": 1,
         "partitions_total": 1,
+    }
+
+
+# -- point path: a few keys, driver-side pyarrow, no Spark job ---------------
+
+def _bucket_dirs(table_dir: str, bucket_col: str, n_buckets: int) -> list[str]:
+    """The point path's layout check: it only serves hive-bucketed tables
+    (a flat table would get bucket dirs mixed into its root)."""
+    dirs = _part_dirs(table_dir, bucket_col, n_buckets)
+    if not dirs:
+        raise ValueError(
+            f"{table_dir} has no {bucket_col}=N partitions; the point path "
+            "serves hive-bucketed tables only (use the bulk DataFrame path)"
+        )
+    return dirs
+
+
+def _dataset(part_dir: str) -> pads.Dataset:
+    # discovery skips dot/underscore files (Spark's .crc and _SUCCESS)
+    return pads.dataset(part_dir, format="parquet")
+
+
+def _write_part(table: pa.Table) -> Callable[[str], None]:
+    """Writer for _swap_in: one parquet file Spark reads back as part of
+    the table (INT96 timestamps, as Spark writes them; the table's schema
+    metadata, which carries Spark's row schema, rides along)."""
+
+    def write(path: str) -> None:
+        os.makedirs(path)
+        pq.write_table(
+            table,
+            os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"),
+            compression="zstd",
+            use_deprecated_int96_timestamps=True,
+        )
+
+    return write
+
+
+def _key_mask(table: pa.Table, key_col: str, keys: list) -> pa.ChunkedArray:
+    # a null key never matches (is_in yields false for it), like the
+    # bulk path's joins
+    return pc.is_in(table[key_col], value_set=pa.array(keys, table.schema.field(key_col).type))
+
+
+def lookup(
+    table_dir: str,
+    key_col: str,
+    key: str,
+    n_buckets: int,
+    columns: list[str] | None = None,
+    bucket_col: str = "bucket",
+) -> pa.Table | None:
+    """Rows whose `key_col` equals `key`, read from the key's bucket
+    directory ONLY (nothing else is listed or opened). None when that
+    bucket does not exist."""
+    part = os.path.join(table_dir, f"{bucket_col}={bucket_of_key(key, n_buckets)}")
+    if not os.path.isdir(part):
+        return None
+    return _dataset(part).to_table(columns=columns, filter=pc.field(key_col) == key)
+
+
+def _as_utc(v):
+    # pyspark turns a naive datetime into an instant in the local time
+    # zone; pyarrow would store its wall clock as UTC — match pyspark
+    if isinstance(v, datetime.datetime) and v.tzinfo is None:
+        return v.astimezone(datetime.timezone.utc)
+    return v
+
+
+def upsert_rows(
+    table_dir: str,
+    key_col: str,
+    rows: list[dict],
+    n_buckets: int,
+    bucket_col: str = "bucket",
+) -> dict:
+    """Point MERGE: :func:`upsert_by_key` for a few rows given as
+    ``{column: value}`` dicts, run driver-side with pyarrow.
+
+    Each row takes the STORE's schema — every field nullable, the
+    store's schema metadata kept — so columns a row omits are null and
+    stores with extra per-document columns work unchanged. Same
+    one-match contract (a duplicate key in `rows` raises before anything
+    is written), same reply, same copy-on-write of only the affected
+    buckets."""
+    dup = next((k for k, n in Counter(r[key_col] for r in rows).items() if n > 1), None)
+    if dup is not None:
+        raise ValueError(
+            f"upsert_rows: duplicate key {dup!r} in rows — MERGE requires at "
+            "most one source row per target key"
+        )
+    part_dirs = _bucket_dirs(table_dir, bucket_col, n_buckets)
+    by_bucket: dict[int, list[dict]] = defaultdict(list)
+    for r in rows:
+        by_bucket[bucket_of_key(r[key_col], n_buckets)].append(r)
+    store = _dataset(os.path.join(table_dir, part_dirs[0])).schema
+    schema = pa.schema([f.with_nullable(True) for f in store], metadata=store.metadata)
+    rows_updated = rows_inserted = 0
+    for b in sorted(by_bucket):
+        part = os.path.join(table_dir, f"{bucket_col}={b}")
+        new = pa.Table.from_pylist(
+            [{f.name: _as_utc(r.get(f.name)) for f in schema} for r in by_bucket[b]],
+            schema=schema,
+        )
+        if os.path.isdir(part):
+            old = _dataset(part).to_table().cast(schema)
+            hit = _key_mask(old, key_col, new[key_col].to_pylist())
+            matched = pc.sum(hit).as_py() or 0
+            merged = pa.concat_tables([old.filter(pc.invert(hit)), new])
+        else:  # brand-new bucket: all inserts
+            matched, merged = 0, new
+        _swap_in(part, _write_part(merged))
+        rows_updated += matched
+        rows_inserted += new.num_rows - matched
+    return {
+        "rows_updated": rows_updated,
+        "rows_inserted": rows_inserted,
+        "partitions_rewritten": len(by_bucket),
+        "partitions_total": max(len(part_dirs), len(by_bucket)),
+    }
+
+
+def delete_keys(
+    table_dir: str,
+    key_col: str,
+    keys: list,
+    n_buckets: int,
+    bucket_col: str = "bucket",
+) -> dict:
+    """Point DELETE: :func:`delete_by_key` for a few keys, run
+    driver-side with pyarrow. Same reply; idempotent (a bucket holding
+    none of the keys is not rewritten)."""
+    part_dirs = _bucket_dirs(table_dir, bucket_col, n_buckets)
+    by_bucket: dict[int, set] = defaultdict(set)
+    for k in keys:
+        by_bucket[bucket_of_key(k, n_buckets)].add(k)
+    rows_deleted = rewritten = 0
+    for b in sorted(by_bucket):
+        part = os.path.join(table_dir, f"{bucket_col}={b}")
+        if not os.path.isdir(part):
+            continue
+        old = _dataset(part).to_table()
+        hit = _key_mask(old, key_col, sorted(by_bucket[b]))
+        doomed = pc.sum(hit).as_py() or 0
+        if doomed == 0:
+            continue
+        _swap_in(part, _write_part(old.filter(pc.invert(hit))))
+        rows_deleted += doomed
+        rewritten += 1
+    return {
+        "rows_deleted": rows_deleted,
+        "partitions_rewritten": rewritten,
+        "partitions_total": len(part_dirs),
     }

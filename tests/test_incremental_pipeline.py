@@ -376,3 +376,24 @@ def test_delta_tick_rewrites_only_affected_graph_buckets(
             assert snap[st][p] == after[p], p
         # the batch's append partition landed
         assert set(after) != set(snap[st]), st
+
+
+def test_delta_tick_with_no_new_norms_matches_full(spark, smoke_pages, tmp_path):
+    """A tick whose only page is a clone of a stored doc under a new url
+    brings no new surface norms, so the delta assignments append writes
+    zero rows. The accumulated assignments table must still be read back
+    whole: the graph equals a from-scratch run over the same pages (a
+    zero-row append used to return an EMPTY assignments frame, so the
+    tick dropped every entity-resolved edge and left n_mentions stale)."""
+    b = F.pmod(F.xxhash64("url"), F.lit(3))
+    first = smoke_pages.filter(b == 0)
+    src = first.orderBy("url").limit(1)
+    clone = src.withColumn("url", F.concat(F.col("url"), F.lit("?clone=1")))
+    pages = first.unionByName(clone)
+    inc_dir = str(tmp_path / "inc")
+    P.run_pipeline_incremental(spark, first, inc_dir)
+    r2 = P.run_pipeline_incremental(spark, pages, inc_dir)
+    assert _batch_rows(spark, inc_dir, "extracted", 1) == 1
+    assert r2.results["edges"].metrics["tail_mode"] == "delta"
+    run_full = P.run_pipeline(spark, pages, str(tmp_path / "full"))
+    assert _graph_sets(r2) == _graph_sets(run_full)

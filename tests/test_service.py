@@ -27,13 +27,33 @@ def _some_url(svc):
     return svc.spark.read.parquet(svc.table_dir).select("url").first()["url"]
 
 
-def test_point_lookup_reads_one_bucket(svc):
-    """The GET path lists exactly one bucket=K directory (pruning by
-    construction, not by Catalyst)."""
+def test_point_lookup_reads_one_bucket(svc, monkeypatch):
+    """Every GET verb reads only the url's bucket=K directory (pruning by
+    construction, not by a planner): each pyarrow dataset a GET builds
+    covers files under bucket=K only, and no other file can be opened
+    through it."""
+    import os
+
+    import pyarrow.dataset as pads
+
+    from pdfmef_spark import sinks
+
+    built = []
+    real = pads.dataset
+
+    def recording(source, *a, **kw):
+        ds = real(source, *a, **kw)
+        built.append(ds)
+        return ds
+
+    monkeypatch.setattr(sinks.pads, "dataset", recording)
     url = _some_url(svc)
-    doc = svc._doc(url)
-    files = {r[0] for r in doc.select(F.input_file_name()).collect()}
-    assert files and all(f"bucket={svc._bucket(url)}" in f for f in files)
+    part = os.path.abspath(f"{svc.table_dir}/bucket={svc._bucket(url)}") + os.sep
+    for verb in (svc.raw, svc.text, svc.header, svc.citations):
+        built.clear()
+        assert verb(url) is not None
+        files = [os.path.abspath(f) for ds in built for f in ds.files]
+        assert files and all(f.startswith(part) for f in files), (verb, files)
 
 
 def test_text_and_header_and_citations(svc):
@@ -45,6 +65,89 @@ def test_text_and_header_and_citations(svc):
     cites = svc.citations(url)
     assert isinstance(cites, list)
     assert svc.raw(url).startswith(b"<")
+
+
+def _spark_chain(svc, urls):
+    """Reference answers from the Spark operator chain over the same
+    stored pages: {url: (text, header, citations)}."""
+    from pdfmef_spark.operators import extract, triples
+    from pdfmef_spark.service import citations_of, header_of
+
+    pages = svc.spark.read.parquet(svc.table_dir).filter(F.col("url").isin(urls))
+    extracted = extract.extract_pages(pages).persist()
+    try:
+        ex = {r.url: r for r in extracted.select("url", "text", "error").collect()}
+        trip: dict = {u: [] for u in ex}
+        for r in triples.extract_triples(extracted, lang_gate=None).collect():
+            trip[r.url].append(r)
+    finally:
+        extracted.unpersist()
+    out = {}
+    for u, rows in trip.items():
+        # document order: relation rows by subject span; cites/hasFigure
+        # rows carry no span and no header field
+        rows.sort(key=lambda r: (r.span_start is None, r.span_start or 0))
+        text = ex[u].text if ex[u].error is None else None
+        out[u] = (text, header_of(u, rows), citations_of(rows))
+    return out
+
+
+def test_get_verbs_match_spark_operator_chain(svc):
+    """text/header/citations of every stored document (and of an error
+    row with null html) equal the batch Spark chain: extract_pages +
+    extract_triples(lang_gate=None), assembled by header_of/citations_of."""
+    from pdfmef_spark import sinks
+
+    err_url = "https://error.example/null-html"
+    sinks.upsert_rows(svc.table_dir, "url", [{"url": err_url, "html": None}], svc.n_buckets)
+    try:
+        urls = [r.url for r in svc.spark.read.parquet(svc.table_dir).select("url").collect()]
+        assert err_url in urls and len(urls) > 200
+        want = _spark_chain(svc, urls)
+        for u in urls:
+            assert (svc.text(u), svc.header(u), svc.citations(u)) == want[u], u
+        assert want[err_url] == (None, {"url": err_url}, [])
+    finally:
+        svc.delete(err_url)
+
+
+def test_header_takes_first_abstract_in_document_order(svc):
+    url = "https://uploaded.example/two-abstracts"
+    html = (
+        "<html><body><main><h1>Two Abstracts</h1>"
+        "<p>Abstract: the first body.</p><p>Abstract: the second body.</p>"
+        "</main></body></html>"
+    )
+    svc.upload(url, html)
+    try:
+        for _ in range(3):
+            assert svc.header(url)["hasAbstract"] == "the first body."
+    finally:
+        svc.delete(url)
+
+
+def test_store_stays_spark_readable_after_point_writes(svc):
+    """Point uploads/deletes rewrite buckets with pyarrow; a full Spark
+    read of the table must still decode every column of every file
+    (pyarrow's default nanosecond timestamps break it)."""
+    import datetime
+
+    ts = datetime.datetime(2024, 5, 6, 7, 8, 9)
+    urls = [f"https://uploaded.example/readable-{i}" for i in range(12)]
+    try:
+        for i, u in enumerate(urls):
+            svc.upload(u, f"<html><body><h1>Doc {i}</h1></body></html>", warc_ts=ts)
+        for u in urls[::3]:
+            svc.delete(u)
+        rows = {r.url: r for r in svc.spark.read.parquet(svc.table_dir).collect()}
+        assert len(rows) == 200 + len(urls) - len(urls[::3])
+        r = rows[urls[1]]
+        assert r.warc_ts == ts and r.html.startswith(b"<html>") and r.lang == "en"
+        assert r.bucket == svc._bucket(urls[1])
+        assert not set(urls[::3]) & set(rows)
+    finally:
+        for u in urls:
+            svc.delete(u)
 
 
 def test_missing_doc_is_none_not_error(svc):

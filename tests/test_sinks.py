@@ -169,6 +169,97 @@ def test_random_delete_upsert_sequence_matches_model(spark, tmp_path):
     assert got == model
 
 
+def test_point_path_matches_bulk_path(spark, tmp_path):
+    """The driver-side point sinks (upsert_rows/delete_keys, pyarrow, no
+    Spark job) against the bulk DataFrame sinks as the reference: the
+    same seeded op sequence on two copies of a table gives the same
+    replies and the same rows, and a point op rewrites only the buckets
+    of its keys."""
+    import random
+
+    rng = random.Random(777)
+    model = {f"doc-{i}": i * 7 for i in range(300)}
+    dirs = {}
+    for side in ("point", "bulk"):
+        dirs[side] = str(tmp_path / side)
+        spark.createDataFrame(list(model.items()), "doc_id string, val long").withColumn(
+            "bucket", sinks.bucket_of(F.col("doc_id"), N_BUCKETS)
+        ).write.partitionBy("bucket").parquet(dirs[side])
+
+    universe = [f"doc-{i}" for i in range(400)]  # includes never-inserted keys
+    for step in range(4):
+        ks = rng.sample(universe, rng.randint(1, 5))
+        touched = {sinks.bucket_of_key(k, N_BUCKETS) for k in ks}
+        before = _file_state(dirs["point"])
+        if step % 2:
+            got = sinks.delete_keys(dirs["point"], "doc_id", ks, N_BUCKETS)
+            want = sinks.delete_by_key(
+                spark, dirs["bulk"], "doc_id",
+                spark.createDataFrame([(k,) for k in ks], "doc_id string"),
+                n_buckets=N_BUCKETS,
+            )
+        else:
+            vals = [(k, rng.randint(0, 10**6)) for k in ks]
+            got = sinks.upsert_rows(
+                dirs["point"], "doc_id", [{"doc_id": k, "val": v} for k, v in vals], N_BUCKETS
+            )
+            want = sinks.upsert_by_key(
+                spark, dirs["bulk"], "doc_id",
+                spark.createDataFrame(vals, "doc_id string, val long"),
+                n_buckets=N_BUCKETS,
+            )
+        assert got == want
+        after = _file_state(dirs["point"])
+        for path, mtime in before.items():
+            part = next((s for s in path.split(os.sep) if s.startswith("bucket=")), None)
+            if part and int(part.split("=")[1]) not in touched:
+                assert after.get(path) == mtime, f"untouched partition rewritten: {path}"
+
+    tables = {
+        side: sorted(tuple(r) for r in spark.read.parquet(d).select("doc_id", "val", "bucket").collect())
+        for side, d in dirs.items()
+    }
+    assert tables["point"] == tables["bulk"]
+    # point lookups read back exactly what a Spark scan sees
+    for doc_id, val, _ in tables["point"][:20]:
+        t = sinks.lookup(dirs["point"], "doc_id", doc_id, N_BUCKETS)
+        assert t.to_pylist() == [{"doc_id": doc_id, "val": val}]
+
+
+def test_random_upload_delete_through_service_matches_model(spark, tmp_path):
+    """Seeded random uploads/deletes through DocService (the point path)
+    equal a dict model — per-url GETs and a full Spark read agree."""
+    import random
+
+    from pdfmef_spark.service import DocService
+
+    rng = random.Random(2468)
+    model = {f"https://m.example/{i}": f"<html><body><h1>seed {i}</h1></body></html>".encode()
+             for i in range(40)}
+    svc = DocService(spark, str(tmp_path / "docs"), n_buckets=N_BUCKETS)
+    svc.init_from(spark.createDataFrame(list(model.items()), "url string, html binary"))
+
+    universe = [f"https://m.example/{i}" for i in range(60)]
+    for step in range(40):
+        url = rng.choice(universe)
+        if rng.random() < 0.4:
+            stats = svc.delete(url)
+            assert stats["rows_deleted"] == (url in model)
+            model.pop(url, None)
+        else:
+            html = f"<html><body><h1>v{step}</h1><p>{url}</p></body></html>".encode()
+            stats = svc.upload(url, html)
+            assert (stats["rows_updated"], stats["rows_inserted"]) == (
+                (1, 0) if url in model else (0, 1)
+            )
+            model[url] = html
+
+    for url in universe:
+        assert svc.raw(url) == model.get(url), url
+    got = {r.url: r.html for r in spark.read.parquet(svc.table_dir).collect()}
+    assert got == model
+
+
 def test_upsert_duplicate_update_keys_raise(spark, tmp_path):
     """MERGE one-match contract: duplicate keys in updates error instead
     of silently inserting both rows (ADVICE r02)."""
@@ -180,5 +271,10 @@ def test_upsert_duplicate_update_keys_raise(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="duplicate key"):
         sinks.upsert_by_key(spark, table_dir, "doc_id", dup, n_buckets=N_BUCKETS)
+    with pytest.raises(ValueError, match="duplicate key"):
+        sinks.upsert_rows(
+            table_dir, "doc_id", [{"doc_id": "doc-1", "val": 1}, {"doc_id": "doc-1", "val": 2}],
+            N_BUCKETS,
+        )
     # table untouched by the failed merge
     assert spark.read.parquet(table_dir).count() == 1000

@@ -166,8 +166,9 @@ def _write_stage(
                 out_metrics.update(vals)
             metrics_json = json.dumps(vals, sort_keys=True)
 
+    counts = _per_partition_counts(counts_path or path)
     records = []
-    for pid, n_rows in enumerate(_per_partition_counts(counts_path or path)):
+    for pid, n_rows in enumerate(counts):
         # dense index over sorted file paths: unique even under hive
         # partitioned layouts where task-numbered file names repeat
         # across partition directories
@@ -182,7 +183,9 @@ def _write_stage(
          metrics_json)
     )
     _append_manifest(out_dir, records)
-    if int(totals["rows_out"] or 0) == 0 and sum(_per_partition_counts(path)) == 0:
+    if int(totals["rows_out"] or 0) == 0 and sum(
+        counts if counts_path is None else _per_partition_counts(path)
+    ) == 0:
         # a zero-row stage under dynamic partition overwrite writes no
         # parquet files (first incremental batch with e.g. no triples),
         # so a read-back can't infer a schema — return an empty frame

@@ -19,8 +19,8 @@ JVM<->Python round trips; the point path costs milliseconds):
   Arrow stages call (extract.extract_row, triples.doc_triples) —
   serving and batch share one implementation and cannot drift (pinned
   by tests/test_service.py against the Spark operator chain);
-* upload/delete are the point MERGE/DELETE sinks (sinks.upsert_rows,
-  sinks.delete_keys): copy-on-write of only the affected bucket with
+* upload/delete are the point MERGE/DELETE sinks (sinks.upsert_row,
+  sinks.delete_key): copy-on-write of only the affected bucket with
   pyarrow, through the same temp-dir-then-rename swap as the bulk
   DataFrame sinks, with the reference's 5 MB upload cap enforced as a
   rejected request rather than a cgi.maxlen crash;
@@ -87,9 +87,11 @@ class DocService:
     def init_from(self, pages: DataFrame) -> None:
         """Materialize the serving store (hive layout on the url bucket)."""
         (
-            pages.withColumn("bucket", sinks.bucket_of(F.col("url"), self.n_buckets))
+            pages.withColumn(
+                sinks.BUCKET_COL, sinks.bucket_of(F.col("url"), self.n_buckets)
+            )
             .write.mode("overwrite")
-            .partitionBy("bucket")
+            .partitionBy(sinks.BUCKET_COL)
             .parquet(self.table_dir)
         )
 
@@ -150,7 +152,7 @@ class DocService:
         contract; oversized payloads rejected like the reference's cap).
         The row takes the same PAGES shape the batch/stream ingest uses
         (streaming/ingest.py) — one document schema everywhere — cast to
-        the store's own schema (sinks.upsert_rows)."""
+        the store's own schema (sinks.upsert_row)."""
         raw = html.encode("utf-8") if isinstance(html, str) else bytes(html)
         if len(raw) > MAX_UPLOAD_BYTES:
             raise ValueError(
@@ -164,11 +166,11 @@ class DocService:
             "lang": "en",
             "sha256_text": hashlib.sha256(b"").hexdigest(),
         }
-        return sinks.upsert_rows(self.table_dir, "url", [row], self.n_buckets)
+        return sinks.upsert_row(self.table_dir, "url", row, self.n_buckets)
 
     def delete(self, url: str) -> dict:
         """DELETE analog: copy-on-write delete of one url's bucket."""
-        return sinks.delete_keys(self.table_dir, "url", [url], self.n_buckets)
+        return sinks.delete_key(self.table_dir, "url", url, self.n_buckets)
 
 
 # -- output rendering (reference output=xml|json param) ---------------------

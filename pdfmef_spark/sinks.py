@@ -25,19 +25,23 @@ writer as a callable):
 
 * the BULK path (:func:`delete_by_key`, :func:`upsert_by_key`) takes
   DataFrames and runs Spark jobs — the right tool for many keys;
-* the POINT path (:func:`lookup`, :func:`upsert_rows`,
-  :func:`delete_keys`) takes a handful of keys and runs in the driver
-  process with pyarrow, no Spark job: the key's bucket is computed with
-  the pure-python XXH64 (:func:`bucket_of_key`), and only that bucket
-  directory is read and rewritten, so a per-document request costs
-  milliseconds instead of several Spark job round trips. The point path
-  writes files Spark reads back as the same table: the rows take the
-  store's own schema with its schema metadata (Spark's row-schema key
-  rides along), and timestamps are written as INT96 like Spark's own
-  parquet output — pyarrow's default nanosecond timestamps make every
-  full Spark read of the table fail with a column type mismatch.
-  Results and replies equal the bulk path's (pinned by
-  tests/test_sinks.py, which runs the bulk path as the reference).
+* the POINT path (:func:`lookup`, :func:`upsert_row`,
+  :func:`delete_key`) takes ONE key and runs in the driver process with
+  pyarrow, no Spark job: the key's bucket is computed with the
+  pure-python XXH64 (:func:`bucket_of_key`), and only that bucket
+  directory (``bucket=K``, :data:`BUCKET_COL`) is read and rewritten, so
+  a per-document request costs milliseconds instead of several Spark job
+  round trips. A rewrite streams the bucket's record batches from the
+  scan into one parquet writer, so driver memory per write is about one
+  parquet row group plus a few batches, not the bucket (the bytes
+  rewritten still grow with the bucket). The point path writes files
+  Spark reads back as the same table: rows take the store's own schema
+  with its schema metadata (Spark's row-schema key rides along), and
+  timestamps are written as INT96 like Spark's own parquet output —
+  pyarrow's default nanosecond timestamps make every full Spark read of
+  the table fail with a column type mismatch. Results and replies equal
+  the bulk path's (pinned by tests/test_sinks.py, which runs the bulk
+  path as the reference).
 
 Neither path locks: a reader that lists a bucket between the two
 renames of a swap finds it missing. Callers serialize writers against
@@ -50,7 +54,6 @@ import datetime
 import os
 import shutil
 import uuid
-from collections import Counter, defaultdict
 from typing import Callable
 
 import pyarrow as pa
@@ -246,46 +249,78 @@ def upsert_by_key(
     }
 
 
-# -- point path: a few keys, driver-side pyarrow, no Spark job ---------------
+# -- point path: one key, driver-side pyarrow, no Spark job ------------------
 
-def _bucket_dirs(table_dir: str, bucket_col: str, n_buckets: int) -> list[str]:
+BUCKET_COL = "bucket"  # the point path's hive partition column
+_SCAN_ROWS = 1024  # rows per record batch when a rewrite streams a bucket
+
+
+def _bucket_dirs(table_dir: str, n_buckets: int) -> list[str]:
     """The point path's layout check: it only serves hive-bucketed tables
     (a flat table would get bucket dirs mixed into its root)."""
-    dirs = _part_dirs(table_dir, bucket_col, n_buckets)
+    dirs = _part_dirs(table_dir, BUCKET_COL, n_buckets)
     if not dirs:
         raise ValueError(
-            f"{table_dir} has no {bucket_col}=N partitions; the point path "
+            f"{table_dir} has no {BUCKET_COL}=N partitions; the point path "
             "serves hive-bucketed tables only (use the bulk DataFrame path)"
         )
     return dirs
 
 
-def _dataset(part_dir: str) -> pads.Dataset:
+def _bucket_dir(table_dir: str, key: str, n_buckets: int) -> str:
+    return os.path.join(table_dir, f"{BUCKET_COL}={bucket_of_key(key, n_buckets)}")
+
+
+def _dataset(part_dir: str, schema: pa.Schema | None = None) -> pads.Dataset:
     # discovery skips dot/underscore files (Spark's .crc and _SUCCESS)
-    return pads.dataset(part_dir, format="parquet")
+    return pads.dataset(part_dir, format="parquet", schema=schema)
 
 
-def _write_part(table: pa.Table) -> Callable[[str], None]:
-    """Writer for _swap_in: one parquet file Spark reads back as part of
-    the table (INT96 timestamps, as Spark writes them; the table's schema
-    metadata, which carries Spark's row schema, rides along)."""
+def _nullable_schema(part_dir: str) -> pa.Schema:
+    """The bucket's schema with every field nullable and the schema
+    metadata (which carries Spark's row schema) kept."""
+    store = _dataset(part_dir).schema
+    return pa.schema([f.with_nullable(True) for f in store], metadata=store.metadata)
+
+
+def _matches(part_dir: str, key_col: str, key: str) -> int:
+    # the filter reads the key column only
+    return _dataset(part_dir).count_rows(filter=pc.field(key_col) == key)
+
+
+def _rewrite(
+    part_dir: str | None, key_col: str, key: str, schema: pa.Schema,
+    new: pa.Table | None = None,
+) -> Callable[[str], None]:
+    """Writer for _swap_in: streams `part_dir`'s rows minus those keyed
+    `key` (a null key is kept, as by the bulk path's anti join), then
+    `new`, into one parquet file Spark reads back as part of the table
+    (INT96 timestamps, as Spark writes them). Record batches go straight
+    from the scan to the writer, so driver memory holds about one parquet
+    row group of the bucket (Spark writes them at up to 128 MB) plus a
+    few batches, never the whole bucket."""
 
     def write(path: str) -> None:
         os.makedirs(path)
-        pq.write_table(
-            table,
+        with pq.ParquetWriter(
             os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"),
+            schema,
             compression="zstd",
             use_deprecated_int96_timestamps=True,
-        )
+        ) as out:
+            if part_dir is not None:
+                for batch in _dataset(part_dir, schema).to_batches(
+                    filter=~pc.field(key_col).isin([key]),
+                    batch_size=_SCAN_ROWS,
+                    batch_readahead=1,
+                    fragment_readahead=1,
+                ):
+                    if batch.num_rows:
+                        out.write_batch(batch)
+            if new is not None:
+                out.write_table(new)
 
     return write
-
-
-def _key_mask(table: pa.Table, key_col: str, keys: list) -> pa.ChunkedArray:
-    # a null key never matches (is_in yields false for it), like the
-    # bulk path's joins
-    return pc.is_in(table[key_col], value_set=pa.array(keys, table.schema.field(key_col).type))
 
 
 def lookup(
@@ -294,12 +329,11 @@ def lookup(
     key: str,
     n_buckets: int,
     columns: list[str] | None = None,
-    bucket_col: str = "bucket",
 ) -> pa.Table | None:
     """Rows whose `key_col` equals `key`, read from the key's bucket
     directory ONLY (nothing else is listed or opened). None when that
     bucket does not exist."""
-    part = os.path.join(table_dir, f"{bucket_col}={bucket_of_key(key, n_buckets)}")
+    part = _bucket_dir(table_dir, key, n_buckets)
     if not os.path.isdir(part):
         return None
     return _dataset(part).to_table(columns=columns, filter=pc.field(key_col) == key)
@@ -313,88 +347,46 @@ def _as_utc(v):
     return v
 
 
-def upsert_rows(
-    table_dir: str,
-    key_col: str,
-    rows: list[dict],
-    n_buckets: int,
-    bucket_col: str = "bucket",
-) -> dict:
-    """Point MERGE: :func:`upsert_by_key` for a few rows given as
-    ``{column: value}`` dicts, run driver-side with pyarrow.
+def upsert_row(table_dir: str, key_col: str, row: dict, n_buckets: int) -> dict:
+    """Point MERGE: :func:`upsert_by_key` for one row given as a
+    ``{column: value}`` dict, run driver-side with pyarrow.
 
-    Each row takes the STORE's schema — every field nullable, the
-    store's schema metadata kept — so columns a row omits are null and
-    stores with extra per-document columns work unchanged. Same
-    one-match contract (a duplicate key in `rows` raises before anything
-    is written), same reply, same copy-on-write of only the affected
-    buckets."""
-    dup = next((k for k, n in Counter(r[key_col] for r in rows).items() if n > 1), None)
-    if dup is not None:
-        raise ValueError(
-            f"upsert_rows: duplicate key {dup!r} in rows — MERGE requires at "
-            "most one source row per target key"
-        )
-    part_dirs = _bucket_dirs(table_dir, bucket_col, n_buckets)
-    by_bucket: dict[int, list[dict]] = defaultdict(list)
-    for r in rows:
-        by_bucket[bucket_of_key(r[key_col], n_buckets)].append(r)
-    store = _dataset(os.path.join(table_dir, part_dirs[0])).schema
-    schema = pa.schema([f.with_nullable(True) for f in store], metadata=store.metadata)
-    rows_updated = rows_inserted = 0
-    for b in sorted(by_bucket):
-        part = os.path.join(table_dir, f"{bucket_col}={b}")
-        new = pa.Table.from_pylist(
-            [{f.name: _as_utc(r.get(f.name)) for f in schema} for r in by_bucket[b]],
-            schema=schema,
-        )
-        if os.path.isdir(part):
-            old = _dataset(part).to_table().cast(schema)
-            hit = _key_mask(old, key_col, new[key_col].to_pylist())
-            matched = pc.sum(hit).as_py() or 0
-            merged = pa.concat_tables([old.filter(pc.invert(hit)), new])
-        else:  # brand-new bucket: all inserts
-            matched, merged = 0, new
-        _swap_in(part, _write_part(merged))
-        rows_updated += matched
-        rows_inserted += new.num_rows - matched
+    The row takes the STORE's schema — every field nullable, the
+    store's schema metadata kept — so columns the row omits are null and
+    stores with extra per-document columns work unchanged. Same reply as
+    the bulk path; only the row's bucket is rewritten."""
+    key = row[key_col]
+    part_dirs = _bucket_dirs(table_dir, n_buckets)
+    part = _bucket_dir(table_dir, key, n_buckets)
+    schema = _nullable_schema(os.path.join(table_dir, part_dirs[0]))
+    new = pa.Table.from_pylist(
+        [{f.name: _as_utc(row.get(f.name)) for f in schema}], schema=schema
+    )
+    if os.path.isdir(part):
+        matched = _matches(part, key_col, key)
+        _swap_in(part, _rewrite(part, key_col, key, schema, new))
+    else:  # brand-new bucket: an insert
+        matched = 0
+        _swap_in(part, _rewrite(None, key_col, key, schema, new))
     return {
-        "rows_updated": rows_updated,
-        "rows_inserted": rows_inserted,
-        "partitions_rewritten": len(by_bucket),
-        "partitions_total": max(len(part_dirs), len(by_bucket)),
+        "rows_updated": matched,
+        "rows_inserted": 1 - matched,
+        "partitions_rewritten": 1,
+        "partitions_total": len(part_dirs),
     }
 
 
-def delete_keys(
-    table_dir: str,
-    key_col: str,
-    keys: list,
-    n_buckets: int,
-    bucket_col: str = "bucket",
-) -> dict:
-    """Point DELETE: :func:`delete_by_key` for a few keys, run
-    driver-side with pyarrow. Same reply; idempotent (a bucket holding
-    none of the keys is not rewritten)."""
-    part_dirs = _bucket_dirs(table_dir, bucket_col, n_buckets)
-    by_bucket: dict[int, set] = defaultdict(set)
-    for k in keys:
-        by_bucket[bucket_of_key(k, n_buckets)].add(k)
-    rows_deleted = rewritten = 0
-    for b in sorted(by_bucket):
-        part = os.path.join(table_dir, f"{bucket_col}={b}")
-        if not os.path.isdir(part):
-            continue
-        old = _dataset(part).to_table()
-        hit = _key_mask(old, key_col, sorted(by_bucket[b]))
-        doomed = pc.sum(hit).as_py() or 0
-        if doomed == 0:
-            continue
-        _swap_in(part, _write_part(old.filter(pc.invert(hit))))
-        rows_deleted += doomed
-        rewritten += 1
+def delete_key(table_dir: str, key_col: str, key: str, n_buckets: int) -> dict:
+    """Point DELETE: :func:`delete_by_key` for one key, run driver-side
+    with pyarrow. Same reply; idempotent (a bucket without the key is
+    not rewritten)."""
+    part_dirs = _bucket_dirs(table_dir, n_buckets)
+    part = _bucket_dir(table_dir, key, n_buckets)
+    doomed = _matches(part, key_col, key) if os.path.isdir(part) else 0
+    if doomed:
+        _swap_in(part, _rewrite(part, key_col, key, _nullable_schema(part)))
     return {
-        "rows_deleted": rows_deleted,
-        "partitions_rewritten": rewritten,
+        "rows_deleted": doomed,
+        "partitions_rewritten": int(doomed > 0),
         "partitions_total": len(part_dirs),
     }

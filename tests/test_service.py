@@ -99,7 +99,7 @@ def test_get_verbs_match_spark_operator_chain(svc):
     from pdfmef_spark import sinks
 
     err_url = "https://error.example/null-html"
-    sinks.upsert_rows(svc.table_dir, "url", [{"url": err_url, "html": None}], svc.n_buckets)
+    sinks.upsert_row(svc.table_dir, "url", {"url": err_url, "html": None}, svc.n_buckets)
     try:
         urls = [r.url for r in svc.spark.read.parquet(svc.table_dir).select("url").collect()]
         assert err_url in urls and len(urls) > 200

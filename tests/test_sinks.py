@@ -169,14 +169,16 @@ def test_random_delete_upsert_sequence_matches_model(spark, tmp_path):
     assert got == model
 
 
-def test_point_path_matches_bulk_path(spark, tmp_path):
-    """The driver-side point sinks (upsert_rows/delete_keys, pyarrow, no
+def test_point_path_matches_bulk_path(spark, tmp_path, monkeypatch):
+    """The driver-side point sinks (upsert_row/delete_key, pyarrow, no
     Spark job) against the bulk DataFrame sinks as the reference: the
-    same seeded op sequence on two copies of a table gives the same
-    replies and the same rows, and a point op rewrites only the buckets
-    of its keys."""
+    same seeded one-key op sequence on two copies of a table gives the
+    same replies and the same rows, and a point op rewrites only the
+    bucket of its key."""
     import random
 
+    # rewrites stream each bucket through several record batches
+    monkeypatch.setattr(sinks, "_SCAN_ROWS", 7)
     rng = random.Random(777)
     model = {f"doc-{i}": i * 7 for i in range(300)}
     dirs = {}
@@ -187,32 +189,30 @@ def test_point_path_matches_bulk_path(spark, tmp_path):
         ).write.partitionBy("bucket").parquet(dirs[side])
 
     universe = [f"doc-{i}" for i in range(400)]  # includes never-inserted keys
-    for step in range(4):
-        ks = rng.sample(universe, rng.randint(1, 5))
-        touched = {sinks.bucket_of_key(k, N_BUCKETS) for k in ks}
+    for step in range(10):
+        k = rng.choice(universe)
+        touched = sinks.bucket_of_key(k, N_BUCKETS)
         before = _file_state(dirs["point"])
         if step % 2:
-            got = sinks.delete_keys(dirs["point"], "doc_id", ks, N_BUCKETS)
+            got = sinks.delete_key(dirs["point"], "doc_id", k, N_BUCKETS)
             want = sinks.delete_by_key(
                 spark, dirs["bulk"], "doc_id",
-                spark.createDataFrame([(k,) for k in ks], "doc_id string"),
+                spark.createDataFrame([(k,)], "doc_id string"),
                 n_buckets=N_BUCKETS,
             )
         else:
-            vals = [(k, rng.randint(0, 10**6)) for k in ks]
-            got = sinks.upsert_rows(
-                dirs["point"], "doc_id", [{"doc_id": k, "val": v} for k, v in vals], N_BUCKETS
-            )
+            v = rng.randint(0, 10**6)
+            got = sinks.upsert_row(dirs["point"], "doc_id", {"doc_id": k, "val": v}, N_BUCKETS)
             want = sinks.upsert_by_key(
                 spark, dirs["bulk"], "doc_id",
-                spark.createDataFrame(vals, "doc_id string, val long"),
+                spark.createDataFrame([(k, v)], "doc_id string, val long"),
                 n_buckets=N_BUCKETS,
             )
         assert got == want
         after = _file_state(dirs["point"])
         for path, mtime in before.items():
             part = next((s for s in path.split(os.sep) if s.startswith("bucket=")), None)
-            if part and int(part.split("=")[1]) not in touched:
+            if part and int(part.split("=")[1]) != touched:
                 assert after.get(path) == mtime, f"untouched partition rewritten: {path}"
 
     tables = {
@@ -271,10 +271,5 @@ def test_upsert_duplicate_update_keys_raise(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="duplicate key"):
         sinks.upsert_by_key(spark, table_dir, "doc_id", dup, n_buckets=N_BUCKETS)
-    with pytest.raises(ValueError, match="duplicate key"):
-        sinks.upsert_rows(
-            table_dir, "doc_id", [{"doc_id": "doc-1", "val": 1}, {"doc_id": "doc-1", "val": 2}],
-            N_BUCKETS,
-        )
     # table untouched by the failed merge
     assert spark.read.parquet(table_dir).count() == 1000

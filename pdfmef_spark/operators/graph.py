@@ -59,8 +59,9 @@ def doc_nodes(triples: DataFrame) -> DataFrame:
     )
 
 
-def _resolve_edges(triples: DataFrame, smap) -> DataFrame:
-    """Entity-resolve both triple slots -> edges(src, dst, pred, weight).
+def _resolve_slots(triples: DataFrame, smap) -> DataFrame:
+    """Entity-resolve both triple slots -> triples + (src, dst), dropping
+    rows whose either slot does not resolve.
 
     hasTitle/hasAbstract/hasFigure/affiliationString are document
     attributes, not graph relations — those strings are not entity
@@ -97,8 +98,13 @@ def _resolve_edges(triples: DataFrame, smap) -> DataFrame:
             F.col("dst_id")
         ),
     )
+    return t.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+
+
+def _resolve_edges(triples: DataFrame, smap) -> DataFrame:
+    """Entity-resolved triples -> edges(src, dst, pred, weight)."""
     return (
-        t.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        _resolve_slots(triples, smap)
         .groupBy("src", "dst", "pred")
         .agg(F.count("*").alias("weight"))
     )
@@ -114,35 +120,8 @@ def resolve_edges_flagged(triples: DataFrame, smap) -> DataFrame:
     collide with an existing (src, dst, pred) group) and
     merge-with-history edges (entity subjects), which is what keeps the
     bucket-pruned edge write O(delta)."""
-    t = triples.filter(
-        ~F.col("pred").isin(
-            "hasTitle", "hasAbstract", "hasFigure", "affiliationString"
-        )
-    )
-    subj_map = smap.select(
-        F.col("type").alias("subj_type"),
-        F.col("surface").alias("subj"),
-        F.col("entity_id").alias("src_id"),
-    )
-    t = t.join(subj_map, ["subj_type", "subj"], "left").withColumn(
-        "src",
-        F.when(F.col("subj_type") == "DOC", F.xxhash64(F.lit("DOC"), F.col("subj"))).otherwise(
-            F.col("src_id")
-        ),
-    )
-    obj_map = smap.select(
-        F.col("type").alias("obj_type"),
-        F.col("surface").alias("obj"),
-        F.col("entity_id").alias("dst_id"),
-    )
-    t = t.join(obj_map, ["obj_type", "obj"], "left").withColumn(
-        "dst",
-        F.when(F.col("obj_type") == "DOC", F.xxhash64(F.lit("DOC"), F.col("obj"))).otherwise(
-            F.col("dst_id")
-        ),
-    )
     return (
-        t.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        _resolve_slots(triples, smap)
         .groupBy("src", "dst", "pred")
         .agg(
             F.count("*").alias("weight"),
@@ -160,90 +139,3 @@ def materialize_graph(
     nodes = ent_nodes.unionByName(d_nodes)
     smap = F.broadcast(surface_map) if broadcast_map else surface_map
     return nodes, _resolve_edges(triples, smap)
-
-
-def component_remap(prev_assign: DataFrame, new_assign: DataFrame) -> DataFrame:
-    """Entity-id remap between two assignment snapshots.
-
-    component id = "type|min-norm" and entity_id = xxhash64(type,
-    component), so an id only changes when a component GAINS a smaller
-    member (a merge, or a new minimal norm). Joining the snapshots on
-    (type, norm) — every old norm survives, vocabulary only grows —
-    yields one (old_id -> new_id) row per changed component. The remap
-    is component-count-sized per batch and usually near-empty, so it
-    broadcasts.
-
-    Returns (old_id, new_id, n_new) where n_new is the number of
-    DISTINCT new ids an old id maps to: >1 means a component SPLIT
-    (only possible when LSH candidate caps dropped previously-found
-    links), in which case remapping old aggregated edges is unsound and
-    the caller must fall back to a full rebuild.
-    """
-    changed = (
-        prev_assign.select("type", "norm", F.col("component").alias("old_c"))
-        .join(new_assign.select("type", "norm", F.col("component").alias("new_c")),
-              ["type", "norm"])
-        .filter(F.col("old_c") != F.col("new_c"))
-        .select(
-            "type",
-            F.xxhash64("type", "old_c").alias("old_id"),
-            F.xxhash64("type", "new_c").alias("new_id"),
-            F.col("old_c"),
-        )
-        .distinct()
-    )
-    splits = changed.groupBy("old_id").agg(
-        F.count_distinct("new_id").alias("n_new")
-    )
-    return changed.join(splits, "old_id").select("old_id", "new_id", "n_new")
-
-
-def materialize_graph_delta(
-    trip_delta: DataFrame,
-    keys: DataFrame,
-    assignments: DataFrame,
-    prev_doc_nodes: DataFrame,
-    prev_edges: DataFrame,
-    remap: DataFrame,
-    broadcast_map: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Delta + remap graph update (no historical-triples rescan).
-
-    From-scratch materialization re-reads the FULL triples table every
-    incremental batch because merges change historical edge endpoints.
-    With entity_id = xxhash64 over the component's minimum member norm
-    the id is a pure function of component membership, so the change is
-    expressible as a remap: edges = remap(prev_edges) ∪ resolve(delta),
-    re-aggregated. Per-batch tail input is O(prev graph + delta +
-    vocab) — never O(all triples); equality with from-scratch is
-    pinned by tests (test_incremental_pipeline).
-
-    nodes: entity nodes are recomputed from the (vocab-sized) surface
-    table — already delta-summed upstream; DOC node ids are
-    xxhash64('DOC', url), inherently stable, so doc nodes are
-    prev ∪ delta.
-    """
-    ent_nodes, surface_map = entity_nodes(keys, assignments)
-    d_nodes = (
-        # tolerate layout columns (nb bucketing) on the stored table
-        prev_doc_nodes.select("entity_id", "canonical", "type", "n_mentions")
-        .unionByName(doc_nodes(trip_delta))
-        .distinct()
-    )
-    nodes = ent_nodes.unionByName(d_nodes)
-
-    rm = F.broadcast(remap.select("old_id", "new_id"))
-    e = prev_edges.select("src", "dst", "pred", "weight")
-    for col in ("src", "dst"):
-        e = (
-            e.join(rm.withColumnRenamed("old_id", col), col, "left")
-            .withColumn(col, F.coalesce("new_id", F.col(col)))
-            .drop("new_id")
-        )
-    smap = F.broadcast(surface_map) if broadcast_map else surface_map
-    edges = (
-        e.unionByName(_resolve_edges(trip_delta, smap))
-        .groupBy("src", "dst", "pred")
-        .agg(F.sum("weight").alias("weight"))
-    )
-    return nodes, edges

@@ -20,6 +20,7 @@ from parquet, not recomputed (asserted by tests/test_resume.py).
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 from dataclasses import dataclass, field
@@ -248,6 +249,56 @@ def _append_manifest(out_dir: str, records: list[tuple]) -> None:
     pq.write_table(table, f"{mp}/manifest-{uuid.uuid4().hex}.parquet")
 
 
+def _has_parquet(path: str) -> bool:
+    """True when the directory tree holds at least one parquet file. A
+    zero-row stage under a partitioned overwrite leaves a directory with
+    none, and a schema-less read of such a directory throws."""
+    return any(f.endswith(".parquet") for _, _, files in os.walk(path) for f in files)
+
+
+def _timed_stage(
+    spark: SparkSession, run: "PipelineRun", name: str, build, **write_kw
+) -> DataFrame:
+    """Build one stage's frame, write it with :func:`_write_stage`, and
+    record the timed :class:`StageResult` (with any observed operator
+    metrics) under ``run.results[name]``."""
+    t0 = time.time()
+    metrics: dict = {}
+    df = _write_stage(
+        spark, run.out_dir, run.run_id, name, build(), out_metrics=metrics, **write_kw
+    )
+    run.results[name] = StageResult(
+        name, df, recomputed=True, seconds=round(time.time() - t0, 2),
+        metrics=metrics or None,
+    )
+    return df
+
+
+def _write_nodes_edges(
+    write, nodes_df: DataFrame, edges_df: DataFrame,
+    node_parts: list[str], edge_parts: list[str], **write_kw,
+) -> None:
+    """Write the nodes and edges stages at once through ``write(name,
+    build, partition_by=..., **write_kw)``.
+
+    nodes and edges share no data dependency, so both write jobs are
+    submitted from a 2-thread pool: the tail tasks of one back-fill
+    cores the other's stragglers leave idle (guide §2.6). Jobs submitted
+    from driver threads interleave in Spark's FIFO scheduler; manifest
+    appends are per-file (uuid-named) and run.results updates are
+    GIL-atomic dict stores, so the stage writers are thread-safe as-is.
+    """
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [
+            pool.submit(write, "nodes", lambda: nodes_df, partition_by=node_parts, **write_kw),
+            pool.submit(write, "edges", lambda: edges_df, partition_by=edge_parts, **write_kw),
+        ]
+        for f in futures:
+            f.result()
+
+
 def refresh_analytics(
     spark: SparkSession,
     out_dir: str,
@@ -298,26 +349,12 @@ def run_pipeline(
 
     completed = _completed_stages(spark, out_dir)
 
-    def stage(
-        name: str, build, error_col: str | None = None,
-        partition_by: list[str] | None = None,
-        extra_obs=None,
-    ) -> DataFrame:
+    def stage(name: str, build, **write_kw) -> DataFrame:
         if name in completed:
             df = spark.read.parquet(f"{out_dir}/{name}")
             run.results[name] = StageResult(name, df, recomputed=False)
             return df
-        t0 = time.time()
-        metrics: dict = {}
-        df = _write_stage(
-            spark, out_dir, run_id, name, build(), error_col=error_col,
-            partition_by=partition_by, extra_obs=extra_obs, out_metrics=metrics,
-        )
-        run.results[name] = StageResult(
-            name, df, recomputed=True, seconds=round(time.time() - t0, 2),
-            metrics=metrics or None,
-        )
-        return df
+        return _timed_stage(spark, run, name, build, **write_kw)
 
     extracted = stage("extracted", lambda: extract.extract_pages(pages), error_col="error")
     triples = stage("triples", lambda: triples_op.extract_triples(extracted))
@@ -356,20 +393,7 @@ def run_pipeline(
         nodes_df, edges_df = graph.materialize_graph(
             triples, keys, assignments, broadcast_map=broadcast_map
         )
-        # nodes and edges share no data dependency — submit both write
-        # jobs from a 2-thread pool so the tail tasks of one back-fill
-        # cores the other's stragglers leave idle (guide §2.6). Jobs
-        # submitted from driver threads interleave in Spark's FIFO
-        # scheduler; manifest appends are per-file (uuid-named) and
-        # run.results updates are GIL-atomic dict stores, so the stage
-        # helper is thread-safe as-is.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_nodes = pool.submit(stage, "nodes", lambda: nodes_df, None, ["type"])
-            f_edges = pool.submit(stage, "edges", lambda: edges_df, None, ["pred"])
-            f_nodes.result()
-            f_edges.result()
+        _write_nodes_edges(stage, nodes_df, edges_df, ["type"], ["pred"])
     finally:
         keys.unpersist()
     if analytics:
@@ -385,69 +409,45 @@ def run_pipeline_incremental(
     link_threshold: float = 0.70,
     analytics: bool = False,
 ) -> PipelineRun:
-    """Incremental KG update: extract only NEW pages, rebuild the graph.
+    """Incremental KG update: extract only NEW pages, update the graph.
 
     The crawl grows snapshot by snapshot (the reference's polling daemon,
     src/extractor/main.py:139-176, re-queries its MySQL work queue each
     tick); here the "queue" is an anti-join against a parquet ledger
-    (streaming/incremental.Ledger). Stage split by cost model:
+    (streaming/incremental.Ledger), committed strictly last, so a tick
+    that crashes anywhere re-runs whole.
 
-    * doc-local stages (extracted, triples, mentions, and the per-batch
-      surface-vocabulary delta) touch only the url DELTA and land in
-      ``batch_id=<B>`` hive partitions via DYNAMIC partition overwrite,
-      so re-running a crashed batch replaces exactly its own partition
-      (idempotent, effectively-once together with the ledger commit
-      that happens strictly last).
-    * corpus-global stages (links, assignments, nodes, edges) operate
-      on the distinct-surface vocabulary. Because surface frequencies
-      are additive and the ledger guarantees each url lands in exactly
-      one batch, the vocabulary is the SUM of the per-batch deltas —
-      the tail aggregates O(vocab x batches) delta rows and never
-      rescans the historical mentions table. The LINKS stage is
-      itself incremental: block keys are a pure function of the norm
-      string (linking.tag_block_keys), each batch persists keys for
-      its NEW norms only (``bucket_keys``, hive batch partitions), and
-      candidate generation expands only buckets a new norm touched —
-      links = prev_links UNION score(new-touching pairs), exactly the
-      full recompute (pinned by tests) unless a touched bucket crossed
-      its cap this tick, which forces a full links rebuild (the
-      bucket's old pairs must vanish with it). Measured at 5k docs /
-      6 batches: links+keys 3.6 s -> 0.9 s per tick, same links table.
-      Graph materialization is
-      DELTA + REMAP: entity_id = xxhash64 over the component's minimum
-      member norm is a pure function of component membership, so a
-      cross-batch merge reduces to a (old_id -> new_id) remap of the
-      previous edges table plus resolution of only the new batch's
-      triples. Tail input per
-      batch is O(prev graph + delta + vocab), never O(all triples);
-      byte-identity with from-scratch is pinned by tests.
-      Round 6 (VERDICT r5 #1): the tail tables are hive-BUCKETED —
-      assignments by pmod(xxhash64(component), ASSIGN_BUCKETS), nodes
-      by (type, pmod(xxhash64(entity_id), GRAPH_BUCKETS)) with
-      per-batch append partitions for new DOC nodes, edges by
-      (pred, pmod(xxhash64(src), GRAPH_BUCKETS)) with per-batch append
-      partitions for DOC-subject delta edges — and a merge-only tick
-      REWRITES only buckets holding a remapped endpoint, a
-      membership/freq-affected entity, or an entity-subject delta
-      edge: affected rows are read partition-pruned, checkpointed,
-      their bucket dirs dropped, replacements appended. The per-tick
-      tail WRITE is O(affected buckets), no longer O(vocab)/O(graph);
-      the scans that locate affected rows remain columnar O(table)
-      reads. Untouched bucket files provably stay in place
-      (mtime-pinned tests) and content stays byte-identical to the
-      unpruned rebuild. Fallbacks to
-      the full merged-triples rebuild: first batch, a crash-retry of a
-      batch whose tail already wrote (manifest run_id guard — the delta
-      is already folded into prev_edges), and a component SPLIT (only
-      possible when LSH candidate caps dropped links). Incremental
-      connected components is still not worth its complexity at this
-      stage-size ratio: at 10^12 docs the extract stages are ~all of
-      the cost and are never recomputed.
+    * Doc-local stages (extracted, triples, mentions, and the per-batch
+      vocabulary delta ``surfaces``) touch only the new urls and land in
+      ``batch_id=<B>`` partitions by dynamic partition overwrite, so a
+      re-run replaces exactly its own partition. Each url lands in one
+      batch and surface frequencies add up, so the vocabulary is the sum
+      of the ``surfaces`` partitions and the tail never rescans mentions.
+    * links: a norm's block keys are a pure function of the norm, each
+      batch stores keys for its new norms only (``bucket_keys``), and
+      links = previous links UNION the scored pairs touching a new norm.
+      That is the full recompute unless a touched bucket crossed its cap
+      this tick (its old pairs must vanish) or the tick is a crash-retry
+      (the links table already holds its delta); both rebuild links.
+    * assignments, nodes, edges take the delta path exactly when links
+      did and the previous tail tables carry their bucket columns:
+      assignments ``cb`` = pmod(xxhash64(component), ASSIGN_BUCKETS),
+      nodes (type, ``nb``) and edges (pred, ``eb``), with ``nb``/``eb``
+      = pmod(xxhash64(entity_id / src), GRAPH_BUCKETS).
+      Links that only grew make every component change a merge, so
+      ``components.delta_component_remap`` gives one new id per old
+      representative (entity_id = xxhash64(type, component) follows it)
+      and no component can split. A delta tick rewrites only the buckets
+      holding a changed row, resolves only this batch's triples
+      partition, and appends new DOC nodes and DOC-subject edges into a
+      per-batch bucket. Every other tick (first batch, full-links tick,
+      older layout) rebuilds the tail from the merged triples.
 
-    At scale the delta chain would be read back from the just-committed
-    Iceberg snapshot instead of persist(); local parquet has no
-    snapshot isolation, so the delta is cached across the three writes.
+    Either way the result equals a from-scratch ``run_pipeline`` over
+    the same pages (pinned by tests/test_incremental_pipeline.py).
     """
+    import shutil
+
     from pdfmef_spark import schemas
     from pdfmef_spark.operators import components, extract, graph, linking, triples as triples_op
     from pdfmef_spark.streaming.incremental import Ledger
@@ -478,18 +478,14 @@ def run_pipeline_incremental(
                 )
         return run
     dyn = {"partitionOverwriteMode": "dynamic"}
+    stage = functools.partial(_timed_stage, spark, run)
 
     def inc_stage(name: str, df: DataFrame, error_col: str | None = None) -> None:
-        t0 = time.time()
-        out = _write_stage(
-            spark, out_dir, run_id, name,
-            df.withColumn("batch_id", F.lit(batch_id)),
+        stage(
+            name, lambda: df.withColumn("batch_id", F.lit(batch_id)),
             error_col=error_col, partition_by=["batch_id"],
             writer_options=dyn,
             counts_path=f"{out_dir}/{name}/batch_id={batch_id}",
-        )
-        run.results[name] = StageResult(
-            name, out, recomputed=True, seconds=round(time.time() - t0, 2)
         )
 
     extracted_d = extract.extract_pages(delta).persist()
@@ -500,12 +496,6 @@ def run_pipeline_incremental(
             inc_stage("triples", triples_d)
             mentions_d = triples_op.mentions_from_triples(triples_d)
             inc_stage("mentions", mentions_d)
-            # per-batch vocabulary DELTA: surface freq is a plain count
-            # and each url lands in exactly one batch, so the full
-            # vocabulary is the SUM over batch deltas — the tail below
-            # then never rescans the historical mentions table, it
-            # aggregates vocabulary-sized deltas (the difference between
-            # O(corpus) and O(vocab x batches) per incremental tick)
             inc_stage("surfaces", linking.surface_keys(mentions_d))
         finally:
             triples_d.unpersist()
@@ -515,53 +505,18 @@ def run_pipeline_incremental(
     def _merged(stage_name: str) -> DataFrame:
         # read EVERY batch partition; a stage whose batches were all
         # zero-row has no parquet files yet — fall back to the typed
-        # empty frame the write step returned (ADVICE r3). The fallback
-        # is ONLY for the no-files case: any other read failure while
-        # earlier batches exist would silently rebuild the global graph
-        # from one batch, so re-raise everything else (ADVICE r4).
+        # empty frame the write step returned. Only that case: any other
+        # read failure while earlier batches exist would silently
+        # rebuild the global graph from one batch, so it is raised
         stage_dir = f"{out_dir}/{stage_name}"
-        if not any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(stage_dir)
-            for f in files
-        ):
+        if not _has_parquet(stage_dir):
             return run.results[stage_name].df
         return spark.read.parquet(stage_dir)
 
-    def tail_stage(name: str, build, partition_by=None, mode="overwrite") -> DataFrame:
-        t0 = time.time()
-        df = _write_stage(
-            spark, out_dir, run_id, name, build(), partition_by=partition_by,
-            mode=mode,
-        )
-        run.results[name] = StageResult(
-            name, df, recomputed=True, seconds=round(time.time() - t0, 2)
-        )
-        return df
-
-    # graph-tail mode: delta + remap when the previous batch's tail
-    # output exists AND was not written by THIS batch_id (a crash after
-    # the tail wrote but before the ledger committed re-runs the same
-    # batch — its delta edges are already folded into prev_edges, so
-    # remapping them again would double-count; the retry rebuilds from
-    # the merged triples instead, which is idempotent). The previous
-    # snapshots are localCheckpoint-ed BEFORE the overwrite of their
-    # dirs — at cluster scale this read-prev-then-overwrite sequence is
-    # an Iceberg snapshot read, local parquet has no isolation.
-    def _has_parquet(path: str) -> bool:
-        return os.path.exists(path) and any(
-            f.endswith(".parquet") for _, _, files in os.walk(path) for f in files
-        )
-
-    # file presence, not dir existence: a zero-row stage under a
-    # partitioned overwrite leaves a dir with no parquet files, and a
-    # schema-less read of it throws. Until every graph-tail table has
-    # real rows the full rebuild is the cheap path anyway. (The links
-    # table is read with an explicit schema below, so a legitimately
-    # zero-link corpus does not block the incremental-links path.)
-    tail_ready = all(
-        _has_parquet(f"{out_dir}/{s}") for s in ("assignments", "nodes", "edges")
-    )
+    # a crash after the tail wrote but before the ledger committed
+    # re-runs the same batch: its delta is already folded into the
+    # links/graph tables, so that retry (same run_id as the last tail
+    # write in the manifest) must rebuild instead of adding it again
     poisoned = False
     if os.path.exists(_manifest_path(out_dir)):
         m = spark.read.parquet(_manifest_path(out_dir))
@@ -575,18 +530,6 @@ def run_pipeline_incremental(
             .first()
         )
         poisoned = last is not None and last.run_id == run_id
-    use_delta = tail_ready and not poisoned
-    graph_bucketed = False
-    if use_delta:
-        # lazy reads: every consumer is materialized (localCheckpoint /
-        # collect) BEFORE any of these directories is deleted or
-        # appended to, so no full-table snapshot checkpoint is paid
-        prev_nodes_lazy = spark.read.parquet(f"{out_dir}/nodes")
-        prev_edges_lazy = spark.read.parquet(f"{out_dir}/edges")
-        graph_bucketed = (
-            "nb" in prev_nodes_lazy.columns and "eb" in prev_edges_lazy.columns
-        )
-        prev_doc_nodes = prev_nodes_lazy.filter(F.col("type") == "DOC")
 
     keys = (
         _merged("surfaces")
@@ -595,18 +538,10 @@ def run_pipeline_incremental(
         .persist()
     )
     try:
-        # Incremental links: a norm's block keys are a pure function of
-        # the norm string (linking.tag_block_keys), so each batch
-        # persists keys for its NEW norms only and candidate generation
-        # touches only buckets a new norm landed in. The accumulated
-        # links table holds every old-old pair's scored survivor, so
-        # links = prev_links UNION scored(new-touching pairs) — exactly
-        # the full recompute, UNLESS a touched bucket crossed its cap
-        # this tick (its old pairs must vanish with the bucket; only a
-        # full rebuild reproduces that) or this is a poisoned retry
-        # (prev links already contain this batch's delta). Per-tick
-        # links cost drops from re-MinHashing the whole vocabulary to
-        # O(delta x bucket density + a column-pruned key-table scan).
+        # Incremental links: candidate generation touches only buckets a
+        # new norm landed in. Per-tick links cost drops from re-MinHashing
+        # the whole vocabulary to O(delta x bucket density + a
+        # column-pruned key-table scan).
         norms_now = keys.select("type", "norm").distinct()
         bk_dir = f"{out_dir}/bucket_keys"
         have_prev_bk = _has_parquet(bk_dir)
@@ -650,195 +585,153 @@ def run_pipeline_incremental(
                     .parquet(f"{out_dir}/links")
                     .localCheckpoint()
                 )
-                # schema-version guard (ADVICE r5): parquet read does
-                # not enforce nullability, so a links table written
-                # before `type` existed reads back as silent nulls and
-                # would corrupt the concat_ws component keys — detect
-                # and rebuild fully instead
-                if prev_links.filter(F.col("type").isNull()).limit(1).count() > 0:
-                    links_mode = "full"
-                else:
-                    # checkpointed once: reused by the links write AND
-                    # the delta component update below
-                    delta_links = linking.score_pairs(
-                        d_pairs, threshold=link_threshold
-                    ).localCheckpoint()
-                    links_mode = "delta"
+                # checkpointed once: reused by the links write AND the
+                # delta component update below
+                delta_links = linking.score_pairs(
+                    d_pairs, threshold=link_threshold
+                ).localCheckpoint()
+                links_mode = "delta"
         if links_mode == "delta":
-            links = tail_stage(
+            links = stage(
                 "links", lambda: prev_links.unionByName(delta_links)
             )
         else:
-            links = tail_stage(
+            links = stage(
                 "links",
                 lambda: linking.link_entities(threshold=link_threshold, keys=keys),
             )
         run.results["links"].metrics = {"links_mode": links_mode}
-        if links_mode != "delta":
-            # A full links rebuild may SHRINK the link set (cap-crossing
-            # drops a whole bucket's old pairs), so the merge-only
-            # premise behind delta assignments AND the remap-based graph
-            # tail no longer holds. The remap's n_new>1 split probe
-            # cannot catch every split either: a 2-way split whose
-            # min-norm fragment keeps the old component id shows
-            # n_new=1 over the CHANGED rows it inspects (ADVICE r5,
-            # high). Rebuild the whole tail from merged triples on any
-            # full-links tick — merge-only ticks (links strictly grew)
-            # are the only sound delta ticks, and on those a split is
-            # impossible by construction.
-            use_delta = False
-        # assignments live hive-bucketed by component hash (cb =
-        # pmod(xxhash64(component), ASSIGN_BUCKETS), round 6, VERDICT r5
-        # #1): a merge-only tick touches only the buckets holding a
-        # merged representative or a new norm, so the per-tick
-        # assignments WRITE — previously a full-table rewrite, the
-        # acknowledged O(vocab) tick term — prunes to O(delta) buckets:
-        # the affected buckets are read (partition-pruned), remapped,
-        # checkpointed, their directories dropped, and the replacement
-        # rows appended. Content is byte-identical to
-        # components.assign_components_delta over the full table
-        # (every changed row's component equals some remapped rep, so
-        # it lives in an affected bucket by construction; pinned by
-        # tests). Full rebuilds overwrite the whole directory, which
-        # also clears buckets whose component id vanished in a merge.
+
+        # Graph-tail mode, decided once. A full links rebuild may SHRINK
+        # the link set (a cap-crossing bucket drops its old pairs), and a
+        # component can then split, so only merge-only ticks take the
+        # delta path. The previous assignments/nodes/edges must also be
+        # in the bucketed layout; an older layout gets one full relayout
+        # rebuild and later ticks prune. The lazy reads below are
+        # consumed (localCheckpoint / collect) before any of their
+        # directories is deleted or appended to.
+        prev_tail = {}
+        if links_mode == "delta":
+            for st, bucket_col in (("assignments", "cb"), ("nodes", "nb"), ("edges", "eb")):
+                if _has_parquet(f"{out_dir}/{st}"):
+                    df = spark.read.parquet(f"{out_dir}/{st}")
+                    if bucket_col in df.columns:
+                        prev_tail[st] = df
+        use_delta = len(prev_tail) == 3
+
+        # A delta tick touches only the assignment buckets holding a
+        # merged representative or a new norm: they are read
+        # (partition-pruned), remapped, checkpointed, their directories
+        # dropped, and the replacement rows appended. Every changed row's
+        # component equals some remapped rep, so it lives in an affected
+        # bucket by construction. Full rebuilds overwrite the whole
+        # directory, which also clears buckets whose component id
+        # vanished in a merge.
         _cb = F.pmod(F.xxhash64("component"), F.lit(ASSIGN_BUCKETS))
-        assignments_mode = "full"
-        changed = None
-        if links_mode == "delta" and use_delta:
+        if use_delta:
             new_norms_now = (
                 keyed_all.filter(F.col("is_new")).select("type", "norm").distinct()
             )
-            prev_a_lazy = spark.read.parquet(f"{out_dir}/assignments")
-            if "cb" in prev_a_lazy.columns:
-                remap_a = components.delta_component_remap(
-                    prev_a_lazy.select("type", "norm", "component"), delta_links
-                ).localCheckpoint(eager=True)
-                changed = remap_a.filter(F.col("rep") != F.col("component"))
-                node_of = F.concat_ws("|", "type", "norm")
-                new_part = (
-                    new_norms_now.distinct()
-                    .withColumn("node", node_of)
-                    .join(remap_a, F.col("node") == remap_a["rep"], "left")
-                    .select(
-                        "type", "norm",
-                        F.coalesce(remap_a["component"], F.col("node")).alias("component"),
-                    )
+            prev_a = prev_tail["assignments"]
+            # one row per representative touched by the delta links
+            remap_a = components.delta_component_remap(
+                prev_a.select("type", "norm", "component"), delta_links
+            ).localCheckpoint(eager=True)
+            changed = remap_a.filter(F.col("rep") != F.col("component"))
+            node_of = F.concat_ws("|", "type", "norm")
+            new_part = (
+                new_norms_now.distinct()
+                .withColumn("node", node_of)
+                .join(remap_a, F.col("node") == remap_a["rep"], "left")
+                .select(
+                    "type", "norm",
+                    F.coalesce(remap_a["component"], F.col("node")).alias("component"),
                 )
-                aff = (
-                    changed.select(F.col("rep").alias("c"))
-                    .unionByName(changed.select(F.col("component").alias("c")))
-                    .unionByName(new_part.select(F.col("component").alias("c")))
+            )
+            aff = (
+                changed.select(F.col("rep").alias("c"))
+                .unionByName(changed.select(F.col("component").alias("c")))
+                .unionByName(new_part.select(F.col("component").alias("c")))
+            )
+            buckets = sorted(
+                int(r.b)
+                for r in aff.select(
+                    F.pmod(F.xxhash64("c"), F.lit(ASSIGN_BUCKETS)).alias("b")
+                ).distinct().collect()
+            )
+            ch = changed.select(
+                F.col("rep").alias("r_rep"), F.col("component").alias("r_new")
+            )
+            old_aff = (
+                prev_a.filter(F.col("cb").isin(buckets))
+                .select("type", "norm", "component")
+                .join(F.broadcast(ch), F.col("component") == F.col("r_rep"), "left")
+                .select(
+                    "type", "norm",
+                    F.coalesce(F.col("r_new"), F.col("component")).alias("component"),
                 )
-                buckets = sorted(
-                    int(r.b)
-                    for r in aff.select(
-                        F.pmod(F.xxhash64("c"), F.lit(ASSIGN_BUCKETS)).alias("b")
-                    ).distinct().collect()
-                )
-                ch = changed.select(
-                    F.col("rep").alias("r_rep"), F.col("component").alias("r_new")
-                )
-                old_aff = (
-                    prev_a_lazy.filter(F.col("cb").isin(buckets))
-                    .select("type", "norm", "component")
-                    .join(F.broadcast(ch), F.col("component") == F.col("r_rep"), "left")
-                    .select(
-                        "type", "norm",
-                        F.coalesce(F.col("r_new"), F.col("component")).alias("component"),
-                    )
-                )
-                # materialize BEFORE the affected bucket dirs are
-                # dropped — the plan reads the very files being replaced
-                delta_out = (
-                    old_aff.unionByName(new_part)
-                    .withColumn("cb", _cb)
-                    .repartition("cb")
-                    .localCheckpoint(eager=True)
-                )
-                import shutil as _sh
-
-                for bkt in buckets:
-                    _sh.rmtree(f"{out_dir}/assignments/cb={bkt}", ignore_errors=True)
-                assignments = tail_stage(
-                    "assignments", lambda: delta_out,
-                    partition_by=["cb"], mode="append",
-                )
-                assignments_mode = "delta"
-            else:
-                # pre-bucketing layout on disk: snapshot it, then one
-                # full relayout rebuild; later ticks prune
-                prev_assign = prev_a_lazy.localCheckpoint()
-        if assignments_mode != "delta":
-            assignments = tail_stage(
+            )
+            # materialize BEFORE the affected bucket dirs are
+            # dropped — the plan reads the very files being replaced
+            delta_out = (
+                old_aff.unionByName(new_part)
+                .withColumn("cb", _cb)
+                .repartition("cb")
+                .localCheckpoint(eager=True)
+            )
+            for bkt in buckets:
+                shutil.rmtree(f"{out_dir}/assignments/cb={bkt}", ignore_errors=True)
+            assignments = stage(
+                "assignments", lambda: delta_out,
+                partition_by=["cb"], mode="append",
+            )
+        else:
+            assignments = stage(
                 "assignments",
                 lambda: components.assign_components(keys, links)
                 .withColumn("cb", _cb)
                 .repartition("cb"),
                 partition_by=["cb"],
             )
-        run.results["assignments"].metrics = {"assignments_mode": assignments_mode}
+        run.results["assignments"].metrics = {
+            "assignments_mode": "delta" if use_delta else "full"
+        }
         broadcast_map = keys.limit(100_001).count() <= 100_000
-        if use_delta:
-            if changed is not None:
-                # entity-id remap derived from the O(delta) rep remap —
-                # same (old_id -> new_id) pairs graph.component_remap
-                # extracts from the full snapshots (component strings
-                # carry their type as the "type|" prefix), minus the
-                # O(vocab) snapshot join; reps that are brand-new node
-                # ids add rows whose old_id matches no historical edge
-                ctype = F.substring_index(F.col("rep"), "|", 1)
-                changed_ids = changed.select(
-                    F.xxhash64(ctype, F.col("rep")).alias("old_id"),
-                    F.xxhash64(ctype, F.col("component")).alias("new_id"),
-                ).distinct()
-                splits = changed_ids.groupBy("old_id").agg(
-                    F.count_distinct("new_id").alias("n_new")
-                )
-                remap = changed_ids.join(splits, "old_id").persist()
-            else:
-                remap = graph.component_remap(prev_assign, assignments).persist()
-            # a component SPLIT (possible only if LSH candidate caps
-            # dropped previously-found links) makes old-edge remapping
-            # ambiguous — rebuild from merged triples instead
-            if remap.filter(F.col("n_new") > 1).limit(1).count() > 0:
-                use_delta = False
-        # nodes/edges get the same bucket-pruned treatment as
-        # assignments (round 6, VERDICT r5 #1): nodes hive-partitioned
-        # by (type, nb = pmod(xxhash64(entity_id), GRAPH_BUCKETS)) with
-        # new DOC nodes appended into a per-batch partition (a DOC id
-        # is a pure function of the url, so it never mutates); edges by
-        # (pred, eb = pmod(xxhash64(src), GRAPH_BUCKETS)) with
-        # DOC-subject delta edges appended per batch (a first-time-
-        # processed url's src can never collide with an existing
-        # (src, dst, pred) group). A delta tick rewrites only buckets
-        # holding a remapped endpoint, an entity whose membership or
-        # mention counts changed, or an entity-subject delta edge; the
-        # columnar scans that LOCATE those rows remain O(table) reads,
-        # but the write drops from a full-table rewrite to O(affected
-        # buckets). Content identity with the unpruned rebuild is
-        # pinned by test_incremental_pipeline.
-        import shutil as _sh
-
+        # nodes/edges get the same bucket-pruned treatment: new DOC
+        # nodes append into a per-batch partition (a DOC id is a pure
+        # function of the url, so it never mutates), and so do
+        # DOC-subject delta edges (a first-time-processed url's src can
+        # never collide with an existing (src, dst, pred) group). A
+        # delta tick rewrites only buckets holding a remapped endpoint,
+        # an entity whose membership or mention counts changed, or an
+        # entity-subject delta edge; the columnar scans that LOCATE
+        # those rows remain O(table) reads, but the write drops from a
+        # full-table rewrite to O(affected buckets).
         nb_of = lambda c: F.pmod(F.xxhash64(c), F.lit(GRAPH_BUCKETS))  # noqa: E731
         node_cols = ["entity_id", "canonical", "type", "n_mentions"]
-        if use_delta and (not graph_bucketed or changed is None):
-            # pre-bucketing layout on disk (or an assignments-layout
-            # upgrade tick, which lacks the delta remap): one full
-            # relayout rebuild; later ticks prune
-            use_delta = False
         if use_delta:
+            prev_nodes_lazy = prev_tail["nodes"]
+            prev_edges_lazy = prev_tail["edges"]
+            prev_doc_nodes = prev_nodes_lazy.filter(F.col("type") == "DOC")
+            # entity-id remap from the rep remap (component strings carry
+            # their type as the "type|" prefix): one row per changed rep,
+            # so one new id per old id. Reps that are brand-new node ids
+            # add rows whose old_id matches no historical edge
+            ctype = F.substring_index(F.col("rep"), "|", 1)
+            remap = changed.select(
+                F.xxhash64(ctype, F.col("rep")).alias("old_id"),
+                F.xxhash64(ctype, F.col("component")).alias("new_id"),
+            )
             trip_delta_dir = f"{out_dir}/triples/batch_id={batch_id}"
             trip_delta = (
                 spark.read.parquet(trip_delta_dir)
                 if os.path.exists(trip_delta_dir)
                 else spark.createDataFrame([], schemas.TRIPLES)
             )
-            ent_all, surface_map = graph.entity_nodes(keys, assignments)
+            _, surface_map = graph.entity_nodes(keys, assignments)
             smap = F.broadcast(surface_map) if broadcast_map else surface_map
-            rm_rows = remap.select("old_id", "new_id").collect()
-            old_list = [r.old_id for r in rm_rows]
-            rm = F.broadcast(remap.select("old_id", "new_id"))
-
+            old_list = [r.old_id for r in remap.collect()]
+            rm = F.broadcast(remap)
             # ---- nodes: affected components = remapped ones + those
             # whose member freqs this batch's surfaces delta touched
             surf_delta_dir = f"{out_dir}/surfaces/batch_id={batch_id}"
@@ -868,9 +761,8 @@ def run_pipeline_incremental(
                 F.broadcast(new_comps), "component", "leftsemi"
             ).select("type", "norm", "component")
             ent_aff, _ = graph.entity_nodes(keys, memb)
-            ctype2 = F.substring_index(F.col("rep"), "|", 1)
             stale_ids = changed.select(
-                ctype2.alias("type"), F.xxhash64(ctype2, F.col("rep")).alias("entity_id")
+                ctype.alias("type"), F.xxhash64(ctype, F.col("rep")).alias("entity_id")
             ).distinct()
             new_doc = graph.doc_nodes(trip_delta).join(
                 prev_doc_nodes.select("entity_id"), "entity_id", "left_anti"
@@ -909,7 +801,7 @@ def run_pipeline_incremental(
                 .localCheckpoint(eager=True)
             )
             for t, n in sorted(n_pairs):
-                _sh.rmtree(f"{out_dir}/nodes/type={t}/nb={n}", ignore_errors=True)
+                shutil.rmtree(f"{out_dir}/nodes/type={t}/nb={n}", ignore_errors=True)
 
             # ---- edges: remapped rows move/merge; DOC-subject delta
             # rows append; entity-subject delta rows merge
@@ -968,10 +860,10 @@ def run_pipeline_incremental(
                 .localCheckpoint(eager=True)
             )
             for p, eb in sorted(e_pairs):
-                _sh.rmtree(f"{out_dir}/edges/pred={p}/eb={eb}", ignore_errors=True)
+                shutil.rmtree(f"{out_dir}/edges/pred={p}/eb={eb}", ignore_errors=True)
 
             nodes_df, edges_df = nodes_out, edges_out
-            nodes_mode = edges_mode = "append"
+            write_mode = "append"
         else:
             nodes_full, edges_full = graph.materialize_graph(
                 _merged("triples").drop("batch_id"), keys, assignments,
@@ -985,19 +877,11 @@ def run_pipeline_incremental(
                 edges_full.withColumn("eb", nb_of(F.col("src")))
                 .repartition("pred", "eb")
             )
-            nodes_mode = edges_mode = "overwrite"
-        # same independent-write overlap as the batch pipeline (§2.6)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_nodes = pool.submit(
-                tail_stage, "nodes", lambda: nodes_df, ["type", "nb"], nodes_mode
-            )
-            f_edges = pool.submit(
-                tail_stage, "edges", lambda: edges_df, ["pred", "eb"], edges_mode
-            )
-            f_nodes.result()
-            f_edges.result()
+            write_mode = "overwrite"
+        _write_nodes_edges(
+            stage, nodes_df, edges_df, ["type", "nb"], ["pred", "eb"],
+            mode=write_mode,
+        )
         run.results["edges"].metrics = {
             "tail_mode": "delta" if use_delta else "full"
         }

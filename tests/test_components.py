@@ -170,7 +170,7 @@ def test_assign_components_delta_random_merge_cases(spark):
     import random
 
     from pdfmef_spark.operators.components import (
-        assign_components, assign_components_delta,
+        assign_components, assign_components_delta, delta_component_remap,
     )
 
     universe = [f"n{i:02d}" for i in range(20)]
@@ -195,6 +195,10 @@ def test_assign_components_delta_random_merge_cases(spark):
             spark.createDataFrame([], l))
         dl = spark.createDataFrame(delta_links, l)
         prev = assign_components(old_keys, ol)
+        # one row per representative: the pipeline's entity-id remap
+        # relies on it (one new id per old id, so no split to probe for)
+        reps = [r.rep for r in delta_component_remap(prev, dl).collect()]
+        assert len(reps) == len(set(reps)), f"seed {seed}: duplicate rep"
         got = {
             tuple(r)
             for r in assign_components_delta(prev, dl, new_keys).collect()

@@ -185,35 +185,119 @@ def test_delta_tail_three_batches_byte_identical(spark, smoke_pages, tmp_path):
     assert a == b
 
 
-def test_delta_tail_plan_never_scans_historical_triples(spark, smoke_pages, tmp_path):
-    """The delta tail's edges plan reads prev_edges + the CURRENT batch's
-    triples partition + the vocab — never earlier batch partitions
-    (O(delta + vocab + prev graph) input, the fix for the round-4
-    'tail re-reads the full triples table' debt)."""
-    from pdfmef_spark.operators import components, graph, linking
+def _record_frames(monkeypatch, *methods):
+    """Record, from now on, the DataFrame behind every call of the given
+    (class, method name) pairs; a DataFrameWriter call records the frame
+    it writes."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    seen = []
+    for cls, name in methods:
+        def rec(self, *args, _orig=getattr(cls, name), **kwargs):
+            seen.append(self._df if isinstance(self, DataFrameWriter) else self)
+            return _orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, name, rec)
+    return seen
+
+
+def _scan_roots(df):
+    """Root paths of every parquet file scan in ``df``'s physical plan."""
+    roots = []
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec":
+            paths = leaf.relation().location().rootPaths()
+            for k in range(paths.size()):
+                roots.append(paths.apply(k).toUri().getPath().rstrip("/"))
+    return roots
+
+
+def test_delta_tail_plan_never_scans_historical_triples(
+    spark, smoke_pages, tmp_path, monkeypatch
+):
+    """A delta tick reads the CURRENT batch's triples partition and
+    never the triples table as a whole: of every frame tick 2
+    checkpoints or writes, the only triples scan is
+    ``triples/batch_id=1`` (tail input O(delta + vocab + prev graph),
+    not O(all triples))."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    pages = smoke_pages
+    b = F.pmod(F.xxhash64("url"), F.lit(3))
+    inc_dir = os.path.realpath(str(tmp_path / "inc"))
+    P.run_pipeline_incremental(spark, pages.filter(b == 0), inc_dir)
+    df_cls = type(spark.range(1))
+    seen = _record_frames(
+        monkeypatch, (df_cls, "localCheckpoint"), (DataFrameWriter, "parquet")
+    )
+    r2 = P.run_pipeline_incremental(spark, pages, inc_dir)
+    monkeypatch.undo()
+    assert r2.results["edges"].metrics["tail_mode"] == "delta"
+
+    triples_dir = f"{inc_dir}/triples"
+    triples_roots = {
+        r for df in seen for r in _scan_roots(df)
+        if r == triples_dir or r.startswith(triples_dir + "/")
+    }
+    assert triples_roots == {f"{triples_dir}/batch_id=1"}
+
+
+def test_legacy_layout_tick_rebuilds_full(spark, smoke_pages, tmp_path):
+    """A store whose assignments/nodes/edges predate the bucket columns
+    (cb/nb/eb) gets one full relayout rebuild of the tail, even on a
+    delta-links tick: the tick writes the bucket columns again and still
+    equals a from-scratch run."""
+    import shutil
 
     pages = smoke_pages
     b = F.pmod(F.xxhash64("url"), F.lit(3))
     inc_dir = str(tmp_path / "inc")
     P.run_pipeline_incremental(spark, pages.filter(b == 0), inc_dir)
-    P.run_pipeline_incremental(spark, pages, inc_dir)
+    # the pre-bucketing layout: flat assignments, nodes by type, edges
+    # by pred (the run_pipeline shape)
+    legacy = {"assignments": ("cb", []), "nodes": ("nb", ["type"]), "edges": ("eb", ["pred"])}
+    for st, (bucket_col, parts) in legacy.items():
+        tmp = str(tmp_path / f"legacy_{st}")
+        spark.read.parquet(f"{inc_dir}/{st}").drop(bucket_col).write.partitionBy(
+            *parts
+        ).parquet(tmp)
+        shutil.rmtree(f"{inc_dir}/{st}")
+        shutil.move(tmp, f"{inc_dir}/{st}")
+        assert bucket_col not in spark.read.parquet(f"{inc_dir}/{st}").columns
 
-    # rebuild the exact delta-tail plan the pipeline ran for batch 2
-    keys = (
-        spark.read.parquet(f"{inc_dir}/surfaces")
-        .groupBy("type", "norm", "surface")
-        .agg(F.sum("freq").alias("freq"))
-    )
-    assignments = spark.read.parquet(f"{inc_dir}/assignments")
-    prev_doc_nodes = spark.read.parquet(f"{inc_dir}/nodes").filter(F.col("type") == "DOC")
-    prev_edges = spark.read.parquet(f"{inc_dir}/edges")
-    remap = graph.component_remap(assignments, assignments)
-    trip_delta = spark.read.parquet(f"{inc_dir}/triples/batch_id=1")
-    _, edges_df = graph.materialize_graph_delta(
-        trip_delta, keys, assignments, prev_doc_nodes, prev_edges, remap
-    )
-    plan = edges_df._jdf.queryExecution().executedPlan().toString()
-    assert "batch_id=0" not in plan
+    r2 = P.run_pipeline_incremental(spark, pages.filter(b != 2), inc_dir)
+    assert r2.results["links"].metrics["links_mode"] == "delta"
+    assert r2.results["assignments"].metrics["assignments_mode"] == "full"
+    assert r2.results["edges"].metrics["tail_mode"] == "full"
+    for st, (bucket_col, _) in legacy.items():
+        assert bucket_col in spark.read.parquet(f"{inc_dir}/{st}").columns, st
+    run_full = P.run_pipeline(spark, pages.filter(b != 2), str(tmp_path / "full"))
+    assert _graph_sets(r2) == _graph_sets(run_full)
+
+
+def test_delta_tick_leaves_nothing_cached(spark, smoke_pages, tmp_path, monkeypatch):
+    """Every frame a delta tick persists is unpersisted by the time the
+    tick returns: a streaming driver runs one tick per micro-batch, so a
+    frame left cached per tick grows the block store without bound."""
+    from pyspark import StorageLevel
+
+    pages = smoke_pages
+    b = F.pmod(F.xxhash64("url"), F.lit(3))
+    inc_dir = str(tmp_path / "inc")
+    P.run_pipeline_incremental(spark, pages.filter(b == 0), inc_dir)
+
+    df_cls = type(spark.range(1))
+    persisted = _record_frames(monkeypatch, (df_cls, "persist"), (df_cls, "cache"))
+    r2 = P.run_pipeline_incremental(spark, pages.filter(b != 2), inc_dir)
+    monkeypatch.undo()
+    assert r2.results["edges"].metrics["tail_mode"] == "delta"
+    assert persisted, "a delta tick persists its shared inputs"
+    leaked = [df for df in persisted if df.storageLevel != StorageLevel.NONE]
+    assert not leaked, [df.columns for df in leaked]
 
 
 def test_delta_tail_crash_retry_falls_back_to_full(spark, smoke_pages, tmp_path):

@@ -209,7 +209,7 @@ def assign_components(keys: DataFrame, links: DataFrame) -> DataFrame:
 def delta_component_remap(prev_assign: DataFrame, delta_links: DataFrame) -> DataFrame:
     """(rep, component): merged id per representative touched by delta
     links — the O(delta) core of :func:`assign_components_delta`,
-    exposed separately (round 6) so the pipeline can prune its bucketed
+    exposed separately so the pipeline can prune its bucketed
     assignment writes to only the components this remap actually moves.
 
     Endpoints of delta links map to their current representative
@@ -271,7 +271,6 @@ def assign_components_delta(
     keys/links is pinned by tests (operator-level and pipeline
     byte-identity).
     """
-    node_of = F.concat_ws("|", "type", "norm")
     remap = delta_component_remap(prev_assign, delta_links)
     old_part = (
         prev_assign.join(remap, prev_assign["component"] == remap["rep"], "left")
@@ -281,7 +280,16 @@ def assign_components_delta(
             F.coalesce(remap["component"], prev_assign["component"]).alias("component"),
         )
     )
-    new_part = (
+    return old_part.unionByName(place_new_norms(new_norms, remap))
+
+
+def place_new_norms(new_norms: DataFrame, remap: DataFrame) -> DataFrame:
+    """(type, norm, component) for norms first seen this tick: the
+    merged id from the :func:`delta_component_remap` output ``remap``
+    when a delta link reached the norm's own node, else the singleton
+    component named by that node id."""
+    node_of = F.concat_ws("|", "type", "norm")
+    return (
         new_norms.select("type", "norm")
         .distinct()
         .withColumn("node", node_of)
@@ -291,4 +299,3 @@ def assign_components_delta(
             F.coalesce(remap["component"], F.col("node")).alias("component"),
         )
     )
-    return old_part.unionByName(new_part)

@@ -13,13 +13,20 @@ Scale notes:
   * MinHash-LSH: bands -> bucket self-join with frequency cap;
   * SimHash: 64-bit signature via token-hash bit voting, then
     band-split (4x16-bit) exact-match blocking for hamming<=k search;
-  * embedding cosine: block by LSH sign-bits of random projections.
+  * embedding cosine: block by LSH sign-bits of random projections;
+  * incremental MinHash / n-gram paths take their delta candidates from
+    the LSH blocking kernel in operators/linking.py
+    (``delta_bucket_pairs``: capped in-bucket pair expansion plus
+    cap-crossing detection), then share one exact-Jaccard verify
+    (``_verify_jaccard``) with the full paths.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
+
+from pdfmef_spark.operators import linking
 
 # Persisted intermediates of the four pair generators, in creation
 # order. CacheManager holds cached plans STRONGLY until an explicit
@@ -95,6 +102,30 @@ def word_shingles(col, k: int = 3):
     )
 
 
+def _shingle_base(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """(id, sh): each document's distinct word k-gram array."""
+    return docs.select(
+        F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
+    )
+
+
+def _verify_jaccard(cand: DataFrame, base: DataFrame, threshold: float) -> DataFrame:
+    """(a, b, jaccard): candidate pairs whose exact shingle Jaccard is
+    >= threshold. Both members' arrays are joined back from the (id, sh)
+    ``base`` only now, so blocking never shuffles shingle arrays."""
+    return (
+        cand.join(base.select(F.col("id").alias("a"), F.col("sh").alias("sh_a")), "a")
+        .join(base.select(F.col("id").alias("b"), F.col("sh").alias("sh_b")), "b")
+        .withColumn(
+            "jaccard",
+            F.size(F.array_intersect("sh_a", "sh_b"))
+            / F.size(F.array_union("sh_a", "sh_b")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
+    )
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     k: int = 3, threshold: float = 0.8, block_cap: int | None = 64,
@@ -122,9 +153,7 @@ def ngram_jaccard_pairs(
     cap below, measured warm at sf0.1: 13.0 s -> 8.9 s capped (within
     noise of uncapped), identical 256-pair result.
     """
-    base = docs.select(
-        F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
-    )
+    base = _shingle_base(docs, id_col, text_col, k)
     if materialize:
         base = _persist(base)
     ex = base.select("id", F.explode("sh").alias("g"))
@@ -162,18 +191,7 @@ def ngram_jaccard_pairs(
         .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
         .distinct()
     )
-    pairs = (
-        cand.join(base.select(F.col("id").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(base.select(F.col("id").alias("b"), F.col("sh").alias("sh_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return pairs
+    return _verify_jaccard(cand, base, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -190,6 +208,20 @@ def minhash_signature(shingle_col, n_hashes: int = 64):
         F.sequence(F.lit(0), F.lit(n_hashes - 1)),
         lambda i: F.array_min(F.transform(shingle_col, lambda s: F.xxhash64(s, i))),
     )
+
+
+def _minhash_bands(base: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
+    """(id, band, bh): the banded MinHash bucket table of an (id, sh)
+    base — each band hashes its n_hashes // n_bands signature rows."""
+    r = n_hashes // n_bands
+    sig = base.withColumn("sig", minhash_signature(F.col("sh"), n_hashes))
+    band_arr = F.transform(
+        F.sequence(F.lit(0), F.lit(n_bands - 1)),
+        lambda b: F.xxhash64(
+            *[F.element_at(F.col("sig"), b * r + j + 1) for j in range(r)]
+        ),
+    )
+    return sig.select("id", F.posexplode(band_arr).alias("band", "bh"))
 
 
 def minhash_dedup_pairs(
@@ -213,10 +245,7 @@ def minhash_dedup_pairs(
     asymmetry defeats exchange reuse — the simhash_dedup_pairs
     analysis); measured at sf0.1: 17.2 s -> 13.9 s warm, identical
     256-pair result."""
-    r = n_hashes // n_bands
-    base = docs.select(
-        F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
-    ).filter(F.size("sh") > 0)
+    base = _shingle_base(docs, id_col, text_col, k).filter(F.size("sh") > 0)
     if materialize:
         base = _persist(base)
     # Signature + banding stay on the interpreted nested-transform path
@@ -230,14 +259,7 @@ def minhash_dedup_pairs(
     # and reverted: unlike the ngram path, the window's (band, bh)
     # exchange is exactly the partitioning the bucket self-join reuses,
     # so replacing it ADDS an exchange (50k docs: 23.4 s).
-    sig = base.withColumn("sig", minhash_signature(F.col("sh"), n_hashes))
-    band_arr = F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
-        lambda b: F.xxhash64(
-            *[F.element_at(F.col("sig"), b * r + j + 1) for j in range(r)]
-        ),
-    )
-    bands = sig.select("id", F.posexplode(band_arr).alias("band", "bh"))
+    bands = _minhash_bands(base, n_hashes, n_bands)
     if materialize:
         bands = _persist(bands)
     w = W.partitionBy("band", "bh")
@@ -255,17 +277,7 @@ def minhash_dedup_pairs(
         .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
         .dropDuplicates(["a", "b"])
     )
-    return (
-        cand.join(base.select(F.col("id").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(base.select(F.col("id").alias("b"), F.col("sh").alias("sh_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= verify_threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _verify_jaccard(cand, base, verify_threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -567,8 +579,8 @@ def embedding_dup_pairs(
 
 
 # ---------------------------------------------------------------------------
-# Incremental dedup (round 6, VERDICT r5 #4 — the linking delta design
-# transferred): block keys are pure functions of the text, so per-batch
+# Incremental dedup, on the blocking kernel in operators/linking.py
+# (delta_bucket_pairs): block keys are pure functions of the text, so per-batch
 # key tables are append-only; candidate generation expands only buckets
 # a NEW document landed in and emits only pairs with >= 1 new member.
 # Pairs among old members were candidates on an earlier batch, so the
@@ -576,7 +588,7 @@ def embedding_dup_pairs(
 # survivors: accumulated ∪ delta == full recompute, UNLESS a touched
 # bucket CROSSED its cap this batch (its old pairs must vanish with the
 # bucket — only a full rebuild reproduces that), which is detected and
-# returned for fallback exactly like linking.delta_candidate_pairs.
+# returned for fallback by the same kernel incremental linking uses.
 # ---------------------------------------------------------------------------
 
 
@@ -587,18 +599,8 @@ def minhash_block_keys(
     """(id, band, bh): the banded MinHash bucket table — a pure function
     of the text, identical to the blocking table minhash_dedup_pairs
     builds internally, exposed so batches can persist their keys once."""
-    r = n_hashes // n_bands
-    base = docs.select(
-        F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
-    ).filter(F.size("sh") > 0)
-    sig = base.withColumn("sig", minhash_signature(F.col("sh"), n_hashes))
-    band_arr = F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
-        lambda b: F.xxhash64(
-            *[F.element_at(F.col("sig"), b * r + j + 1) for j in range(r)]
-        ),
-    )
-    return sig.select("id", F.posexplode(band_arr).alias("band", "bh"))
+    base = _shingle_base(docs, id_col, text_col, k).filter(F.size("sh") > 0)
+    return _minhash_bands(base, n_hashes, n_bands)
 
 
 def ngram_block_keys(
@@ -606,62 +608,24 @@ def ngram_block_keys(
 ) -> DataFrame:
     """(id, g): exploded word-k-gram blocking keys (the gram STRING, so
     the delta cap counts true grams exactly like the full path)."""
-    base = docs.select(
-        F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
-    )
+    base = _shingle_base(docs, id_col, text_col, k)
     return base.select("id", F.explode("sh").alias("g"))
 
 
-def _delta_bucket_pairs(
-    keyed_all: DataFrame, key_cols: list[str], cap: int
+def _jaccard_pairs_delta(
+    docs: DataFrame, keyed_all: DataFrame, key_cols: list[str], cap: int,
+    id_col: str, text_col: str, k: int, threshold: float,
 ) -> tuple[DataFrame, DataFrame]:
-    """Delta candidate pairs over an accumulated (id, *key_cols,
-    is_new) key table: only buckets touched by a new id expand, only
-    pairs with >= 1 new member emit. Returns (pairs(a, b), crossed) —
-    ``crossed`` non-empty iff a touched bucket crossed its cap with
-    >= 2 pre-existing members (caller must fall back to full)."""
-    touched = keyed_all.filter(F.col("is_new")).select(*key_cols).distinct()
-    members = keyed_all.join(touched, key_cols)
-    w = W.partitionBy(*key_cols)
-    sized = members.withColumn("n", F.count(F.lit(1)).over(w)).withColumn(
-        "n_new", F.sum(F.col("is_new").cast("int")).over(w)
-    )
-    crossed = sized.filter(
-        (F.col("n") > cap)
-        & (F.col("n") - F.col("n_new") >= 2)
-        & (F.col("n") - F.col("n_new") <= cap)
-    ).select(*key_cols, "n", "n_new")
-    small = (
-        sized.filter((F.col("n") >= 2) & (F.col("n") <= cap))
-        .groupBy(*key_cols)
-        .agg(F.array_sort(F.collect_set(F.struct("id", "is_new"))).alias("ms"))
-    )
-    pairs = small.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ms"),
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("ms"), i + 2,
-                            F.greatest(F.size("ms") - i - 1, F.lit(0)),
-                        ),
-                        lambda y: F.struct(
-                            x["id"].alias("a"),
-                            y["id"].alias("b"),
-                            (x["is_new"] | y["is_new"]).alias("keep"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
-    )
-    return (
-        pairs.filter(F.col("p.keep"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .distinct(),
-        crossed,
-    )
+    """Delta candidates from the shared blocking kernel, then exact
+    Jaccard verification. Shingle arrays are computed ONLY for candidate
+    members (a semi-join against the docs table), so the per-batch cost
+    is O(new-touched buckets + candidates), never a corpus re-shingle."""
+    cand, crossed = linking.delta_bucket_pairs(keyed_all, key_cols, "id", cap)
+    ids = cand.select(F.col("a").alias("id")).union(
+        cand.select(F.col("b").alias("id"))
+    ).distinct()
+    sh = _shingle_base(docs, id_col, text_col, k).join(ids, "id", "leftsemi")
+    return _verify_jaccard(cand, sh, threshold), crossed
 
 
 def minhash_dedup_pairs_delta(
@@ -672,35 +636,14 @@ def minhash_dedup_pairs_delta(
     """Incremental MinHash near-dup pairs.
 
     ``keyed_all``: union of every batch's :func:`minhash_block_keys`
-    output plus ``is_new`` marking ids first seen THIS batch. Shingle
-    arrays for exact-Jaccard verification are computed ONLY for
-    candidate members (a semi-join against the docs table), so the
-    per-batch cost is O(new-touched buckets + candidates), never a
-    corpus re-shingle. accumulated_pairs ∪ delta == full recompute
-    (pinned by tests) unless ``crossed`` is non-empty.
+    output plus ``is_new`` marking ids first seen THIS batch.
+    accumulated_pairs ∪ delta == full recompute (pinned by tests)
+    unless ``crossed`` is non-empty.
     """
-    cand, crossed = _delta_bucket_pairs(keyed_all, ["band", "bh"], bucket_cap)
-    ids = cand.select(F.col("a").alias("id")).union(
-        cand.select(F.col("b").alias("id"))
-    ).distinct()
-    sh = (
-        docs.select(
-            F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
-        )
-        .join(ids, "id", "leftsemi")
+    return _jaccard_pairs_delta(
+        docs, keyed_all, ["band", "bh"], bucket_cap,
+        id_col, text_col, k, verify_threshold,
     )
-    pairs = (
-        cand.join(sh.select(F.col("id").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(sh.select(F.col("id").alias("b"), F.col("sh").alias("sh_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= verify_threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return pairs, crossed
 
 
 def ngram_jaccard_pairs_delta(
@@ -710,28 +653,9 @@ def ngram_jaccard_pairs_delta(
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental capped n-gram Jaccard pairs; ``keyed_all`` is the
     accumulated :func:`ngram_block_keys` union with ``is_new``."""
-    cand, crossed = _delta_bucket_pairs(keyed_all, ["g"], block_cap)
-    ids = cand.select(F.col("a").alias("id")).union(
-        cand.select(F.col("b").alias("id"))
-    ).distinct()
-    sh = (
-        docs.select(
-            F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
-        )
-        .join(ids, "id", "leftsemi")
+    return _jaccard_pairs_delta(
+        docs, keyed_all, ["g"], block_cap, id_col, text_col, k, threshold
     )
-    pairs = (
-        cand.join(sh.select(F.col("id").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(sh.select(F.col("id").alias("b"), F.col("sh").alias("sh_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return pairs, crossed
 
 
 # ---------------------------------------------------------------------------

@@ -16,12 +16,18 @@ Scale design (the part that must survive 10^12 docs):
     problem pdfmef's `cites` edges have);
   * only the final pair scoring (token/initialism logic) is Python, as
     a vectorized Arrow batch over the (small) candidate-pair set.
+
+This module holds the one LSH blocking kernel: the capped in-bucket
+pair expansion (:func:`_expand_pairs`) and the delta-candidate function
+with cap-crossing detection (:func:`delta_bucket_pairs`). Near-duplicate
+detection (operators/dedup.py) calls the same kernel for its
+incremental paths.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 from pdfmef_spark.functions import char_shingles, normalize_surface
 
@@ -42,52 +48,20 @@ def surface_keys(mentions: DataFrame) -> DataFrame:
     )
 
 
-def _band_hashes(shingle_col):
-    """Array of N_BANDS band hashes from JVM-side MinHash signatures.
-
-    One compact nested expression — hash index rides as a lambda
-    variable into xxhash64(shingle, idx). (Unrolling 64 copies of
-    array_min(transform(...)) makes Janino compile a huge generated
-    class: ~15-20 s of fixed plan-compile latency per job.)
-
-    NOTE: higher-order functions are CodegenFallback — every one of the
-    64 x n_shingles xxhash64 evaluations here runs interpreted. Kept for
-    the small-vocabulary / single-projection path and tests;
-    :func:`minhash_signatures` is the measured-faster production path
-    (3.5x on a 120k-surface vocabulary) used by candidate_pairs.
-    """
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(N_HASHES - 1)),
-        lambda i: F.array_min(F.transform(shingle_col, lambda s: F.xxhash64(s, i))),
-    )
-
-    def bands_of(sig_col):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
-            lambda b: F.xxhash64(
-                *[
-                    F.element_at(sig_col, b * ROWS_PER_BAND + r + 1)
-                    for r in range(ROWS_PER_BAND)
-                ]
-            ),
-        )
-
-    return sig, bands_of
-
-
 def minhash_signatures(norms: DataFrame) -> DataFrame:
     """(type, norm, h0..h63) MinHash signatures, whole-stage-codegen —
-    bit-identical to the `_band_hashes` signature array, with no
-    interpreted higher-order functions in the per-row hot path.
+    bit-identical to ``dedup.minhash_signature(char_shingles(norm),
+    N_HASHES)``, with no interpreted higher-order functions in the
+    per-row hot path.
 
     Shape: explode each (type, norm) into its 3-char shingles, compute
     the 64 seeded ``xxhash64(shingle, seed)`` columns INLINE in the
-    projection (plain codegen expressions — the same hash values the
-    lambda path computes), then 64 algebraic ``min`` aggregates per
-    (type, norm). Exactly one exchange (the vocabulary-sized groupBy),
-    and map-side partial min aggregation absorbs the ~avg_len-per-norm
-    exploded rows before the shuffle — the shape that survives a
-    10^12-doc vocabulary.
+    projection (plain codegen expressions — the same hash values
+    ``dedup.minhash_signature`` computes), then 64 algebraic ``min``
+    aggregates per (type, norm). Exactly one exchange (the
+    vocabulary-sized groupBy), and map-side partial min aggregation
+    absorbs the ~avg_len-per-norm exploded rows before the shuffle —
+    the shape that survives a 10^12-doc vocabulary.
 
     Measured (120k-surface stress vocabulary, local[32]): the whole
     candidate-generation stage dropped 44.8 s -> ~13 s vs the
@@ -107,6 +81,51 @@ def minhash_signatures(norms: DataFrame) -> DataFrame:
     return hashed.groupBy("type", "norm").agg(
         *[F.min(f"h{i}").alias(f"h{i}") for i in range(N_HASHES)]
     )
+
+
+def _block_cap():
+    """Per-row member cap of a (type, bkey) bucket: BUCKET_CAP for LSH
+    band buckets ("b:"), TOKEN_BLOCK_CAP for token / prefix blocks
+    ("t:"/"p:"). Built at call time, so a patched module cap applies."""
+    return F.when(
+        F.col("bkey").startswith("b:"), F.lit(BUCKET_CAP)
+    ).otherwise(F.lit(TOKEN_BLOCK_CAP))
+
+
+def _expand_pairs(member: str | None = None):
+    """explode() of every pair of a bucket's sorted ``members`` array
+    into a struct column ``p`` with fields (a, b), a before b.
+
+    The expansion (transform x slice) is bucket-local and JVM-side, so
+    the quadratic pair space never leaves its bucket. Members are plain
+    values on the full path. On the delta path they are
+    ``struct(<member>, is_new)`` with ``member`` naming the value field,
+    and each pair also carries ``keep`` = either side is new.
+    """
+    def pair(x, y):
+        if member is None:
+            return F.struct(x.alias("a"), y.alias("b"))
+        return F.struct(
+            x[member].alias("a"),
+            y[member].alias("b"),
+            (x["is_new"] | y["is_new"]).alias("keep"),
+        )
+
+    return F.explode(
+        F.flatten(
+            F.transform(
+                F.col("members"),
+                lambda x, i: F.transform(
+                    F.slice(
+                        F.col("members"),
+                        i + 2,
+                        F.greatest(F.size("members") - i - 1, F.lit(0)),
+                    ),
+                    lambda y: pair(x, y),
+                ),
+            )
+        )
+    ).alias("p")
 
 
 def _bucket_pairs_capped(keyed: DataFrame, cap_obs=None) -> DataFrame:
@@ -141,11 +160,7 @@ def _bucket_pairs_capped(keyed: DataFrame, cap_obs=None) -> DataFrame:
     count-then-semi-join variant was measured and replaced: its two
     plan branches recomputed the MinHash subtree twice per action).
     """
-    from pyspark.sql import Window as W
-
-    cap = F.when(
-        F.col("bkey").startswith("b:"), F.lit(BUCKET_CAP)
-    ).otherwise(F.lit(TOKEN_BLOCK_CAP))
+    cap = _block_cap()
     w = W.partitionBy("type", "bkey")
     # keyed is distinct in (type, bkey, norm) — each norm tags each of
     # its block keys exactly once — so the window count == member count
@@ -165,24 +180,7 @@ def _bucket_pairs_capped(keyed: DataFrame, cap_obs=None) -> DataFrame:
         .groupBy("type", "bkey")
         .agg(F.array_sort(F.collect_set("norm")).alias("members"))
     )
-    pairs = small.select(
-        F.col("type"),
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("members"),
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("members"),
-                            i + 2,
-                            F.greatest(F.size("members") - i - 1, F.lit(0)),
-                        ),
-                        lambda y: F.struct(x.alias("a"), y.alias("b")),
-                    ),
-                )
-            )
-        ).alias("p"),
-    )
+    pairs = small.select(F.col("type"), _expand_pairs())
     return pairs.select("type", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
 
 
@@ -195,10 +193,8 @@ def candidate_pairs(keys: DataFrame, cap_obs=None) -> DataFrame:
     so candidate generation costs the norms distinct, the signature
     min-aggregate (see minhash_signatures), the (type, bkey) groupBy,
     and the final pair distinct. Per-family caps ride on the bkey
-    prefix. Signatures come from the codegen shingle-hash-join path;
-    the band keys below reproduce the exact same "b:<band>:<hash>"
-    strings as the lambda path, so the candidate set — and every
-    downstream link — is unchanged.
+    prefix. Signatures come from the codegen shingle-hash-join path
+    (minhash_signatures).
     """
     keyed = tag_block_keys(keys.select("type", "norm").distinct())
     pairs = _bucket_pairs_capped(keyed, cap_obs=cap_obs)
@@ -269,14 +265,31 @@ def delta_candidate_pairs(keyed_all: DataFrame) -> tuple[DataFrame, DataFrame]:
     full path, which drops them), so a perpetually hot block does not
     force a rebuild every tick — only its crossing tick does.
     """
-    from pyspark.sql import Window as W
+    return delta_bucket_pairs(
+        keyed_all, ["type", "bkey"], "norm", _block_cap(), carry=("type",)
+    )
 
-    touched = keyed_all.filter(F.col("is_new")).select("type", "bkey").distinct()
-    members = keyed_all.join(touched, ["type", "bkey"])
-    cap = F.when(
-        F.col("bkey").startswith("b:"), F.lit(BUCKET_CAP)
-    ).otherwise(F.lit(TOKEN_BLOCK_CAP))
-    w = W.partitionBy("type", "bkey")
+
+def delta_bucket_pairs(
+    keyed_all: DataFrame, key_cols: list[str], member: str, cap,
+    carry: tuple[str, ...] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """Delta candidate pairs over an accumulated (*key_cols, member,
+    is_new) key table — the one incremental blocking kernel, shared by
+    :func:`delta_candidate_pairs` and the dedup delta operators.
+
+    Only buckets touched by a new member are expanded, and only pairs
+    with >= 1 new member are emitted. ``cap`` is an int or a per-row
+    Column; buckets over it are skipped, as on the full paths.
+    ``carry`` names key columns kept on each pair.
+
+    Returns (pairs(*carry, a, b), crossed(*key_cols, n, n_new)).
+    ``crossed`` holds every touched bucket that crossed its cap with
+    >= 2 pre-existing members: the caller must rebuild in full.
+    """
+    touched = keyed_all.filter(F.col("is_new")).select(*key_cols).distinct()
+    members = keyed_all.join(touched, key_cols)
+    w = W.partitionBy(*key_cols)
     sized = members.withColumn("n", F.count(F.lit(1)).over(w)).withColumn(
         "n_new", F.sum(F.col("is_new").cast("int")).over(w)
     )
@@ -284,39 +297,18 @@ def delta_candidate_pairs(keyed_all: DataFrame) -> tuple[DataFrame, DataFrame]:
         (F.col("n") > cap)
         & (F.col("n") - F.col("n_new") >= 2)
         & (F.col("n") - F.col("n_new") <= cap)
-    ).select("type", "bkey", "n", "n_new")
+    ).select(*key_cols, "n", "n_new")
     small = (
         sized.filter((F.col("n") >= 2) & (F.col("n") <= cap))
-        .groupBy("type", "bkey")
-        # struct sort orders by norm (first field) — same member order
-        # as the full path's array_sort(collect_set(norm))
-        .agg(F.array_sort(F.collect_set(F.struct("norm", "is_new"))).alias("members"))
+        .groupBy(*key_cols)
+        # struct sort orders by the member (first field) — same member
+        # order as the full path's array_sort(collect_set(member))
+        .agg(F.array_sort(F.collect_set(F.struct(member, "is_new"))).alias("members"))
     )
-    pairs = small.select(
-        F.col("type"),
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("members"),
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("members"),
-                            i + 2,
-                            F.greatest(F.size("members") - i - 1, F.lit(0)),
-                        ),
-                        lambda y: F.struct(
-                            x["norm"].alias("a"),
-                            y["norm"].alias("b"),
-                            (x["is_new"] | y["is_new"]).alias("keep"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p"),
-    )
+    pairs = small.select(*carry, _expand_pairs(member))
     return (
         pairs.filter(F.col("p.keep"))
-        .select("type", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        .select(*carry, F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .distinct(),
         crossed,
     )

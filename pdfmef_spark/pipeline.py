@@ -300,11 +300,7 @@ def _write_nodes_edges(
 
 
 def refresh_analytics(
-    spark: SparkSession,
-    out_dir: str,
-    run: "PipelineRun",
-    run_id: str,
-    iterations: int = 3,
+    spark: SparkSession, run: "PipelineRun", iterations: int = 3
 ) -> None:
     """Recompute graph analytics (PageRank over the materialized edge
     table) into the ``pagerank`` stage dir.
@@ -321,14 +317,9 @@ def refresh_analytics(
     becomes worth its complexity is a number, not a guess."""
     from pdfmef_spark.operators import pagerank as pr_op
 
-    edges = spark.read.parquet(f"{out_dir}/edges")
-    t0 = time.time()
-    df = _write_stage(
-        spark, out_dir, run_id, "pagerank",
-        pr_op.pagerank(edges, iterations=iterations),
-    )
-    run.results["pagerank"] = StageResult(
-        "pagerank", df, recomputed=True, seconds=round(time.time() - t0, 2)
+    edges = spark.read.parquet(f"{run.out_dir}/edges")
+    _timed_stage(
+        spark, run, "pagerank", lambda: pr_op.pagerank(edges, iterations=iterations)
     )
 
 
@@ -397,7 +388,7 @@ def run_pipeline(
     finally:
         keys.unpersist()
     if analytics:
-        refresh_analytics(spark, out_dir, run, run_id)
+        refresh_analytics(spark, run)
     return run
 
 
@@ -428,7 +419,8 @@ def run_pipeline_incremental(
       links = previous links UNION the scored pairs touching a new norm.
       That is the full recompute unless a touched bucket crossed its cap
       this tick (its old pairs must vanish) or the tick is a crash-retry
-      (the links table already holds its delta); both rebuild links.
+      (its ``extracted/batch_id=<B>`` partition already exists, so the
+      links table may already hold its delta); both rebuild links.
     * assignments, nodes, edges take the delta path exactly when links
       did and the previous tail tables carry their bucket columns:
       assignments ``cb`` = pmod(xxhash64(component), ASSIGN_BUCKETS),
@@ -477,6 +469,12 @@ def run_pipeline_incremental(
                     name, spark.read.parquet(p), recomputed=False
                 )
         return run
+    # batch_id stays the same across retries until the ledger commits.
+    # If this batch already wrote its extracted partition, an earlier
+    # attempt crashed before the commit and may have folded its delta
+    # into the links/graph tables, so this retry must rebuild them
+    # instead of adding the delta again (whatever run_id it carries)
+    retry = os.path.exists(f"{out_dir}/extracted/batch_id={batch_id}")
     dyn = {"partitionOverwriteMode": "dynamic"}
     stage = functools.partial(_timed_stage, spark, run)
 
@@ -513,24 +511,6 @@ def run_pipeline_incremental(
             return run.results[stage_name].df
         return spark.read.parquet(stage_dir)
 
-    # a crash after the tail wrote but before the ledger committed
-    # re-runs the same batch: its delta is already folded into the
-    # links/graph tables, so that retry (same run_id as the last tail
-    # write in the manifest) must rebuild instead of adding it again
-    poisoned = False
-    if os.path.exists(_manifest_path(out_dir)):
-        m = spark.read.parquet(_manifest_path(out_dir))
-        last = (
-            m.filter(
-                (F.col("status") == "complete")
-                & F.col("stage").isin("links", "assignments", "nodes", "edges")
-            )
-            .orderBy(F.desc("updated_ts"))
-            .select("run_id")
-            .first()
-        )
-        poisoned = last is not None and last.run_id == run_id
-
     keys = (
         _merged("surfaces")
         .groupBy("type", "norm", "surface")
@@ -546,7 +526,7 @@ def run_pipeline_incremental(
         bk_dir = f"{out_dir}/bucket_keys"
         have_prev_bk = _has_parquet(bk_dir)
         links_delta_ok = (
-            not poisoned
+            not retry
             and have_prev_bk
             and os.path.exists(f"{out_dir}/links")
         )
@@ -629,24 +609,14 @@ def run_pipeline_incremental(
         # vanished in a merge.
         _cb = F.pmod(F.xxhash64("component"), F.lit(ASSIGN_BUCKETS))
         if use_delta:
-            new_norms_now = (
-                keyed_all.filter(F.col("is_new")).select("type", "norm").distinct()
-            )
             prev_a = prev_tail["assignments"]
             # one row per representative touched by the delta links
             remap_a = components.delta_component_remap(
                 prev_a.select("type", "norm", "component"), delta_links
             ).localCheckpoint(eager=True)
             changed = remap_a.filter(F.col("rep") != F.col("component"))
-            node_of = F.concat_ws("|", "type", "norm")
-            new_part = (
-                new_norms_now.distinct()
-                .withColumn("node", node_of)
-                .join(remap_a, F.col("node") == remap_a["rep"], "left")
-                .select(
-                    "type", "norm",
-                    F.coalesce(remap_a["component"], F.col("node")).alias("component"),
-                )
+            new_part = components.place_new_norms(
+                keyed_all.filter(F.col("is_new")), remap_a
             )
             aff = (
                 changed.select(F.col("rep").alias("c"))
@@ -890,7 +860,7 @@ def run_pipeline_incremental(
 
     if analytics:
         # recompute-from-merged-graph contract: see refresh_analytics
-        refresh_analytics(spark, out_dir, run, run_id)
+        refresh_analytics(spark, run)
 
     # ledger commit LAST: a crash anywhere above leaves the claim
     # unrecorded and the whole batch re-runs idempotently

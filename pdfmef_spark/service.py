@@ -48,8 +48,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pdfmef_spark import sinks
 from pdfmef_spark.operators import extract, triples
-
-MAX_UPLOAD_BYTES = 5 * 1024 * 1024  # the reference's cgi.maxlen cap
+from pdfmef_spark.streaming.ingest import UPLOAD_CAP_BYTES
 HEADER_PREDS = ("hasTitle", "hasAuthor", "hasKeyword", "affiliatedWith", "hasAbstract")
 _SINGLE_VALUED = ("hasTitle", "hasAbstract")
 
@@ -154,9 +153,9 @@ class DocService:
         (streaming/ingest.py) — one document schema everywhere — cast to
         the store's own schema (sinks.upsert_row)."""
         raw = html.encode("utf-8") if isinstance(html, str) else bytes(html)
-        if len(raw) > MAX_UPLOAD_BYTES:
+        if len(raw) > UPLOAD_CAP_BYTES:
             raise ValueError(
-                f"upload exceeds {MAX_UPLOAD_BYTES} bytes (reference 5 MB cap)"
+                f"upload exceeds {UPLOAD_CAP_BYTES} bytes (reference 5 MB cap)"
             )
         row = {
             "url": url,
@@ -261,7 +260,7 @@ def serve(service: DocService, port: int = 0):
             if self.path.rstrip("/") != "/extractor":
                 return self._send(404, "text/plain", "not found")
             n = int(self.headers.get("Content-Length", 0))
-            if n > MAX_UPLOAD_BYTES:
+            if n > UPLOAD_CAP_BYTES:
                 return self._send(413, "text/plain", "payload too large")
             try:
                 payload = json.loads(self.rfile.read(n))

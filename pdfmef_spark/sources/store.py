@@ -31,17 +31,6 @@ N_BUCKETS = 32
 CORPUS_VERSION = 4  # v4: planted figures (hasFigure) + ordered multi-affiliations
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    for t in TESTDATA_TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(t)
-
-
 def sf_of_dir(sf_dir: str) -> float:
     base = os.path.basename(sf_dir.rstrip("/"))
     if base.startswith("sf"):

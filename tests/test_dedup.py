@@ -353,9 +353,11 @@ def test_ngram_delta_equals_full_minus_old(spark, docs):
 
 
 def test_dedup_delta_detects_cap_crossing(spark):
-    """A gram bucket growing 2 -> 3 past cap=2 with two pre-existing
-    members must surface in `crossed` (full-recompute semantics drop
-    the whole bucket's old pairs, which a delta cannot reproduce)."""
+    """A bucket growing 2 -> 3 past cap=2 with two pre-existing members
+    must surface in `crossed` (full-recompute semantics drop the whole
+    bucket's old pairs, which a delta cannot reproduce) — for a gram
+    bucket on the n-gram path and for band buckets on the MinHash path
+    (identical texts share every band)."""
     mk = lambda i, txt: (i, txt)  # noqa: E731
     old_rows = [mk(1, "shared trigram anchor one"), mk(2, "shared trigram anchor two")]
     new_rows = [mk(3, "shared trigram anchor three")]
@@ -370,3 +372,18 @@ def test_dedup_delta_detects_cap_crossing(spark):
         both, keyed_all, threshold=0.9, block_cap=2
     )
     assert crossed.count() > 0
+
+    same = "the same near duplicate text in every copy"
+    old = spark.createDataFrame([mk(1, same), mk(2, same)], "doc_id long, text string")
+    new = spark.createDataFrame([mk(3, same)], "doc_id long, text string")
+    keyed_all = (
+        dedup.minhash_block_keys(old).withColumn("is_new", F.lit(False))
+        .unionByName(dedup.minhash_block_keys(new).withColumn("is_new", F.lit(True)))
+    )
+    pairs, crossed = dedup.minhash_dedup_pairs_delta(
+        old.unionByName(new), keyed_all, bucket_cap=2
+    )
+    assert {(r.band, r.n, r.n_new) for r in crossed.collect()} == {
+        (b, 3, 1) for b in range(16)
+    }
+    assert pairs.count() == 0  # every touched bucket is over cap

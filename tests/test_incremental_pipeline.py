@@ -303,9 +303,9 @@ def test_delta_tick_leaves_nothing_cached(spark, smoke_pages, tmp_path, monkeypa
 def test_delta_tail_crash_retry_falls_back_to_full(spark, smoke_pages, tmp_path):
     """A retry of a batch whose tail already wrote (crash before the
     ledger commit) must NOT delta-update — its edges are already folded
-    into prev_edges and would double-count. The manifest run_id guard
-    forces the idempotent full rebuild, and the result still matches
-    from-scratch."""
+    into prev_edges and would double-count. The batch's existing
+    extracted partition forces the idempotent full rebuild, and the
+    result still matches from-scratch."""
     import shutil
 
     pages = smoke_pages
@@ -323,6 +323,32 @@ def test_delta_tail_crash_retry_falls_back_to_full(spark, smoke_pages, tmp_path)
     # the links stage shares the poisoned-retry guard: prev links
     # already contain this batch's delta, so a delta union would dup
     assert retry.results["links"].metrics["links_mode"] == "full"
+    run_full = P.run_pipeline(spark, pages, str(tmp_path / "full"))
+    assert _links_set(retry) == _links_set(run_full)
+    assert _graph_sets(retry) == _graph_sets(run_full)
+
+
+def test_delta_tail_crash_retry_with_new_run_id_falls_back_to_full(
+    spark, smoke_pages, tmp_path
+):
+    """The crash-retry rule keys on the batch, not the run id: a retry
+    that passes its own run_id must still find its batch's extracted
+    partition and rebuild, instead of folding its delta into tables
+    that already hold it."""
+    import shutil
+
+    pages = smoke_pages
+    b = F.pmod(F.xxhash64("url"), F.lit(3))
+    inc_dir = str(tmp_path / "inc")
+    P.run_pipeline_incremental(spark, pages.filter(b == 0), inc_dir)
+    P.run_pipeline_incremental(spark, pages, inc_dir, run_id="attempt-1")
+    kept = spark.read.parquet(f"{inc_dir}/ledger").filter(F.col("batch_id") != 1)
+    rows, schema = kept.collect(), kept.schema
+    shutil.rmtree(f"{inc_dir}/ledger")
+    spark.createDataFrame(rows, schema).write.parquet(f"{inc_dir}/ledger")
+    retry = P.run_pipeline_incremental(spark, pages, inc_dir, run_id="attempt-2")
+    assert retry.results["links"].metrics["links_mode"] == "full"
+    assert retry.results["edges"].metrics["tail_mode"] == "full"
     run_full = P.run_pipeline(spark, pages, str(tmp_path / "full"))
     assert _links_set(retry) == _links_set(run_full)
     assert _graph_sets(retry) == _graph_sets(run_full)

@@ -124,6 +124,7 @@ def test_minhash_signatures_match_lambda_path(spark):
     same per-seed min), so swapping the production path changed NO
     candidate pair."""
     from pdfmef_spark.functions import char_shingles
+    from pdfmef_spark.operators import dedup
 
     norms = spark.createDataFrame(
         [("PERSON", n) for n in [
@@ -132,7 +133,7 @@ def test_minhash_signatures_match_lambda_path(spark):
         ]],
         "type string, norm string",
     )
-    sig_expr, _ = linking._band_hashes(char_shingles(F.col("norm")))
+    sig_expr = dedup.minhash_signature(char_shingles(F.col("norm")), linking.N_HASHES)
     via_lambda = {
         r.norm: list(r.sig)
         for r in norms.select("norm", sig_expr.alias("sig")).collect()

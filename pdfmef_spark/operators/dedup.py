@@ -580,9 +580,10 @@ def embedding_dup_pairs(
 
 # ---------------------------------------------------------------------------
 # Incremental dedup, on the blocking kernel in operators/linking.py
-# (delta_bucket_pairs): block keys are pure functions of the text, so per-batch
-# key tables are append-only; candidate generation expands only buckets
-# a NEW document landed in and emits only pairs with >= 1 new member.
+# (delta_bucket_pairs): block keys are pure functions of the text, so
+# per-batch key tables are append-only; candidate generation expands
+# only buckets a NEW document landed in and emits only pairs with >= 1
+# new member.
 # Pairs among old members were candidates on an earlier batch, so the
 # caller's accumulated pair table already holds their verified
 # survivors: accumulated ∪ delta == full recompute, UNLESS a touched

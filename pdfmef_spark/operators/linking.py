@@ -284,8 +284,9 @@ def delta_bucket_pairs(
     ``carry`` names key columns kept on each pair.
 
     Returns (pairs(*carry, a, b), crossed(*key_cols, n, n_new)).
-    ``crossed`` holds every touched bucket that crossed its cap with
-    >= 2 pre-existing members: the caller must rebuild in full.
+    ``crossed`` has one row per member of every touched bucket that
+    crossed its cap with >= 2 pre-existing members; when it is
+    non-empty the caller must rebuild in full.
     """
     touched = keyed_all.filter(F.col("is_new")).select(*key_cols).distinct()
     members = keyed_all.join(touched, key_cols)

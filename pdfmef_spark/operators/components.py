@@ -77,15 +77,15 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
 DRIVER_CUTOFF = 2_000_000
 
 
-def _driver_union_find(edges: DataFrame) -> DataFrame:
-    """Small-graph fast path: collect edges, solve components on the
-    driver, parallelize assignments back. Identical result to the
-    iterative-join path (same min-representative), ~10 shuffle rounds
-    cheaper.
+def _driver_union_find(spark, pdf) -> DataFrame:
+    """Small-graph fast path: solve components of the collected edge
+    frame ``pdf`` (src, dst) on the driver, parallelize assignments
+    back. Identical result to the iterative-join path (same
+    min-representative), ~10 shuffle rounds cheaper.
 
     Driver work is a FLAT cost at any executor count, so it is kept
-    fully vectorized: Arrow transfer (toPandas), np.unique to SORTED
-    int codes (so min code == lexicographic-min string — the
+    fully vectorized: Arrow transfer (the caller's toPandas), np.unique
+    to SORTED int codes (so min code == lexicographic-min string — the
     representative contract), then min-label propagation with pointer
     jumping: each round pushes the smaller label across every edge
     (np.minimum.at) and then compresses label chains (labels =
@@ -97,7 +97,6 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    pdf = edges.toPandas()
     both = pd.concat([pdf["src"], pdf["dst"]], ignore_index=True)
     # np.unique returns SORTED uniques, so integer order == string order
     uniq, codes = np.unique(both.to_numpy(dtype=object), return_inverse=True)
@@ -125,9 +124,7 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     # explicit schema: an empty pandas frame (zero-edge graph) cannot
     # infer one, and object-dtype strings should not round-trip via
     # sampling anyway
-    return edges.sparkSession.createDataFrame(
-        out, "node string, component string"
-    )
+    return spark.createDataFrame(out, "node string, component string")
 
 
 def connected_components(
@@ -146,10 +143,12 @@ def connected_components(
     Both paths produce identical assignments (tested either way).
     """
     edges = links.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-    # size gate via limit(cutoff+1).count(): short-circuits instead of
-    # counting the whole edge set when the graph is large
-    if driver_cutoff and edges.limit(driver_cutoff + 1).count() <= driver_cutoff:
-        assign = _driver_union_find(edges)
+    # size gate and driver collect in one execution: limit(cutoff+1)
+    # stops a large edge set early, and a result of <= cutoff rows is
+    # the whole graph, already on the driver
+    small = edges.limit(driver_cutoff + 1).toPandas() if driver_cutoff else None
+    if small is not None and len(small) <= driver_cutoff:
+        assign = _driver_union_find(links.sparkSession, small)
     else:
         edges = edges.localCheckpoint()
         prev = None

@@ -15,7 +15,8 @@ generalization of pdfmef's CRAWLED/EXTRACTING/PASS/FAIL state machine
 table, not a log to re-parse (main.py:23-41 re-parses logs; we don't).
 
 Kill the job between stages and rerun: completed stages are read back
-from parquet, not recomputed (asserted by tests/test_resume.py).
+from parquet, not recomputed (asserted by
+tests/test_pipeline.py::test_resume_*).
 """
 
 from __future__ import annotations

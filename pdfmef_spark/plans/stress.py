@@ -254,11 +254,12 @@ def ann_scaling(
     import os
 
     from pdfmef_spark.operators.similarity import brute_force_topk, ivf_topk
+    from pdfmef_spark.sources.store import DEFAULT_CACHE
 
     sizes = {"small": n_small, "large": n_small * growth}
     paths: dict[str, str] = {}
     for tag, n in sizes.items():
-        p = f"/root/repo/.cache/ann_stress_{n}"
+        p = f"{DEFAULT_CACHE}/ann_stress_{n}"
         if not os.path.exists(p):
             stress_embeddings(spark, n).write.mode("overwrite").parquet(p)
         paths[tag] = p

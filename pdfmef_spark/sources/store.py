@@ -25,7 +25,12 @@ TESTDATA_TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
-DEFAULT_CACHE = os.environ.get("PDFMEF_SPARK_CACHE", "/root/repo/.cache")
+# <checkout>/.cache, next to the pdfmef_spark package: each checkout
+# keeps its own corpus cache unless PDFMEF_SPARK_CACHE points elsewhere
+DEFAULT_CACHE = os.environ.get(
+    "PDFMEF_SPARK_CACHE",
+    os.path.abspath(os.path.join(os.path.dirname(__file__), "..", "..", ".cache")),
+)
 N_BUCKETS = 32
 # bump when corpus.py content changes: stale cached corpora regenerate
 CORPUS_VERSION = 4  # v4: planted figures (hasFigure) + ordered multi-affiliations

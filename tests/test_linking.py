@@ -12,14 +12,15 @@ from pdfmef_spark.sources import store
 def test_pair_scoring_on_golden_links(spark):
     """Score every labeled golden pair directly (no blocking): P/R >= 0.95."""
     gl = store.read_golden(spark, 0.001, "golden_links")
-    scored = gl.withColumn(
-        "score",
-        linking.pair_score_udf(
-            normalize_surface(F.col("surface_a")), normalize_surface(F.col("surface_b"))
-        ),
-    ).withColumn("pred_same", F.col("score") >= 0.70)
-    agg = scored.groupBy("same_entity", "pred_same").count().collect()
-    c = {(r.same_entity, r.pred_same): r["count"] for r in agg}
+    normed = gl.select(
+        "same_entity",
+        normalize_surface(F.col("surface_a")).alias("a"),
+        normalize_surface(F.col("surface_b")).alias("b"),
+    ).collect()
+    c: dict[tuple[bool, bool], int] = {}
+    for r in normed:
+        key = (r.same_entity, linking.pair_score(r.a, r.b) >= 0.70)
+        c[key] = c.get(key, 0) + 1
     tp = c.get((True, True), 0)
     fp = c.get((False, True), 0)
     fn = c.get((True, False), 0)
@@ -27,6 +28,23 @@ def test_pair_scoring_on_golden_links(spark):
     recall = tp / max(tp + fn, 1)
     assert precision >= 0.95, f"precision {precision:.3f} (fp={fp})"
     assert recall >= 0.95, f"recall {recall:.3f} (fn={fn})"
+
+
+def test_link_entities_scores_each_pair_once(spark):
+    """The links plan holds exactly one Python evaluation: scoring and
+    the threshold run together, after candidate_pairs' distinct, so no
+    pair is scored twice."""
+    import re
+
+    mentions = spark.createDataFrame(
+        [("PERSON", "Alan Turing"), ("PERSON", "A. Turing"), ("ORG", "Acme Corp")],
+        "type string, surface string",
+    )
+    plan = linking.link_entities(mentions)._jdf.queryExecution().executedPlan().toString()
+    python_nodes = re.findall(
+        r"ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow", plan
+    )
+    assert len(python_nodes) == 1, plan
 
 
 def test_blocking_recall_on_corpus(spark, smoke_pages):
@@ -124,6 +142,7 @@ def test_minhash_signatures_match_lambda_path(spark):
     same per-seed min), so swapping the production path changed NO
     candidate pair."""
     from pdfmef_spark.functions import char_shingles
+    from pdfmef_spark.functions.xxh64 import SPARK_SEED, xxh64_signed
     from pdfmef_spark.operators import dedup
 
     norms = spark.createDataFrame(
@@ -143,6 +162,29 @@ def test_minhash_signatures_match_lambda_path(spark):
         for r in linking.minhash_signatures(norms).collect()
     }
     assert via_join == via_lambda
+
+    # band keys: "b:<band>:<xxhash64 of the band's lambda-path values>",
+    # hashed here in pure Python, so bucket_keys written by any earlier
+    # version of the plan stay joinable with new ones
+    def spark_xxhash64(longs):
+        h = SPARK_SEED
+        for v in longs:
+            h = xxh64_signed(v.to_bytes(8, "little", signed=True), h & (2**64 - 1))
+        return h
+
+    r = linking.ROWS_PER_BAND
+    expected = {
+        norm: {
+            f"b:{b}:{spark_xxhash64(sig[b * r:(b + 1) * r])}"
+            for b in range(linking.N_BANDS)
+        }
+        for norm, sig in via_lambda.items()
+    }
+    got: dict[str, set[str]] = {}
+    for row in linking.tag_block_keys(norms).collect():
+        if row.bkey.startswith("b:"):
+            got.setdefault(row.norm, set()).add(row.bkey)
+    assert got == expected
 
 
 def test_delta_candidate_pairs_equals_full_minus_old(spark):

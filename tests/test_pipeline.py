@@ -85,6 +85,17 @@ def test_resume_after_partial_kill(spark, smoke_pages, run, tmp_path_factory):
     assert a == b
 
 
+def test_warm_build_compiles_nothing(spark, smoke_pages, tmp_path):
+    """A second identical build in one session reuses every generated
+    class: the codegen cache holds a whole build, so the LRU does not
+    evict and recompile each class on every build."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    P.run_pipeline(spark, smoke_pages, str(tmp_path / "b1"), run_id="w1")
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    P.run_pipeline(spark, smoke_pages, str(tmp_path / "b2"), run_id="w2")
+    assert codegen.METRIC_COMPILATION_TIME().getCount() - before == 0
+
+
 def test_manifest_counters(spark, run):
     m = spark.read.parquet(f"{run.out_dir}/manifest")
     summary = m.filter((F.col("partition_id") == -1) & (F.col("status") == "complete"))

@@ -111,3 +111,26 @@ def test_bootstrap_matches_spark_materializer(spark, tmp_path):
         assert x.count() == y.count(), tbl
         assert x.select(cols).exceptAll(y.select(cols)).count() == 0, tbl
         assert y.select(cols).exceptAll(x.select(cols)).count() == 0, tbl
+
+
+def test_store_cache_defaults_to_checkout(monkeypatch):
+    """Without PDFMEF_SPARK_CACHE the corpus cache is the .cache dir of
+    the checkout that holds the imported package, so a second checkout
+    never shares the first one's cache; the variable still overrides."""
+    import importlib
+    import os
+
+    import pdfmef_spark
+    from pdfmef_spark.sources import store
+
+    checkout = os.path.dirname(os.path.dirname(os.path.abspath(pdfmef_spark.__file__)))
+    monkeypatch.delenv("PDFMEF_SPARK_CACHE", raising=False)
+    try:
+        fresh = importlib.reload(store)
+        assert fresh.DEFAULT_CACHE == os.path.join(checkout, ".cache")
+        assert fresh.corpus_dir(0.001) == f"{checkout}/.cache/corpus/sf0.001"
+        monkeypatch.setenv("PDFMEF_SPARK_CACHE", "/elsewhere/cache")
+        assert importlib.reload(store).DEFAULT_CACHE == "/elsewhere/cache"
+    finally:
+        monkeypatch.undo()
+        importlib.reload(store)

@@ -7,7 +7,7 @@ joiners, bidi controls, mixed-script homoglyphs and non-Latin text:
 
 * ``normalize_surface`` is idempotent (normalizing a normalized string
   is a no-op) — the property that makes persisted block keys stable;
-* ``pair_score_udf`` is bounded in [0, 1] and deterministic across
+* ``linking.score_pairs`` is bounded in [0, 1] and deterministic across
   invocations (the scorer is NOT symmetric in its argument order by
   design — candidate pairs arrive canonically ordered a < b, so only
   one orientation is ever evaluated; pinned below so a future refactor
@@ -74,14 +74,17 @@ def test_normalize_surface_idempotent(spark, strings):
 
 
 def test_pair_score_bounded_and_deterministic(spark):
-    from pdfmef_spark.operators.linking import pair_score_udf
+    from pdfmef_spark.operators.linking import score_pairs
 
     surfaces = [s for s in _ADVERSARIAL if s.strip()]
-    pairs = [(a, b) for a in surfaces for b in surfaces]
-    df = spark.createDataFrame(pairs, "a string, b string")
-    scored = df.select("a", "b", pair_score_udf(F.col("a"), F.col("b")).alias("s"))
-    rows1 = {(r.a, r.b): r.s for r in scored.collect()}
-    rows2 = {(r.a, r.b): r.s for r in scored.collect()}
+    pairs = [("E", a, b) for a in surfaces for b in surfaces]
+    df = spark.createDataFrame(pairs, "type string, a string, b string")
+    # threshold 0.0 drops only a NaN or negative score, so every
+    # distinct pair must come back
+    scored = score_pairs(df, threshold=0.0)
+    rows1 = {(r.src, r.dst): r.score for r in scored.collect()}
+    rows2 = {(r.src, r.dst): r.score for r in scored.collect()}
+    assert len(rows1) == len(set(pairs))
     assert rows1 == rows2, "scorer must be deterministic"
     out_of_range = {k: v for k, v in rows1.items() if not (0.0 <= v <= 1.0)}
     assert out_of_range == {}, f"scores out of [0,1]: {out_of_range}"

@@ -257,7 +257,9 @@ def main() -> None:
         )
 
     # attach the latest scaling evidence if tools/scaling_run.py has run
-    scal = "/root/repo/.cache/scaling_result.json"
+    from pdfmef_spark.sources import store
+
+    scal = os.path.join(store.DEFAULT_CACHE, "scaling_result.json")
     if os.path.exists(scal):
         with open(scal) as fh:
             s = json.load(fh)

@@ -15,6 +15,8 @@ serves as the component representative selector.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame, functions as F
 
 MAX_ITERATIONS = 25
@@ -127,6 +129,38 @@ def _driver_union_find(spark, pdf) -> DataFrame:
     return spark.createDataFrame(out, "node string, component string")
 
 
+def _component_map(
+    links: DataFrame, driver_cutoff: int, iteration_log: list | None
+) -> DataFrame:
+    """(node, component) for the nodes of ``links`` that the solver
+    maps; a node it omits is its own component. The driver path maps
+    every endpoint, the star iterations every non-representative."""
+    edges = links.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
+    # size gate and driver collect in one execution: limit(cutoff+1)
+    # stops a large edge set early, and a result of <= cutoff rows is
+    # the whole graph, already on the driver
+    small = edges.limit(driver_cutoff + 1).toPandas() if driver_cutoff else None
+    if small is not None and len(small) <= driver_cutoff:
+        return _driver_union_find(links.sparkSession, small)
+    edges = edges.localCheckpoint()
+    prev = None
+    for it in range(MAX_ITERATIONS):
+        t0 = time.time()
+        edges = _small_star(_large_star(edges)).localCheckpoint()
+        fp = _fingerprint(edges)
+        if iteration_log is not None:
+            # (round, seconds, edge count) — the fingerprint rides
+            # the same pass, so this costs nothing extra
+            iteration_log.append((it, round(time.time() - t0, 2), fp[0]))
+        if fp == prev:
+            break
+        prev = fp
+    else:
+        raise RuntimeError("connected_components did not converge")
+    # converged star graph: every edge is (node, component_min)
+    return edges.select(F.col("src").alias("node"), F.col("dst").alias("component"))
+
+
 def connected_components(
     links: DataFrame,
     driver_cutoff: int = DRIVER_CUTOFF,
@@ -142,34 +176,7 @@ def connected_components(
     large-star/small-star iterative-join path runs fully distributed.
     Both paths produce identical assignments (tested either way).
     """
-    edges = links.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-    # size gate and driver collect in one execution: limit(cutoff+1)
-    # stops a large edge set early, and a result of <= cutoff rows is
-    # the whole graph, already on the driver
-    small = edges.limit(driver_cutoff + 1).toPandas() if driver_cutoff else None
-    if small is not None and len(small) <= driver_cutoff:
-        assign = _driver_union_find(links.sparkSession, small)
-    else:
-        edges = edges.localCheckpoint()
-        prev = None
-        for it in range(MAX_ITERATIONS):
-            import time as _time
-
-            t0 = _time.time()
-            edges = _small_star(_large_star(edges)).localCheckpoint()
-            fp = _fingerprint(edges)
-            if iteration_log is not None:
-                # (round, seconds, edge count) — the fingerprint rides
-                # the same pass, so this costs nothing extra
-                iteration_log.append((it, round(_time.time() - t0, 2), fp[0]))
-            if fp == prev:
-                break
-            prev = fp
-        else:
-            raise RuntimeError("connected_components did not converge")
-
-        # converged star graph: every edge is (node, component_min)
-        assign = edges.select(F.col("src").alias("node"), F.col("dst").alias("component"))
+    assign = _component_map(links, driver_cutoff, iteration_log)
     # nodes that ended as representatives (or isolated in links) map to themselves
     all_nodes = (
         links.select(F.col("src").alias("node"))
@@ -186,12 +193,14 @@ def assign_components(keys: DataFrame, links: DataFrame) -> DataFrame:
     """Every (type, norm) key -> component id ("type|min-norm").
 
     Keys that never appear in a link are their own singleton component.
+    Every key node is left-joined with the component map, so a node the
+    map omits needs no all-endpoints join to map to itself.
     """
     typed_links = links.select(
         F.concat_ws("|", "type", "src").alias("src"),
         F.concat_ws("|", "type", "dst").alias("dst"),
     )
-    comp = connected_components(typed_links)
+    comp = _component_map(typed_links, DRIVER_CUTOFF, None)
     nodes = keys.select("type", "norm").distinct().withColumn(
         "node", F.concat_ws("|", "type", "norm")
     )

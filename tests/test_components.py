@@ -85,6 +85,50 @@ def test_both_paths_agree_on_corpus_links(spark, smoke_pages):
     assert a == b
 
 
+def test_assign_components_runs_one_component_join(spark, smoke_pages):
+    """assign_components joins the key nodes with the component map
+    once: no all-endpoints union of the links rides along, so it runs
+    fewer Spark jobs than the 7 of the two-join form, with assignments
+    equal to the connected_components formulation."""
+    from pyspark.sql import functions as F
+
+    from pdfmef_spark.operators import components, extract, linking, triples as triples_op
+
+    ext = extract.extract_pages(smoke_pages)
+    mentions = triples_op.mentions_from_triples(
+        triples_op.extract_triples(ext)
+    ).localCheckpoint()
+    keys = linking.surface_keys(mentions).localCheckpoint()
+    links = linking.link_entities(mentions, keys=keys).localCheckpoint()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("assign-components-jobs", "assign_components")
+    try:
+        got = sorted(map(tuple, components.assign_components(keys, links).collect()))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("assign-components-jobs"))
+    assert 0 < n_jobs < 7, n_jobs
+
+    typed = links.select(
+        F.concat_ws("|", "type", "src").alias("src"),
+        F.concat_ws("|", "type", "dst").alias("dst"),
+    )
+    nodes = keys.select("type", "norm").distinct().withColumn(
+        "node", F.concat_ws("|", "type", "norm")
+    )
+    want = sorted(
+        map(
+            tuple,
+            nodes.join(connected_components(typed), "node", "left")
+            .select("type", "norm", F.coalesce("component", "node"))
+            .collect(),
+        )
+    )
+    assert got == want and len(got) > 0
+
+
 # ---- property-based breadth (hypothesis) ----------------------------------
 
 from hypothesis import HealthCheck, given, settings  # noqa: E402

@@ -73,6 +73,22 @@ def test_blocking_recall_on_corpus(spark, smoke_pages):
     assert covered / max(n_true, 1) >= 0.95, f"blocking recall {covered}/{n_true}"
 
 
+def test_persisted_surface_keys_coalesce(spark, smoke_pages):
+    """The persisted vocabulary is coalesced like any other shuffle
+    output: the four write jobs that scan it in run_pipeline must not
+    each read spark.sql.shuffle.partitions near-empty cache blocks."""
+    from pdfmef_spark.operators import extract, triples as triples_op
+
+    ext = extract.extract_pages(smoke_pages)
+    mentions = triples_op.mentions_from_triples(triples_op.extract_triples(ext))
+    keys = linking.surface_keys(mentions).persist()
+    try:
+        assert keys.count() > 0
+        shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert keys.rdd.getNumPartitions() < shuffle_partitions
+    finally:
+        keys.unpersist()
+
 def test_end_to_end_linking_quality(spark, smoke_pages):
     """Cluster assignments vs golden entity keys: pairwise P/R >= 0.95."""
     from pdfmef_spark.operators import components, extract, triples as triples_op

@@ -110,6 +110,13 @@ def test_manifest_counters(spark, run):
     assert tri_total == per_part_sum == run.df("triples").count()
 
 
+def test_stage_rows_match_footers(run):
+    """Every recomputed stage records the rows its write emitted, equal
+    to the parquet footer row count of the stage directory."""
+    for name in P.STAGES:
+        footer_rows = sum(P._per_partition_counts(f"{run.out_dir}/{name}"))
+        assert run.results[name].rows == footer_rows, name
+
 def test_graph_tables_partitioned_and_pruned(spark, run):
     """edges hive-partitioned by pred, nodes by type: a per-predicate read
     prunes partitions at the scan (the Iceberg-table shape at 100 TB)."""
@@ -144,8 +151,8 @@ def test_write_stage_readback_failure_nonempty_raises(spark, tmp_path, monkeypat
     out = str(tmp_path / "ws")
     # zero-row write: fallback returns the typed empty frame
     monkeypatch.setattr(DataFrameReader, "parquet", broken)
-    got = P._write_stage(spark, out, "r1", "s_empty", empty)
-    assert got.count() == 0 and got.schema == empty.schema
+    got, rows = P._write_stage(spark, out, "r1", "s_empty", empty)
+    assert rows == 0 and got.count() == 0 and got.schema == empty.schema
     # non-empty write: the same failure must propagate
     with pytest.raises(Exception, match="simulated read-back failure"):
         P._write_stage(spark, out, "r1", "s_full", df)

@@ -178,13 +178,15 @@ def test_rotation_keeps_official_rows_fresh():
     other 50 this round)."""
     import glob
     import json
+    import os
     import re
 
     from pdfmef_spark.plans import queries as Q
 
     order = list(Q.catalog())
     window = set(order[:50])
-    files = glob.glob("/root/repo/CORRECTNESS_r*.json")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
     assert files, "no official correctness files"
     latest = max(files, key=lambda p: int(re.search(r"r(\d+)", p).group(1)))
     with open(latest) as fh:

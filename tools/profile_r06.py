@@ -19,6 +19,9 @@ import sys
 import tempfile
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PLANS_DIR = os.path.join(REPO, "plans", "r06")
+
 
 def get_session():
     from pdfmef_spark.session import get_spark
@@ -85,7 +88,7 @@ def capture_explains(sf_dir: str, suffix: str, names: list[str] | None = None) -
 
     spark = get_session()
     cat = Q.catalog()
-    os.makedirs("/root/repo/plans/r06", exist_ok=True)
+    os.makedirs(PLANS_DIR, exist_ok=True)
     for name in names or sorted(cat):
         try:
             df = cat[name](spark, sf_dir)
@@ -94,7 +97,7 @@ def capture_explains(sf_dir: str, suffix: str, names: list[str] | None = None) -
             )
         except Exception as exc:
             plan = f"EXPLAIN FAILED: {exc!r}"
-        with open(f"/root/repo/plans/r06/{name}_{suffix}.txt", "w") as fh:
+        with open(os.path.join(PLANS_DIR, f"{name}_{suffix}.txt"), "w") as fh:
             fh.write(plan)
         print(f"captured {name}", flush=True)
 

@@ -44,13 +44,16 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from pdfmef_spark.sources.store import DEFAULT_CACHE  # noqa: E402
 
 SF_EXTRACT = float(os.environ.get("SCALING_SF", "1.0"))  # 500k pages
 FULL_DOCS = int(os.environ.get("SCALING_FULL_DOCS", "250000"))
 REPS = int(os.environ.get("SCALING_REPS", "3"))
 REPS_FULL = int(os.environ.get("SCALING_REPS_FULL", "2"))
-STRESS_PAGES_DIR = f"/root/repo/.cache/stress_pages_{FULL_DOCS}"
+STRESS_PAGES_DIR = os.path.join(DEFAULT_CACHE, f"stress_pages_{FULL_DOCS}")
 
 
 def _session(cores: int):
@@ -140,7 +143,7 @@ class Child:
         self.proc = subprocess.Popen(
             [sys.executable, __file__, "--serve", job, str(cores)],
             stdin=subprocess.PIPE, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-            text=True, cwd="/root/repo",
+            text=True, cwd=REPO,
         )
         line = self._read_until(("READY",))
         self.n_docs = int(line.split()[1])
@@ -234,7 +237,7 @@ def main() -> None:
         )
     warm.stop()
 
-    out_path = "/root/repo/.cache/scaling_result.json"
+    out_path = os.path.join(DEFAULT_CACHE, "scaling_result.json")
     result: dict = {}
     if os.path.exists(out_path):  # merge: re-run one job, keep the other
         with open(out_path) as fh:
@@ -250,7 +253,7 @@ def main() -> None:
     if "full" in jobs:
         result["full"] = measure("full", lo, hi, reps=REPS_FULL)
     print(json.dumps(result, indent=2))
-    os.makedirs("/root/repo/.cache", exist_ok=True)
+    os.makedirs(DEFAULT_CACHE, exist_ok=True)
     with open(out_path, "w") as fh:
         json.dump(result, fh, indent=2)
 

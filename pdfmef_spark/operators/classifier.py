@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
 
+from pdfmef_spark.functions.zipimports import install_stable_zip_importers
 from pdfmef_spark.operators.textstats import _LANG_MARKERS, token_count
 
 _SEED = 42
@@ -174,6 +175,7 @@ def score_udf():
 
     @F.pandas_udf(T.DoubleType())
     def score(texts: pd.Series) -> pd.Series:
+        install_stable_zip_importers()
         x = np.array([py_features(t or "") for t in texts], dtype=np.float64)
         return pd.Series(1.0 / (1.0 + np.exp(-(x @ wv + b))))
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from pdfmef_spark.functions.zipimports import install_stable_zip_importers
 from pdfmef_spark.operators import linking
 
 # Persisted intermediates of the four pair generators, in creation
@@ -513,6 +514,7 @@ def _lsh_table_keys_udf(tables):
 
     @F.pandas_udf("array<long>")
     def keys(v: pd.Series) -> pd.Series:
+        install_stable_zip_importers()
         x = np.array(v.tolist(), dtype=np.float64)
         if len(x) == 0:
             return pd.Series([], dtype=object)

@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from pdfmef_spark import schemas
+from pdfmef_spark.functions.zipimports import install_stable_zip_importers
 
 _DROP_SUBTREE = re.compile(
     r"(?is)<(script|style|head|header|nav|footer|aside)\b.*?</\1\s*>"
@@ -156,6 +157,7 @@ def extract_pages(
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_stable_zip_importers()
         from pdfmef_spark.functions.deadline import DeadlineRunner
 
         runner = DeadlineRunner(row_timeout) if row_timeout else None

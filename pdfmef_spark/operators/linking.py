@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 
 from pdfmef_spark import schemas
 from pdfmef_spark.functions import char_shingles, normalize_surface
+from pdfmef_spark.functions.zipimports import install_stable_zip_importers
 
 N_HASHES = 64
 N_BANDS = 16  # 16 bands x 4 rows
@@ -389,6 +390,7 @@ def score_pairs(pairs: DataFrame, threshold: float = 0.70) -> DataFrame:
     (see candidate_pairs), and pruning effort belongs there.
     """
     def score_batches(batches):
+        install_stable_zip_importers()
         for pdf in batches:
             score = pd.Series(
                 [pair_score(a, b) for a, b in zip(pdf["a"], pdf["b"])],

@@ -23,6 +23,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from pdfmef_spark.functions.zipimports import install_stable_zip_importers
+
 
 class DecoderUnavailable(NotImplementedError):
     """Raised by real codec paths; the deterministic fake is the default
@@ -59,6 +61,7 @@ def synthetic_media(spark, n: int = 64, kind: str = "image") -> DataFrame:
     """Deterministic fake media table (seeded payload bytes + metadata)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_stable_zip_importers()
         for pdf in batches:
             rows = []
             for i in pdf["id"]:
@@ -101,6 +104,7 @@ def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
     per-row error capture; payloads never shuffle)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_stable_zip_importers()
         for pdf in batches:
             out = []
             for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):

@@ -23,6 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from pdfmef_spark.functions.zipimports import install_stable_zip_importers
 from pdfmef_spark.operators.dedup import cosine_sim
 
 
@@ -89,6 +90,7 @@ def nearest_centroid_udf(cents: np.ndarray):
 
     @F.pandas_udf("int")
     def assign(v: pd.Series) -> pd.Series:
+        install_stable_zip_importers()
         x = np.array(v.tolist(), dtype=np.float64)  # (batch, dim)
         return pd.Series(np.argmax(x @ c_t, axis=1).astype(np.int32))
 

@@ -40,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from pdfmef_spark import schemas
+from pdfmef_spark.functions.zipimports import install_stable_zip_importers
 
 _PATTERNS = [
     (" works for ", "worksFor", "PERSON", "ORG"),
@@ -278,6 +279,7 @@ def extract_triples(
         return _extract_triples_fast(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_stable_zip_importers()
         from pdfmef_spark.functions.deadline import DeadlineRunner
 
         runner = DeadlineRunner(row_timeout) if row_timeout else None
@@ -315,6 +317,7 @@ def _extract_triples_fast(src: DataFrame) -> DataFrame:
     See extract_triples for the equivalence argument."""
 
     def run_rel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_stable_zip_importers()
         cols = [f.name for f in schemas.TRIPLES]
         for pdf in batches:
             rows: list[tuple] = []

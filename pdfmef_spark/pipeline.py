@@ -26,7 +26,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 STAGES = ["extracted", "triples", "mentions", "links", "assignments", "nodes", "edges"]
 
@@ -128,8 +128,6 @@ def _write_stage(
         if error_col and error_col in df.columns
         else F.sum(F.lit(0))
     )
-    from pyspark.sql import Observation
-
     obs = Observation(f"{stage}_metrics")
     observed = df.observe(
         obs,
@@ -280,6 +278,13 @@ def _timed_stage(
     return df
 
 
+def _add_metrics(run: "PipelineRun", name: str, **metrics) -> None:
+    """Merge path decisions into a stage's metrics, keeping any the
+    stage's write observed."""
+    res = run.results[name]
+    res.metrics = {**(res.metrics or {}), **metrics}
+
+
 def _write_nodes_edges(
     write, nodes_df: DataFrame, edges_df: DataFrame,
     node_parts: list[str], edge_parts: list[str], **write_kw,
@@ -356,10 +361,6 @@ def run_pipeline(
     extracted = stage("extracted", lambda: extract.extract_pages(pages), error_col="error")
     triples = stage("triples", lambda: triples_op.extract_triples(extracted))
     mentions = stage("mentions", lambda: triples_op.mentions_from_triples(triples))
-    # candidate caps drop hot buckets silently at scale — observe the
-    # drop counters on the links write job and store them in the manifest
-    from pyspark.sql import Observation
-
     # keys is the distinct-surface vocabulary — tiny next to mentions,
     # but computing it is a full shuffle over the mentions table, and
     # FOUR downstream write jobs (links, assignments, nodes, edges)
@@ -369,8 +370,16 @@ def run_pipeline(
     # building a multi-hundred-k-row broadcast is driver work that repeats
     # per write job and does not shrink with executor count (and at
     # 10^12-doc vocabulary it would not fit at all — the shuffle join
-    # with AQE skew handling is the scale path)
-    broadcast_map = keys.limit(100_001).count() <= 100_000
+    # with AQE skew handling is the scale path). Every surface key comes
+    # from a mention row, so the mentions write's own row count bounds
+    # the vocabulary at no cost; only a read-back (rows == -1) or a
+    # larger mentions table pays a Spark job to count the keys
+    n_mentions = run.results["mentions"].rows
+    broadcast_map = (
+        0 <= n_mentions <= 100_000 or keys.limit(100_001).count() <= 100_000
+    )
+    # candidate caps drop hot buckets silently at scale — observe the
+    # drop counters on the links write job and store them in the manifest
     cap_obs = Observation(f"links_caps_{run_id}")
     try:
         links = stage(
@@ -582,11 +591,17 @@ def run_pipeline_incremental(
                 "links", lambda: prev_links.unionByName(delta_links)
             )
         else:
+            # a full rebuild caps hot buckets like run_pipeline does:
+            # record what the caps dropped in the manifest
+            cap_obs = Observation(f"links_caps_{run_id}")
             links = stage(
                 "links",
-                lambda: linking.link_entities(threshold=link_threshold, keys=keys),
+                lambda: linking.link_entities(
+                    threshold=link_threshold, cap_obs=cap_obs, keys=keys
+                ),
+                extra_obs=cap_obs,
             )
-        run.results["links"].metrics = {"links_mode": links_mode}
+        _add_metrics(run, "links", links_mode=links_mode)
 
         # Graph-tail mode, decided once. A full links rebuild may SHRINK
         # the link set (a cap-crossing bucket drops its old pairs), and a
@@ -669,9 +684,9 @@ def run_pipeline_incremental(
                 .repartition("cb"),
                 partition_by=["cb"],
             )
-        run.results["assignments"].metrics = {
-            "assignments_mode": "delta" if use_delta else "full"
-        }
+        _add_metrics(
+            run, "assignments", assignments_mode="delta" if use_delta else "full"
+        )
         broadcast_map = keys.limit(100_001).count() <= 100_000
         # nodes/edges get the same bucket-pruned treatment: new DOC
         # nodes append into a per-batch partition (a DOC id is a pure
@@ -858,9 +873,7 @@ def run_pipeline_incremental(
             stage, nodes_df, edges_df, ["type", "nb"], ["pred", "eb"],
             mode=write_mode,
         )
-        run.results["edges"].metrics = {
-            "tail_mode": "delta" if use_delta else "full"
-        }
+        _add_metrics(run, "edges", tail_mode="delta" if use_delta else "full")
     finally:
         keys.unpersist()
 

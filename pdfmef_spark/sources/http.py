@@ -26,6 +26,8 @@ from typing import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
+from pdfmef_spark.functions.zipimports import install_stable_zip_importers
+
 FETCHED = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -62,6 +64,7 @@ def fetch_pages(
     src = urls.select(url_col)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_stable_zip_importers()
         runner = None
         if row_timeout:
             from pdfmef_spark.functions.deadline import DeadlineRunner

@@ -365,12 +365,10 @@ def _page(url: str, body: str):
     return (url, html, "en")
 
 
-def test_delta_links_cap_crossing_falls_back(spark, tmp_path, monkeypatch):
-    """A blocking bucket that CROSSES its cap on this tick (>= 2 old
-    members, now over cap) cannot be delta-updated — full recompute
-    drops the whole bucket, so its old pairs must vanish from the
-    links table. The tick must fall back to a full links rebuild and
-    still match from-scratch under the same cap."""
+def _cap_crossing_ticks(spark, inc_dir, monkeypatch):
+    """Two ticks where the second grows the t:systems token bucket from
+    2 to 3 members, past a cap patched down to 2; returns
+    (all pages, tick 1, tick 2)."""
     from pdfmef_spark.operators import linking
 
     monkeypatch.setattr(linking, "TOKEN_BLOCK_CAP", 2)
@@ -388,9 +386,20 @@ def test_delta_links_cap_crossing_falls_back(spark, tmp_path, monkeypatch):
             schema,
         )
     )
-    inc_dir = str(tmp_path / "inc")
     r1 = P.run_pipeline_incremental(spark, b1, inc_dir)
     r2 = P.run_pipeline_incremental(spark, all_pages, inc_dir)
+    return all_pages, r1, r2
+
+
+def test_delta_links_cap_crossing_falls_back(spark, tmp_path, monkeypatch):
+    """A blocking bucket that CROSSES its cap on this tick (>= 2 old
+    members, now over cap) cannot be delta-updated — full recompute
+    drops the whole bucket, so its old pairs must vanish from the
+    links table. The tick must fall back to a full links rebuild and
+    still match from-scratch under the same cap."""
+    all_pages, r1, r2 = _cap_crossing_ticks(
+        spark, str(tmp_path / "inc"), monkeypatch
+    )
     assert r1.results["links"].metrics["links_mode"] == "full"
     # t:systems grows 2 -> 3 past the patched cap: crossing detected
     assert r2.results["links"].metrics["links_mode"] == "full"
@@ -414,6 +423,31 @@ def test_delta_links_cap_crossing_falls_back(spark, tmp_path, monkeypatch):
             tuple(getattr(r, c) for c in cs) for r in run_full.df(st).collect()
         )
         assert got == want, st
+
+
+def test_full_links_tick_records_cap_drops(spark, tmp_path, monkeypatch):
+    """A tick that rebuilds links in full records what the candidate
+    caps dropped in its manifest links row, and keeps those counters
+    beside ``links_mode`` in the stage metrics."""
+    import json
+
+    inc_dir = str(tmp_path / "inc")
+    _, _, r2 = _cap_crossing_ticks(spark, inc_dir, monkeypatch)
+    assert r2.results["links"].metrics["links_mode"] == "full"
+    rows = (
+        spark.read.parquet(f"{inc_dir}/manifest")
+        .filter(
+            (F.col("run_id") == r2.run_id)
+            & (F.col("stage") == "links")
+            & (F.col("status") == "complete")
+        )
+        .collect()
+    )
+    assert len(rows) == 1 and rows[0].metrics is not None
+    caps = json.loads(rows[0].metrics)
+    # the t:systems bucket (3 members) is over the cap of 2
+    assert caps["buckets_dropped"] >= 1 and caps["members_dropped"] >= 3
+    assert r2.results["links"].metrics == {"links_mode": "full", **caps}
 
 
 def test_delta_tick_rewrites_only_affected_assignment_buckets(

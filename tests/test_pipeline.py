@@ -96,6 +96,36 @@ def test_warm_build_compiles_nothing(spark, smoke_pages, tmp_path):
     assert codegen.METRIC_COMPILATION_TIME().getCount() - before == 0
 
 
+def test_broadcast_decision_runs_no_count_job(spark, smoke_pages, tmp_path, monkeypatch):
+    """A build decides to broadcast the surface map from the mentions
+    write's row count, an upper bound on the vocabulary, instead of a
+    Spark job that counts the vocabulary; the edges plan still
+    broadcasts the map."""
+    from pdfmef_spark.operators import graph
+
+    df_cls = type(smoke_pages)
+    counted, built = [], []
+    real_count, real_materialize = df_cls.count, graph.materialize_graph
+
+    def count(self):
+        counted.append(self)
+        return real_count(self)
+
+    def materialize(*args, **kwargs):
+        built.append(real_materialize(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(df_cls, "count", count)
+    monkeypatch.setattr(graph, "materialize_graph", materialize)
+    run = P.run_pipeline(spark, smoke_pages, str(tmp_path / "b"), run_id="bc")
+    monkeypatch.undo()
+    assert 0 < run.results["mentions"].rows <= 100_000
+    assert counted == []
+    ((_, edges_df),) = built
+    plan = edges_df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan[:1500]
+
+
 def test_manifest_counters(spark, run):
     m = spark.read.parquet(f"{run.out_dir}/manifest")
     summary = m.filter((F.col("partition_id") == -1) & (F.col("status") == "complete"))

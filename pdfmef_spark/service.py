@@ -11,10 +11,13 @@ JVM<->Python round trips; the point path costs milliseconds):
 
 * point lookups compute the url-hash bucket driver-side (the pure-
   python XXH64 that is parity-pinned against Spark's ``xxhash64``,
-  functions/xxh64.py) and read exactly ONE hive bucket directory with
-  pyarrow, filtered on url (sinks.lookup) — partition pruning by
-  construction, so a GET touches 1/N of the table's files no matter
-  how big the store grows;
+  functions/xxh64.py) and read exactly ONE hive bucket directory
+  (sinks.lookup) — partition pruning by construction, so a GET touches
+  1/N of the table's files no matter how big the store grows. The
+  bucket's parquet files are opened directly, with no pyarrow Dataset
+  scan: the url column is read first, then html from the file that
+  holds the url. :meth:`DocService.init_from` writes one file per
+  bucket, so a GET opens one file;
 * header/citations/text call the SAME pure per-row kernels the batch
   Arrow stages call (extract.extract_row, triples.doc_triples) —
   serving and batch share one implementation and cannot drift (pinned
@@ -84,11 +87,15 @@ class DocService:
     # -- store management ---------------------------------------------------
 
     def init_from(self, pages: DataFrame) -> None:
-        """Materialize the serving store (hive layout on the url bucket)."""
+        """Materialize the serving store (hive layout on the url bucket).
+        Each bucket's rows go to one write task, so every bucket starts
+        as one data file: a GET opens one file, not one per task that
+        saw the bucket."""
         (
             pages.withColumn(
                 sinks.BUCKET_COL, sinks.bucket_of(F.col("url"), self.n_buckets)
             )
+            .repartition(sinks.BUCKET_COL)
             .write.mode("overwrite")
             .partitionBy(sinks.BUCKET_COL)
             .parquet(self.table_dir)

@@ -15,9 +15,10 @@ fallback).
 
 Safety: the rewrite never reads and overwrites a path in the same job —
 affected partitions are written to a hidden sibling temp dir first,
-then swapped in by rename (crash between the two renames leaves the old
-data recoverable in a hidden dir; Iceberg's metadata commit makes the
-same operation atomic, see _swap_in). Untouched partition directories
+then swapped in by rename (a crash between the two renames leaves the
+old data in a hidden dir, which the next point operation on the bucket
+renames back; Iceberg's metadata commit makes the same operation
+atomic, see _swap_in). Untouched partition directories
 are never listed, read, or rewritten (asserted by test).
 
 Two write paths share that one swap (:func:`_swap_in`, which takes the
@@ -30,10 +31,16 @@ writer as a callable):
   pyarrow, no Spark job: the key's bucket is computed with the
   pure-python XXH64 (:func:`bucket_of_key`), and only that bucket
   directory (``bucket=K``, :data:`BUCKET_COL`) is read and rewritten, so
-  a per-document request costs milliseconds instead of several Spark job
-  round trips. A rewrite streams the bucket's record batches from the
-  scan into one parquet writer, so driver memory per write is about one
-  parquet row group plus a few batches, not the bucket (the bytes
+  a per-document request costs about a millisecond instead of several
+  Spark job round trips. It opens the bucket's data files directly with
+  ``pyarrow.parquet.ParquetFile`` (no ``pyarrow.dataset`` scan, whose
+  setup alone costs about 2 ms per call): it reads each file's key
+  column first, and the requested columns only from files that hold the
+  key. A serving store starts with one file per bucket
+  (``service.DocService.init_from``), and a point rewrite leaves one.
+  A rewrite streams the bucket's record batches into one parquet
+  writer and writes a row group per :data:`_SCAN_ROWS` rows, so driver
+  memory per write is about one row group, not the bucket (the bytes
   rewritten still grow with the bucket). The point path writes files
   Spark reads back as the same table: rows take the store's own schema
   with its schema metadata (Spark's row-schema key rides along), and
@@ -41,7 +48,8 @@ writer as a callable):
   pyarrow's default nanosecond timestamps make every full Spark read of
   the table fail with a column type mismatch. Results and replies equal
   the bulk path's (pinned by tests/test_sinks.py, which runs the bulk
-  path as the reference).
+  path as the reference). Every point operation first rolls back a swap
+  of its bucket that a crash interrupted (:func:`_recover`).
 
 Neither path locks: a reader that lists a bucket between the two
 renames of a swap finds it missing. Callers serialize writers against
@@ -51,6 +59,7 @@ readers (service.serve is single-threaded for this reason).
 from __future__ import annotations
 
 import datetime
+import itertools
 import os
 import shutil
 import uuid
@@ -58,7 +67,6 @@ from typing import Callable
 
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -149,11 +157,12 @@ def _swap_in(target_dir: str, write: Callable[[str], None]) -> None:
     same path in one job). A target that does not exist yet (a brand-new
     bucket) is a single rename.
 
-    Temp/old dirs are dot-prefixed BASENAMES so Spark partition discovery,
-    pyarrow dataset discovery and the `bucket=` listings in this module
-    never see them. The swap is two renames, not one atomic exchange: a
-    crash between them leaves the data recoverable in the hidden
-    `.<name>.old-*` dir rather than committed — on an Iceberg catalog
+    Temp/old dirs are dot-prefixed BASENAMES so Spark partition discovery
+    and the `bucket=` and data-file listings in this module never see
+    them. The swap is two renames, not one atomic exchange: a crash
+    between them leaves the data in the hidden `.<name>.old-*` dir
+    rather than committed (the point path rolls it back, see
+    :func:`_recover`) — on an Iceberg catalog
     this whole operation is a single atomic metadata commit, which is
     what a production deployment should use; this is the explicit
     plain-parquet fallback.
@@ -252,7 +261,7 @@ def upsert_by_key(
 # -- point path: one key, driver-side pyarrow, no Spark job ------------------
 
 BUCKET_COL = "bucket"  # the point path's hive partition column
-_SCAN_ROWS = 1024  # rows per record batch when a rewrite streams a bucket
+_SCAN_ROWS = 1024  # rows per batch a rewrite streams, and per row group it writes
 
 
 def _bucket_dirs(table_dir: str, n_buckets: int) -> list[str]:
@@ -271,21 +280,67 @@ def _bucket_dir(table_dir: str, key: str, n_buckets: int) -> str:
     return os.path.join(table_dir, f"{BUCKET_COL}={bucket_of_key(key, n_buckets)}")
 
 
-def _dataset(part_dir: str, schema: pa.Schema | None = None) -> pads.Dataset:
-    # discovery skips dot/underscore files (Spark's .crc and _SUCCESS)
-    return pads.dataset(part_dir, format="parquet", schema=schema)
+def _data_files(part_dir: str) -> list[str]:
+    # dot/underscore names are Spark's .crc and _SUCCESS files, skipped
+    # as pyarrow dataset discovery skips them
+    return sorted(
+        os.path.join(part_dir, f)
+        for f in os.listdir(part_dir)
+        if not f.startswith((".", "_"))
+    )
+
+
+def _recover(part_dir: str) -> None:
+    """Finish an interrupted :func:`_swap_in` of `part_dir` by rolling it
+    back: a bucket renamed away (``.<name>.old-*``) and not replaced is
+    renamed back into place, and every other leftover hidden sibling
+    (``.<name>.tmp-*``, ``.<name>.old-*``) is removed. Assumes no swap of
+    the bucket is in flight (callers serialize writers against
+    readers)."""
+    parent, base = os.path.split(part_dir)
+    prefix = f".{base}."
+    left = sorted(n for n in os.listdir(parent) if n.startswith(prefix))
+    if not left:
+        return
+    if not os.path.isdir(part_dir):
+        old = [n for n in left if n.startswith(prefix + "old-")]
+        if old:
+            os.rename(os.path.join(parent, old[0]), part_dir)
+            left.remove(old[0])
+    for n in left:
+        shutil.rmtree(os.path.join(parent, n))
 
 
 def _nullable_schema(part_dir: str) -> pa.Schema:
-    """The bucket's schema with every field nullable and the schema
-    metadata (which carries Spark's row schema) kept."""
-    store = _dataset(part_dir).schema
+    """The bucket's schema (its first data file's) with every field
+    nullable and the schema metadata (which carries Spark's row schema)
+    kept."""
+    store = pq.read_schema(_data_files(part_dir)[0])
     return pa.schema([f.with_nullable(True) for f in store], metadata=store.metadata)
 
 
+def _key_masks(part_dir: str, key_col: str, key: str):
+    """(open file, rows keyed `key`) per data file of the bucket, from a
+    read of the key column only."""
+    for path in _data_files(part_dir):
+        pf = pq.ParquetFile(path)
+        yield pf, pc.equal(pf.read(columns=[key_col])[key_col], key)
+
+
 def _matches(part_dir: str, key_col: str, key: str) -> int:
-    # the filter reads the key column only
-    return _dataset(part_dir).count_rows(filter=pc.field(key_col) == key)
+    return sum(pc.sum(m).as_py() or 0 for _pf, m in _key_masks(part_dir, key_col, key))
+
+
+def _kept(part_dir: str, key_col: str, key: str, schema: pa.Schema):
+    """`part_dir`'s rows minus those keyed `key` (a null key is kept, as
+    by the bulk path's anti join), as `schema` tables of at most
+    _SCAN_ROWS rows, streamed file by file."""
+    doomed = pa.array([key])
+    for path in _data_files(part_dir):
+        for batch in pq.ParquetFile(path).iter_batches(batch_size=_SCAN_ROWS):
+            kept = batch.filter(pc.invert(pc.is_in(batch.column(key_col), value_set=doomed)))
+            if kept.num_rows:
+                yield pa.Table.from_batches([kept]).cast(schema)
 
 
 def _rewrite(
@@ -293,32 +348,33 @@ def _rewrite(
     new: pa.Table | None = None,
 ) -> Callable[[str], None]:
     """Writer for _swap_in: streams `part_dir`'s rows minus those keyed
-    `key` (a null key is kept, as by the bulk path's anti join), then
-    `new`, into one parquet file Spark reads back as part of the table
-    (INT96 timestamps, as Spark writes them). Record batches go straight
-    from the scan to the writer, so driver memory holds about one parquet
-    row group of the bucket (Spark writes them at up to 128 MB) plus a
-    few batches, never the whole bucket."""
+    `key` (:func:`_kept`), then `new`, into one parquet file Spark reads
+    back as part of the table (INT96 timestamps, as Spark writes them).
+    Rows are written a row group once _SCAN_ROWS of them have gathered,
+    so a bucket does not gain a row group per upload, and driver memory
+    holds about one row group of the input (Spark writes them at up to
+    128 MB) plus one of the output, never the whole bucket."""
 
     def write(path: str) -> None:
         os.makedirs(path)
+        pieces = [] if part_dir is None else _kept(part_dir, key_col, key, schema)
+        if new is not None:
+            pieces = itertools.chain(pieces, [new])
         with pq.ParquetWriter(
             os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"),
             schema,
             compression="zstd",
             use_deprecated_int96_timestamps=True,
         ) as out:
-            if part_dir is not None:
-                for batch in _dataset(part_dir, schema).to_batches(
-                    filter=~pc.field(key_col).isin([key]),
-                    batch_size=_SCAN_ROWS,
-                    batch_readahead=1,
-                    fragment_readahead=1,
-                ):
-                    if batch.num_rows:
-                        out.write_batch(batch)
-            if new is not None:
-                out.write_table(new)
+            buf, rows = [], 0
+            for t in pieces:
+                buf.append(t)
+                rows += t.num_rows
+                if rows >= _SCAN_ROWS:
+                    out.write_table(pa.concat_tables(buf))
+                    buf, rows = [], 0
+            if buf:
+                out.write_table(pa.concat_tables(buf))
 
     return write
 
@@ -331,12 +387,19 @@ def lookup(
     columns: list[str] | None = None,
 ) -> pa.Table | None:
     """Rows whose `key_col` equals `key`, read from the key's bucket
-    directory ONLY (nothing else is listed or opened). None when that
-    bucket does not exist."""
+    directory ONLY (nothing else is opened): the key column of each data
+    file first, then `columns` from the files that hold the key. None
+    when that bucket does not exist."""
     part = _bucket_dir(table_dir, key, n_buckets)
+    _recover(part)
     if not os.path.isdir(part):
         return None
-    return _dataset(part).to_table(columns=columns, filter=pc.field(key_col) == key)
+    masks = list(_key_masks(part, key_col, key))
+    hits = [pf.read(columns=columns).filter(m) for pf, m in masks if pc.any(m).as_py()]
+    if not hits:  # an empty table of the requested columns
+        schema = masks[0][0].schema_arrow
+        return schema.empty_table().select(columns or schema.names)
+    return pa.concat_tables(hits, promote_options="default")
 
 
 def _as_utc(v):
@@ -356,8 +419,9 @@ def upsert_row(table_dir: str, key_col: str, row: dict, n_buckets: int) -> dict:
     stores with extra per-document columns work unchanged. Same reply as
     the bulk path; only the row's bucket is rewritten."""
     key = row[key_col]
-    part_dirs = _bucket_dirs(table_dir, n_buckets)
     part = _bucket_dir(table_dir, key, n_buckets)
+    _recover(part)
+    part_dirs = _bucket_dirs(table_dir, n_buckets)
     schema = _nullable_schema(os.path.join(table_dir, part_dirs[0]))
     new = pa.Table.from_pylist(
         [{f.name: _as_utc(row.get(f.name)) for f in schema}], schema=schema
@@ -380,8 +444,9 @@ def delete_key(table_dir: str, key_col: str, key: str, n_buckets: int) -> dict:
     """Point DELETE: :func:`delete_by_key` for one key, run driver-side
     with pyarrow. Same reply; idempotent (a bucket without the key is
     not rewritten)."""
-    part_dirs = _bucket_dirs(table_dir, n_buckets)
     part = _bucket_dir(table_dir, key, n_buckets)
+    _recover(part)
+    part_dirs = _bucket_dirs(table_dir, n_buckets)
     doomed = _matches(part, key_col, key) if os.path.isdir(part) else 0
     if doomed:
         _swap_in(part, _rewrite(part, key_col, key, _nullable_schema(part)))

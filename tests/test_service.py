@@ -29,31 +29,44 @@ def _some_url(svc):
 
 def test_point_lookup_reads_one_bucket(svc, monkeypatch):
     """Every GET verb reads only the url's bucket=K directory (pruning by
-    construction, not by a planner): each pyarrow dataset a GET builds
-    covers files under bucket=K only, and no other file can be opened
-    through it."""
+    construction, not by a planner): every parquet file a GET opens lies
+    under bucket=K."""
     import os
-
-    import pyarrow.dataset as pads
 
     from pdfmef_spark import sinks
 
-    built = []
-    real = pads.dataset
+    opened = []
+    real = sinks.pq.ParquetFile
 
     def recording(source, *a, **kw):
-        ds = real(source, *a, **kw)
-        built.append(ds)
-        return ds
+        opened.append(os.path.abspath(source))
+        return real(source, *a, **kw)
 
-    monkeypatch.setattr(sinks.pads, "dataset", recording)
+    monkeypatch.setattr(sinks.pq, "ParquetFile", recording)
     url = _some_url(svc)
     part = os.path.abspath(f"{svc.table_dir}/bucket={svc._bucket(url)}") + os.sep
     for verb in (svc.raw, svc.text, svc.header, svc.citations):
-        built.clear()
+        opened.clear()
         assert verb(url) is not None
-        files = [os.path.abspath(f) for ds in built for f in ds.files]
-        assert files and all(f.startswith(part) for f in files), (verb, files)
+        assert opened and all(f.startswith(part) for f in opened), (verb, opened)
+
+
+def test_init_from_writes_one_file_per_bucket(spark, tmp_path):
+    """The store starts with one data file per bucket, however many
+    write tasks saw the bucket's rows."""
+    import os
+
+    pages = spark.createDataFrame(
+        [(f"https://one.example/{i}", b"<html></html>") for i in range(200)],
+        "url string, html binary",
+    ).repartition(4)
+    s = DocService(spark, str(tmp_path / "docs"), n_buckets=8)
+    s.init_from(pages)
+    parts = [d for d in os.listdir(s.table_dir) if d.startswith("bucket=")]
+    assert len(parts) == 8
+    for d in parts:
+        files = os.listdir(os.path.join(s.table_dir, d))
+        assert len([f for f in files if not f.startswith((".", "_"))]) == 1, (d, files)
 
 
 def test_text_and_header_and_citations(svc):

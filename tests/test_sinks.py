@@ -273,3 +273,153 @@ def test_upsert_duplicate_update_keys_raise(spark, tmp_path):
         sinks.upsert_by_key(spark, table_dir, "doc_id", dup, n_buckets=N_BUCKETS)
     # table untouched by the failed merge
     assert spark.read.parquet(table_dir).count() == 1000
+
+
+def _bucket_files(part_dir: str) -> list[str]:
+    return [
+        os.path.join(part_dir, f) for f in os.listdir(part_dir)
+        if not f.startswith((".", "_"))
+    ]
+
+
+def _keys_in_bucket(b: int, n: int, prefix: str = "doc-") -> list[str]:
+    keys, i = [], 0
+    while len(keys) < n:
+        k = f"{prefix}{i}"
+        if sinks.bucket_of_key(k, N_BUCKETS) == b:
+            keys.append(k)
+        i += 1
+    return keys
+
+
+def test_point_uploads_do_not_add_row_groups(spark, tmp_path):
+    """Twenty point uploads into one bucket leave it with no more row
+    groups than its rows need at _SCAN_ROWS rows per group (not one
+    group per upload)."""
+    import math
+
+    import pyarrow.parquet as pq
+
+    table_dir = str(tmp_path / "rg")
+    spark.createDataFrame(
+        [(f"doc-{i}", i) for i in range(300)], "doc_id string, val long"
+    ).withColumn("bucket", sinks.bucket_of(F.col("doc_id"), N_BUCKETS)).write.partitionBy(
+        "bucket"
+    ).parquet(table_dir)
+    for i, k in enumerate(_keys_in_bucket(3, 20, prefix="new-")):
+        sinks.upsert_row(table_dir, "doc_id", {"doc_id": k, "val": i}, N_BUCKETS)
+    metas = [pq.ParquetFile(f).metadata for f in _bucket_files(f"{table_dir}/bucket=3")]
+    rows = sum(m.num_rows for m in metas)
+    groups = sum(m.num_row_groups for m in metas)
+    assert rows >= 20
+    assert groups <= math.ceil(rows / sinks._SCAN_ROWS), (rows, groups)
+
+
+def test_point_path_over_multi_file_bucket_with_null_key(spark, tmp_path):
+    """A bucket written by several Spark tasks (several files) that also
+    holds a null-key row: point lookups, upserts and deletes give the
+    bulk path's replies and rows, and the null-key row survives every
+    rewrite (as it survives the bulk path's anti join)."""
+    import math
+
+    import pyarrow.parquet as pq
+
+    null_bucket = spark.range(1).select(
+        sinks.bucket_of(F.lit(None).cast("string"), N_BUCKETS).alias("b")
+    ).first().b
+    keys = _keys_in_bucket(null_bucket, 41)
+    absent = keys.pop()
+    rows = [(k, i) for i, k in enumerate(keys)] + [(None, -7)]
+    dirs = {}
+    for side in ("point", "bulk"):
+        dirs[side] = str(tmp_path / side)
+        spark.createDataFrame(rows, "doc_id string, val long").repartition(4).withColumn(
+            "bucket", sinks.bucket_of(F.col("doc_id"), N_BUCKETS)
+        ).write.partitionBy("bucket").parquet(dirs[side])
+    part = f"{dirs['point']}/bucket={null_bucket}"
+    assert len(_bucket_files(part)) > 1
+
+    for k, v in rows[:5]:
+        assert sinks.lookup(dirs["point"], "doc_id", k, N_BUCKETS).to_pylist() == [
+            {"doc_id": k, "val": v}
+        ]
+    assert sinks.lookup(dirs["point"], "doc_id", absent, N_BUCKETS).num_rows == 0
+
+    ops = [("upsert", keys[0], 100), ("delete", keys[1], None),
+           ("upsert", absent, 200), ("delete", keys[1], None),
+           ("upsert", keys[2], 300), ("delete", keys[3], None)]
+    for verb, k, v in ops:
+        if verb == "upsert":
+            got = sinks.upsert_row(dirs["point"], "doc_id", {"doc_id": k, "val": v}, N_BUCKETS)
+            want = sinks.upsert_by_key(
+                spark, dirs["bulk"], "doc_id",
+                spark.createDataFrame([(k, v)], "doc_id string, val long"),
+                n_buckets=N_BUCKETS,
+            )
+        else:
+            got = sinks.delete_key(dirs["point"], "doc_id", k, N_BUCKETS)
+            want = sinks.delete_by_key(
+                spark, dirs["bulk"], "doc_id",
+                spark.createDataFrame([(k,)], "doc_id string"),
+                n_buckets=N_BUCKETS,
+            )
+        assert got == want, (verb, k)
+
+    tables = {
+        side: sorted(
+            (tuple(r) for r in spark.read.parquet(d).select("doc_id", "val").collect()),
+            key=repr,
+        )
+        for side, d in dirs.items()
+    }
+    assert tables["point"] == tables["bulk"]
+    assert (None, -7) in tables["point"]
+    # the rewrites merged the bucket's files into one, a row group per
+    # _SCAN_ROWS rows
+    (f,) = _bucket_files(part)
+    meta = pq.ParquetFile(f).metadata
+    assert meta.num_row_groups <= math.ceil(meta.num_rows / sinks._SCAN_ROWS)
+    assert sinks.lookup(dirs["point"], "doc_id", keys[0], N_BUCKETS)["val"].to_pylist() == [100]
+
+
+def test_point_ops_recover_an_interrupted_swap(spark, tmp_path):
+    """A process that dies between the two renames of a bucket swap
+    leaves the bucket renamed away; the next point operation rolls it
+    back, so no row is lost and the bucket count does not drop."""
+    import subprocess
+    import sys
+
+    table_dir = _make_table(spark, tmp_path)
+    b = sinks.bucket_of_key("doc-5", N_BUCKETS)
+    part = f"{table_dir}/bucket={b}"
+    before = {r.doc_id: r.val for r in spark.read.parquet(part).collect()}
+    child = f"""
+import os
+from pdfmef_spark import sinks
+
+real = os.rename
+
+def rename(src, dst):
+    real(src, dst)
+    os._exit(3)  # die after the swap's first rename
+
+os.rename = rename
+sinks.upsert_row({table_dir!r}, "doc_id", {{"doc_id": "doc-5", "val": -5}}, {N_BUCKETS})
+"""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", child], cwd=repo, timeout=120,
+        env={**os.environ, "PYTHONPATH": repo},
+    )
+    assert proc.returncode == 3
+    assert not os.path.isdir(part)  # the crash left the bucket renamed away
+
+    got = sinks.lookup(table_dir, "doc_id", "doc-5", N_BUCKETS)
+    assert got is not None and got.to_pylist() == [{"doc_id": "doc-5", "val": 35}]
+    assert not [n for n in os.listdir(table_dir) if n.startswith(f".bucket={b}.")]
+
+    other = next(k for k in before if k != "doc-5")
+    stats = sinks.upsert_row(table_dir, "doc_id", {"doc_id": other, "val": 1}, N_BUCKETS)
+    assert stats["rows_updated"] == 1 and stats["partitions_total"] == N_BUCKETS
+    after = {r.doc_id: r.val for r in spark.read.parquet(part).collect()}
+    assert after == {**before, other: 1}

@@ -213,97 +213,3 @@ def assign_components(keys: DataFrame, links: DataFrame) -> DataFrame:
         )
     )
 
-
-def delta_component_remap(prev_assign: DataFrame, delta_links: DataFrame) -> DataFrame:
-    """(rep, component): merged id per representative touched by delta
-    links — the O(delta) core of :func:`assign_components_delta`,
-    exposed separately so the pipeline can prune its bucketed
-    assignment writes to only the components this remap actually moves.
-
-    Endpoints of delta links map to their current representative
-    (previous component for old norms, own node id for new); connected
-    components over that O(delta)-edge representative graph yields the
-    merged id per representative. Rows with rep == component are
-    untouched components that happened to gain an internal link.
-    """
-    node_of = F.concat_ws("|", "type", "norm")
-    prev_rep = prev_assign.select("type", "norm", F.col("component").alias("rep"))
-    ends = (
-        delta_links.select("type", F.col("src").alias("norm"))
-        .unionByName(delta_links.select("type", F.col("dst").alias("norm")))
-        .distinct()
-    )
-    reps = ends.join(prev_rep, ["type", "norm"], "left").select(
-        "type", "norm", F.coalesce("rep", node_of).alias("rep")
-    )
-    r_src = reps.select(
-        F.col("type").alias("ts"), F.col("norm").alias("sn"), F.col("rep").alias("rs")
-    )
-    r_dst = reps.select(
-        F.col("type").alias("td"), F.col("norm").alias("dn"), F.col("rep").alias("rd")
-    )
-    rep_edges = (
-        delta_links.join(
-            r_src, (F.col("type") == F.col("ts")) & (F.col("src") == F.col("sn"))
-        )
-        .join(r_dst, (F.col("type") == F.col("td")) & (F.col("dst") == F.col("dn")))
-        .select(F.col("rs").alias("src"), F.col("rd").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    return connected_components(rep_edges).withColumnRenamed("node", "rep")
-
-
-def assign_components_delta(
-    prev_assign: DataFrame, delta_links: DataFrame, new_norms: DataFrame
-) -> DataFrame:
-    """Incremental ``assign_components``: merge-only component update.
-
-    Valid exactly when the link set GREW (links = prev UNION delta, no
-    deletions — the incremental pipeline guarantees this on delta-links
-    ticks; cap-crossing and crash-retry ticks rebuild fully). Because a
-    component id is the lexicographic min member node, and every
-    previous component's id IS the min of its members, the merged
-    component's id equals the min over the merged representatives —
-    so the update is a remap of O(delta) representatives, never a CC
-    over the full links table:
-
-      * endpoints of delta links map to their current representative
-        (previous component id for old norms, own node id for new);
-      * connected components over that representative graph — O(delta
-        links) edges, tiny — yields rep -> merged id;
-      * previous assignments remap through it (identity when
-        untouched); new norms join it (singleton when unlinked).
-
-    Equality with a from-scratch ``assign_components`` over the merged
-    keys/links is pinned by tests (operator-level and pipeline
-    byte-identity).
-    """
-    remap = delta_component_remap(prev_assign, delta_links)
-    old_part = (
-        prev_assign.join(remap, prev_assign["component"] == remap["rep"], "left")
-        .select(
-            prev_assign["type"],
-            prev_assign["norm"],
-            F.coalesce(remap["component"], prev_assign["component"]).alias("component"),
-        )
-    )
-    return old_part.unionByName(place_new_norms(new_norms, remap))
-
-
-def place_new_norms(new_norms: DataFrame, remap: DataFrame) -> DataFrame:
-    """(type, norm, component) for norms first seen this tick: the
-    merged id from the :func:`delta_component_remap` output ``remap``
-    when a delta link reached the norm's own node, else the singleton
-    component named by that node id."""
-    node_of = F.concat_ws("|", "type", "norm")
-    return (
-        new_norms.select("type", "norm")
-        .distinct()
-        .withColumn("node", node_of)
-        .join(remap, F.col("node") == remap["rep"], "left")
-        .select(
-            "type", "norm",
-            F.coalesce(remap["component"], F.col("node")).alias("component"),
-        )
-    )

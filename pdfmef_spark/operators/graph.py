@@ -59,9 +59,9 @@ def doc_nodes(triples: DataFrame) -> DataFrame:
     )
 
 
-def _resolve_slots(triples: DataFrame, smap) -> DataFrame:
-    """Entity-resolve both triple slots -> triples + (src, dst), dropping
-    rows whose either slot does not resolve.
+def _resolve_edges(triples: DataFrame, smap) -> DataFrame:
+    """Entity-resolved triples -> edges(src, dst, pred, weight); a row
+    whose either slot does not resolve is dropped.
 
     hasTitle/hasAbstract/hasFigure/affiliationString are document
     attributes, not graph relations — those strings are not entity
@@ -98,35 +98,10 @@ def _resolve_slots(triples: DataFrame, smap) -> DataFrame:
             F.col("dst_id")
         ),
     )
-    return t.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-
-
-def _resolve_edges(triples: DataFrame, smap) -> DataFrame:
-    """Entity-resolved triples -> edges(src, dst, pred, weight)."""
     return (
-        _resolve_slots(triples, smap)
+        t.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .groupBy("src", "dst", "pred")
         .agg(F.count("*").alias("weight"))
-    )
-
-
-def resolve_edges_flagged(triples: DataFrame, smap) -> DataFrame:
-    """:func:`_resolve_edges` plus a ``doc_src`` flag: true when the
-    group's subject slot is a DOC (src = xxhash64('DOC', url) of a
-    document processed in THIS batch when ``triples`` is a batch
-    delta). Every row of a group shares its subject, so the flag is
-    constant per group. The incremental pipeline uses it to split a
-    delta into pure-append edges (a first-time-processed url can never
-    collide with an existing (src, dst, pred) group) and
-    merge-with-history edges (entity subjects), which is what keeps the
-    bucket-pruned edge write O(delta)."""
-    return (
-        _resolve_slots(triples, smap)
-        .groupBy("src", "dst", "pred")
-        .agg(
-            F.count("*").alias("weight"),
-            F.max(F.col("subj_type") == F.lit("DOC")).alias("doc_src"),
-        )
     )
 
 

@@ -312,18 +312,20 @@ def streaming_tick_scaling(
 ) -> dict:
     """Per-tick latency as streamed batches ACCUMULATE (~n_batches drops).
 
-    Evidence target: with the delta+remap graph tail, a tick's cost is
-    O(delta + vocab), not O(corpus) — so per-tick wall must stay ~flat
-    (or grow only with the vocabulary) as batches 1..n accumulate, and
-    the processed-url ledger's anti-join must stay cheap as the ledger
+    What it shows: a tick's doc-local stages and links are O(delta),
+    while its graph tail (assignments, nodes, edges) is rebuilt from
+    all triples, the same tail ``run_pipeline`` writes. The per-stage
+    growth below separates the two as batches 1..n accumulate, and the
+    processed-url ledger's anti-join must stay cheap as the ledger
     grows. Each tick drops one parquet file of NEW urls into the
     arrival dir, restarts the availableNow stream against the same
     checkpoint (file-source dedup skips everything already processed),
     and times (a) the whole tick and (b) a standalone ledger anti-join
     probe of the next batch against the accumulated ledger. Reported:
-    per-tick walls, first-3 vs last-3 means, and their ratio — a flat
-    pipeline prints a ratio near 1 while an O(corpus) tail would print
-    ~n_batches/3.
+    per-tick walls, first-3 vs last-3 means, and their ratio — a ratio
+    near 1 means fixed per-job cost still outweighs the tail's
+    corpus-sized work; a ratio near ~n_batches/3 means it no longer
+    does.
     """
     import shutil
     import tempfile

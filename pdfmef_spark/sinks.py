@@ -16,10 +16,10 @@ fallback).
 Safety: the rewrite never reads and overwrites a path in the same job —
 affected partitions are written to a hidden sibling temp dir first,
 then swapped in by rename (a crash between the two renames leaves the
-old data in a hidden dir, which the next point operation on the bucket
-renames back; Iceberg's metadata commit makes the same operation
-atomic, see _swap_in). Untouched partition directories
-are never listed, read, or rewritten (asserted by test).
+old data in a hidden dir, which the next operation on the bucket, bulk
+or point, renames back; Iceberg's metadata commit makes the same
+operation atomic, see _swap_in). Untouched partition directories are
+never listed, read, or rewritten (asserted by test).
 
 Two write paths share that one swap (:func:`_swap_in`, which takes the
 writer as a callable):
@@ -48,8 +48,10 @@ writer as a callable):
   pyarrow's default nanosecond timestamps make every full Spark read of
   the table fail with a column type mismatch. Results and replies equal
   the bulk path's (pinned by tests/test_sinks.py, which runs the bulk
-  path as the reference). Every point operation first rolls back a swap
-  of its bucket that a crash interrupted (:func:`_recover`).
+  path as the reference).
+
+Every operation of either path first rolls back a swap of each bucket
+it touches that a crash interrupted (:func:`_recover`).
 
 Neither path locks: a reader that lists a bucket between the two
 renames of a swap finds it missing. Callers serialize writers against
@@ -100,6 +102,22 @@ def _part_dirs(table_dir: str, bucket_col: str, n_buckets: int | None) -> list[s
     return dirs
 
 
+def _recovered_buckets(
+    table_dir: str, df: DataFrame, key_col: str, bucket_col: str, n_buckets: int | None
+) -> list[int]:
+    """Sorted buckets of `df`'s keys, each first rolled back from a swap
+    a crash interrupted (:func:`_recover`), so that the bucket listing
+    that follows sees every bucket of the table. Empty without
+    `n_buckets` (no bucket layout to recover)."""
+    if n_buckets is None:
+        return []
+    b = bucket_of(F.col(key_col), n_buckets).alias(bucket_col)
+    buckets = sorted(r[bucket_col] for r in df.select(b).distinct().collect())
+    for k in buckets:
+        _recover(f"{table_dir}/{bucket_col}={k}")
+    return buckets
+
+
 def delete_by_key(
     spark: SparkSession,
     table_dir: str,
@@ -118,10 +136,9 @@ def delete_by_key(
     rewrites nothing.
     """
     keys = keys.select(F.col(key_col)).distinct()
+    affected = _recovered_buckets(table_dir, keys, key_col, bucket_col, n_buckets)
     part_dirs = _part_dirs(table_dir, bucket_col, n_buckets)
     if part_dirs and n_buckets is not None:
-        k = keys.withColumn(bucket_col, bucket_of(F.col(key_col), n_buckets))
-        affected = {r[bucket_col] for r in k.select(bucket_col).distinct().collect()}
         targets = [d for d in part_dirs if int(d.split("=", 1)[1]) in affected]
         rows_deleted = 0
         rewritten = 0
@@ -161,8 +178,8 @@ def _swap_in(target_dir: str, write: Callable[[str], None]) -> None:
     and the `bucket=` and data-file listings in this module never see
     them. The swap is two renames, not one atomic exchange: a crash
     between them leaves the data in the hidden `.<name>.old-*` dir
-    rather than committed (the point path rolls it back, see
-    :func:`_recover`) — on an Iceberg catalog
+    rather than committed (the next operation on the bucket rolls it
+    back, see :func:`_recover`) — on an Iceberg catalog
     this whole operation is a single atomic metadata commit, which is
     what a production deployment should use; this is the explicit
     plain-parquet fallback.
@@ -213,12 +230,10 @@ def upsert_by_key(
             "MERGE requires at most one source row per target key "
             "(dropDuplicates the updates first if last-writer-wins is intended)"
         )
+    affected = _recovered_buckets(table_dir, updates, key_col, bucket_col, n_buckets)
     part_dirs = _part_dirs(table_dir, bucket_col, n_buckets)
     if part_dirs and n_buckets is not None:
         up = updates.withColumn(bucket_col, bucket_of(F.col(key_col), n_buckets))
-        affected = sorted(
-            r[bucket_col] for r in up.select(bucket_col).distinct().collect()
-        )
         rows_updated = rows_inserted = rewritten = 0
         for b in affected:
             src = f"{table_dir}/{bucket_col}={b}"

@@ -164,93 +164,3 @@ def test_unicode_representatives_agree(spark, cutoff):
     edges = [("é", "e1"), ("e1", "ß"), ("中", "ヱ"), ("α", "β"), ("β", "b")]
     _check(spark, edges, cutoff)
 
-
-def test_assign_components_delta_equals_full(spark):
-    """Merge-only incremental assignment must equal a from-scratch
-    assign_components over the merged keys/links — including a
-    transitive old-A <- new -> old-B merge, a new-new link, a new
-    singleton, and untouched old components."""
-    from pdfmef_spark.operators.components import (
-        assign_components, assign_components_delta,
-    )
-
-    old_keys = spark.createDataFrame(
-        [("E", n) for n in ["a", "b", "c", "d", "q", "z"]],
-        "type string, norm string",
-    )
-    old_links = spark.createDataFrame(
-        [("E", "a", "b", 0.9), ("E", "c", "d", 0.8)],
-        "type string, src string, dst string, score double",
-    )
-    new_norms = spark.createDataFrame(
-        [("E", n) for n in ["m", "n", "s"]], "type string, norm string"
-    )
-    # m bridges the {a,b} and {c,d} components; n-m is a new-new link;
-    # s stays a singleton; q/z untouched (q linked to nothing before)
-    delta_links = spark.createDataFrame(
-        [("E", "b", "m", 0.9), ("E", "m", "c", 0.9), ("E", "m", "n", 0.9)],
-        "type string, src string, dst string, score double",
-    )
-    prev = assign_components(old_keys, old_links)
-    got = {
-        tuple(r)
-        for r in assign_components_delta(prev, delta_links, new_norms).collect()
-    }
-    want = {
-        tuple(r)
-        for r in assign_components(
-            old_keys.unionByName(new_norms), old_links.unionByName(delta_links)
-        ).collect()
-    }
-    assert got == want
-
-
-def test_assign_components_delta_random_merge_cases(spark):
-    """Seeded random breadth for the merge-only invariant: across
-    random old graphs and random delta links (each touching >= 1 new
-    norm), incremental assignment must equal from-scratch. Covers
-    chains of merges, repeated links, and isolated norms the crafted
-    case can't enumerate."""
-    import random
-
-    from pdfmef_spark.operators.components import (
-        assign_components, assign_components_delta, delta_component_remap,
-    )
-
-    universe = [f"n{i:02d}" for i in range(20)]
-    for seed in range(6):
-        rng = random.Random(f"delta-cc-{seed}")
-        old = rng.sample(universe, 12)
-        new = rng.sample([u for u in universe if u not in old], 4)
-        old_links = [
-            ("E", *rng.sample(old, 2), 0.9) for _ in range(rng.randint(0, 6))
-        ]
-        delta_links = []
-        for _ in range(rng.randint(1, 6)):
-            a = rng.choice(new)
-            b = rng.choice(old + new)
-            if a != b:
-                delta_links.append(("E", a, b, 0.9))
-        k = "type string, norm string"
-        l = "type string, src string, dst string, score double"
-        old_keys = spark.createDataFrame([("E", n) for n in old], k)
-        new_keys = spark.createDataFrame([("E", n) for n in new], k)
-        ol = spark.createDataFrame(old_links, l) if old_links else (
-            spark.createDataFrame([], l))
-        dl = spark.createDataFrame(delta_links, l)
-        prev = assign_components(old_keys, ol)
-        # one row per representative: the pipeline's entity-id remap
-        # relies on it (one new id per old id, so no split to probe for)
-        reps = [r.rep for r in delta_component_remap(prev, dl).collect()]
-        assert len(reps) == len(set(reps)), f"seed {seed}: duplicate rep"
-        got = {
-            tuple(r)
-            for r in assign_components_delta(prev, dl, new_keys).collect()
-        }
-        want = {
-            tuple(r)
-            for r in assign_components(
-                old_keys.unionByName(new_keys), ol.unionByName(dl)
-            ).collect()
-        }
-        assert got == want, f"seed {seed}: {got ^ want}"

@@ -151,35 +151,23 @@ def test_incremental_first_batch_with_empty_stage(spark, tmp_path):
 
 
 def test_delta_tail_three_batches_byte_identical(spark, smoke_pages, tmp_path):
-    """Three incremental batches: batches 2+ must take the delta+remap
-    graph tail (component-stable entity ids, no historical-triples
-    rescan) and still end byte-identical to a from-scratch run — the
-    round-4 'documented next increment'."""
+    """Three incremental batches: batches 2+ take the delta links path
+    and still end byte-identical to a from-scratch run, in links,
+    assignments and graph."""
     pages = smoke_pages
     b = F.pmod(F.xxhash64("url"), F.lit(3))
     inc_dir = str(tmp_path / "inc")
     r1 = P.run_pipeline_incremental(spark, pages.filter(b == 0), inc_dir)
     r2 = P.run_pipeline_incremental(spark, pages.filter(b != 2), inc_dir)
     r3 = P.run_pipeline_incremental(spark, pages, inc_dir)
-    # first batch has no previous tail; later batches must be delta
-    assert r1.results["edges"].metrics["tail_mode"] == "full"
-    assert r2.results["edges"].metrics["tail_mode"] == "delta"
-    assert r3.results["edges"].metrics["tail_mode"] == "delta"
-    # the links stage must ALSO run delta (prev links + new-norm pairs
-    # only), and the accumulated links table must equal from-scratch
+    # the links stage runs delta (prev links + new-norm pairs only),
+    # and the accumulated links table must equal from-scratch
     assert r1.results["links"].metrics["links_mode"] == "full"
     assert r2.results["links"].metrics["links_mode"] == "delta"
     assert r3.results["links"].metrics["links_mode"] == "delta"
-    # assignments ride the same delta ticks (merge-only remap, no CC
-    # over the full links table) and still match from-scratch below
-    assert r2.results["assignments"].metrics["assignments_mode"] == "delta"
-    assert r3.results["assignments"].metrics["assignments_mode"] == "delta"
     run_full = P.run_pipeline(spark, pages, str(tmp_path / "full"))
     assert _links_set(r3) == _links_set(run_full)
     assert _graph_sets(r3) == _graph_sets(run_full)
-    # compare on the semantic columns: the incremental store hive-
-    # buckets assignments by component hash (a `cb` layout column the
-    # flat batch-pipeline table does not carry)
     a = {(r.type, r.norm, r.component) for r in r3.df("assignments").collect()}
     b = {(r.type, r.norm, r.component) for r in run_full.df("assignments").collect()}
     assert a == b
@@ -201,55 +189,23 @@ def _record_frames(monkeypatch, *methods):
     return seen
 
 
-def _scan_roots(df):
-    """Root paths of every parquet file scan in ``df``'s physical plan."""
-    roots = []
-    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if leaf.getClass().getSimpleName() == "FileSourceScanExec":
-            paths = leaf.relation().location().rootPaths()
-            for k in range(paths.size()):
-                roots.append(paths.apply(k).toUri().getPath().rstrip("/"))
-    return roots
-
-
-def test_delta_tail_plan_never_scans_historical_triples(
-    spark, smoke_pages, tmp_path, monkeypatch
-):
-    """A delta tick reads the CURRENT batch's triples partition and
-    never the triples table as a whole: of every frame tick 2
-    checkpoints or writes, the only triples scan is
-    ``triples/batch_id=1`` (tail input O(delta + vocab + prev graph),
-    not O(all triples))."""
+def _layout(stage_dir):
+    """The hive partition columns of a stage directory, outermost first
+    (the ``col=`` prefixes along the path to its first data file)."""
     import os
 
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    pages = smoke_pages
-    b = F.pmod(F.xxhash64("url"), F.lit(3))
-    inc_dir = os.path.realpath(str(tmp_path / "inc"))
-    P.run_pipeline_incremental(spark, pages.filter(b == 0), inc_dir)
-    df_cls = type(spark.range(1))
-    seen = _record_frames(
-        monkeypatch, (df_cls, "localCheckpoint"), (DataFrameWriter, "parquet")
-    )
-    r2 = P.run_pipeline_incremental(spark, pages, inc_dir)
-    monkeypatch.undo()
-    assert r2.results["edges"].metrics["tail_mode"] == "delta"
-
-    triples_dir = f"{inc_dir}/triples"
-    triples_roots = {
-        r for df in seen for r in _scan_roots(df)
-        if r == triples_dir or r.startswith(triples_dir + "/")
-    }
-    assert triples_roots == {f"{triples_dir}/batch_id=1"}
+    for root, _dirs, files in sorted(os.walk(stage_dir)):
+        if any(f.endswith(".parquet") for f in files):
+            rel = os.path.relpath(root, stage_dir)
+            return [] if rel == "." else [p.split("=", 1)[0] for p in rel.split(os.sep)]
+    return None
 
 
 def test_legacy_layout_tick_rebuilds_full(spark, smoke_pages, tmp_path):
-    """A store whose assignments/nodes/edges predate the bucket columns
-    (cb/nb/eb) gets one full relayout rebuild of the tail, even on a
-    delta-links tick: the tick writes the bucket columns again and still
+    """A store whose assignments/nodes/edges are in the older bucketed
+    layout (assignments by ``cb``, nodes by (type, ``nb``), edges by
+    (pred, ``eb``), 64 hash buckets each) is migrated by its next tick,
+    a delta-links tick: the tick leaves run_pipeline's flat layout and
     equals a from-scratch run."""
     import shutil
 
@@ -257,30 +213,35 @@ def test_legacy_layout_tick_rebuilds_full(spark, smoke_pages, tmp_path):
     b = F.pmod(F.xxhash64("url"), F.lit(3))
     inc_dir = str(tmp_path / "inc")
     P.run_pipeline_incremental(spark, pages.filter(b == 0), inc_dir)
-    # the pre-bucketing layout: flat assignments, nodes by type, edges
-    # by pred (the run_pipeline shape)
-    legacy = {"assignments": ("cb", []), "nodes": ("nb", ["type"]), "edges": ("eb", ["pred"])}
-    for st, (bucket_col, parts) in legacy.items():
+    bucket = lambda c: F.pmod(F.xxhash64(c), F.lit(64))  # noqa: E731
+    legacy = {
+        "assignments": ("cb", "component", []),
+        "nodes": ("nb", "entity_id", ["type"]),
+        "edges": ("eb", "src", ["pred"]),
+    }
+    for st, (bucket_col, of, parts) in legacy.items():
         tmp = str(tmp_path / f"legacy_{st}")
-        spark.read.parquet(f"{inc_dir}/{st}").drop(bucket_col).write.partitionBy(
-            *parts
-        ).parquet(tmp)
+        spark.read.parquet(f"{inc_dir}/{st}").withColumn(
+            bucket_col, bucket(F.col(of))
+        ).write.partitionBy(*parts, bucket_col).parquet(tmp)
         shutil.rmtree(f"{inc_dir}/{st}")
         shutil.move(tmp, f"{inc_dir}/{st}")
-        assert bucket_col not in spark.read.parquet(f"{inc_dir}/{st}").columns
+        assert _layout(f"{inc_dir}/{st}") == [*parts, bucket_col]
 
     r2 = P.run_pipeline_incremental(spark, pages.filter(b != 2), inc_dir)
     assert r2.results["links"].metrics["links_mode"] == "delta"
-    assert r2.results["assignments"].metrics["assignments_mode"] == "full"
-    assert r2.results["edges"].metrics["tail_mode"] == "full"
-    for st, (bucket_col, _) in legacy.items():
-        assert bucket_col in spark.read.parquet(f"{inc_dir}/{st}").columns, st
     run_full = P.run_pipeline(spark, pages.filter(b != 2), str(tmp_path / "full"))
+    for st, (bucket_col, _, parts) in legacy.items():
+        assert _layout(f"{inc_dir}/{st}") == _layout(f"{run_full.out_dir}/{st}") == parts
+        assert bucket_col not in spark.read.parquet(f"{inc_dir}/{st}").columns, st
     assert _graph_sets(r2) == _graph_sets(run_full)
+    a = {(r.type, r.norm, r.component) for r in r2.df("assignments").collect()}
+    want = {(r.type, r.norm, r.component) for r in run_full.df("assignments").collect()}
+    assert a == want
 
 
-def test_delta_tick_leaves_nothing_cached(spark, smoke_pages, tmp_path, monkeypatch):
-    """Every frame a delta tick persists is unpersisted by the time the
+def test_tick_leaves_nothing_cached(spark, smoke_pages, tmp_path, monkeypatch):
+    """Every frame a tick persists is unpersisted by the time the
     tick returns: a streaming driver runs one tick per micro-batch, so a
     frame left cached per tick grows the block store without bound."""
     from pyspark import StorageLevel
@@ -294,18 +255,18 @@ def test_delta_tick_leaves_nothing_cached(spark, smoke_pages, tmp_path, monkeypa
     persisted = _record_frames(monkeypatch, (df_cls, "persist"), (df_cls, "cache"))
     r2 = P.run_pipeline_incremental(spark, pages.filter(b != 2), inc_dir)
     monkeypatch.undo()
-    assert r2.results["edges"].metrics["tail_mode"] == "delta"
-    assert persisted, "a delta tick persists its shared inputs"
+    assert r2.results["links"].metrics["links_mode"] == "delta"
+    assert persisted, "a tick persists its shared inputs"
     leaked = [df for df in persisted if df.storageLevel != StorageLevel.NONE]
     assert not leaked, [df.columns for df in leaked]
 
 
 def test_delta_tail_crash_retry_falls_back_to_full(spark, smoke_pages, tmp_path):
-    """A retry of a batch whose tail already wrote (crash before the
-    ledger commit) must NOT delta-update — its edges are already folded
-    into prev_edges and would double-count. The batch's existing
-    extracted partition forces the idempotent full rebuild, and the
-    result still matches from-scratch."""
+    """A retry of a batch whose links already wrote (crash before the
+    ledger commit) must NOT delta-update links — its pairs are already
+    folded into the previous links and would be added twice. The
+    batch's existing extracted partition forces the idempotent full
+    rebuild, and the result still matches from-scratch."""
     import shutil
 
     pages = smoke_pages
@@ -319,9 +280,8 @@ def test_delta_tail_crash_retry_falls_back_to_full(spark, smoke_pages, tmp_path)
     shutil.rmtree(f"{inc_dir}/ledger")
     spark.createDataFrame(rows, schema).write.parquet(f"{inc_dir}/ledger")
     retry = P.run_pipeline_incremental(spark, pages, inc_dir)
-    assert retry.results["edges"].metrics["tail_mode"] == "full"
-    # the links stage shares the poisoned-retry guard: prev links
-    # already contain this batch's delta, so a delta union would dup
+    # prev links already contain this batch's delta, so a delta union
+    # would dup
     assert retry.results["links"].metrics["links_mode"] == "full"
     run_full = P.run_pipeline(spark, pages, str(tmp_path / "full"))
     assert _links_set(retry) == _links_set(run_full)
@@ -348,7 +308,6 @@ def test_delta_tail_crash_retry_with_new_run_id_falls_back_to_full(
     spark.createDataFrame(rows, schema).write.parquet(f"{inc_dir}/ledger")
     retry = P.run_pipeline_incremental(spark, pages, inc_dir, run_id="attempt-2")
     assert retry.results["links"].metrics["links_mode"] == "full"
-    assert retry.results["edges"].metrics["tail_mode"] == "full"
     run_full = P.run_pipeline(spark, pages, str(tmp_path / "full"))
     assert _links_set(retry) == _links_set(run_full)
     assert _graph_sets(retry) == _graph_sets(run_full)
@@ -405,14 +364,8 @@ def test_delta_links_cap_crossing_falls_back(spark, tmp_path, monkeypatch):
     assert r2.results["links"].metrics["links_mode"] == "full"
     run_full = P.run_pipeline(spark, all_pages, str(tmp_path / "full"))
     assert _links_set(r2) == _links_set(run_full)
-    # a full links rebuild can shrink the link set, under which the
-    # remap-based graph tail is unsound (a split can hide from the
-    # n_new probe when one fragment keeps the old component id —
-    # ADVICE r5 high); the tick must rebuild the tail fully and match
-    # from-scratch byte-for-byte on the GRAPH too, not just links
-    assert r2.results["edges"].metrics["tail_mode"] == "full"
-    # semantic columns only: the incremental store hive-buckets nodes/
-    # edges (nb/eb layout columns the flat batch tables do not carry)
+    # a full links rebuild can shrink the link set and split a
+    # component; the graph must still match from-scratch
     cols = {
         "nodes": ("entity_id", "canonical", "type", "n_mentions"),
         "edges": ("src", "dst", "pred", "weight"),
@@ -450,85 +403,12 @@ def test_full_links_tick_records_cap_drops(spark, tmp_path, monkeypatch):
     assert r2.results["links"].metrics == {"links_mode": "full", **caps}
 
 
-def test_delta_tick_rewrites_only_affected_assignment_buckets(
-    spark, smoke_pages, tmp_path
-):
-    """The assignments table is hive-bucketed by component hash; a
-    merge-only delta tick must append/replace ONLY buckets holding a
-    merged representative or a new norm — files of untouched buckets
-    stay byte-for-byte in place (same path, same mtime), which is what
-    makes the per-tick tail write O(delta) instead of O(vocab)."""
-    import glob
-    import os
-
-    pages = smoke_pages
-    b = F.pmod(F.xxhash64("url"), F.lit(3))
-    inc_dir = str(tmp_path / "inc")
-    P.run_pipeline_incremental(spark, pages.filter(b == 0), inc_dir)
-    before = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(f"{inc_dir}/assignments/cb=*/*.parquet")
-    }
-    assert before, "bootstrap tick must produce bucketed assignments"
-    r2 = P.run_pipeline_incremental(spark, pages.filter(b != 2), inc_dir)
-    assert r2.results["assignments"].metrics["assignments_mode"] == "delta"
-    after = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(f"{inc_dir}/assignments/cb=*/*.parquet")
-    }
-    surviving = [p for p in before if p in after]
-    assert surviving, "a delta tick must leave untouched buckets in place"
-    for p in surviving:
-        assert before[p] == after[p], p
-    # content equality with from-scratch is pinned separately by
-    # test_delta_tail_three_batches_byte_identical
-    assert set(after) != set(before)  # the tick did write somewhere
-
-
-def test_delta_tick_rewrites_only_affected_graph_buckets(
-    spark, smoke_pages, tmp_path
-):
-    """Nodes/edges get the same bucket-pruned treatment: a delta tick
-    must leave at least some node and edge bucket files physically
-    untouched (same path + mtime) while appending the batch's DOC node
-    / DOC-subject edge partitions."""
-    import glob
-    import os
-
-    pages = smoke_pages
-    b = F.pmod(F.xxhash64("url"), F.lit(3))
-    inc_dir = str(tmp_path / "inc")
-    P.run_pipeline_incremental(spark, pages.filter(b == 0), inc_dir)
-    snap = {
-        st: {
-            p: os.path.getmtime(p)
-            for p in glob.glob(f"{inc_dir}/{st}/*/*/*.parquet")
-        }
-        for st in ("nodes", "edges")
-    }
-    assert snap["nodes"] and snap["edges"]
-    r2 = P.run_pipeline_incremental(spark, pages.filter(b != 2), inc_dir)
-    assert r2.results["edges"].metrics["tail_mode"] == "delta"
-    for st in ("nodes", "edges"):
-        after = {
-            p: os.path.getmtime(p)
-            for p in glob.glob(f"{inc_dir}/{st}/*/*/*.parquet")
-        }
-        surviving = [p for p in snap[st] if p in after]
-        assert surviving, f"{st}: delta tick should not rewrite every bucket"
-        for p in surviving:
-            assert snap[st][p] == after[p], p
-        # the batch's append partition landed
-        assert set(after) != set(snap[st]), st
-
-
 def test_delta_tick_with_no_new_norms_matches_full(spark, smoke_pages, tmp_path):
     """A tick whose only page is a clone of a stored doc under a new url
-    brings no new surface norms, so the delta assignments append writes
-    zero rows. The accumulated assignments table must still be read back
-    whole: the graph equals a from-scratch run over the same pages (a
-    zero-row append used to return an EMPTY assignments frame, so the
-    tick dropped every entity-resolved edge and left n_mentions stale)."""
+    brings no new surface norms and no new links. The graph must still
+    equal a from-scratch run over the same pages (a zero-row delta write
+    once returned an EMPTY assignments frame, so the tick dropped every
+    entity-resolved edge and left n_mentions stale)."""
     b = F.pmod(F.xxhash64("url"), F.lit(3))
     first = smoke_pages.filter(b == 0)
     src = first.orderBy("url").limit(1)
@@ -538,6 +418,41 @@ def test_delta_tick_with_no_new_norms_matches_full(spark, smoke_pages, tmp_path)
     P.run_pipeline_incremental(spark, first, inc_dir)
     r2 = P.run_pipeline_incremental(spark, pages, inc_dir)
     assert _batch_rows(spark, inc_dir, "extracted", 1) == 1
-    assert r2.results["edges"].metrics["tail_mode"] == "delta"
+    assert r2.results["links"].metrics["links_mode"] == "delta"
     run_full = P.run_pipeline(spark, pages, str(tmp_path / "full"))
     assert _graph_sets(r2) == _graph_sets(run_full)
+
+
+def test_tick_broadcast_decision_runs_no_count_job(
+    spark, smoke_pages, tmp_path, monkeypatch
+):
+    """A tick decides to broadcast the surface map from the footer row
+    counts of the ``surfaces`` partitions, an upper bound on the
+    vocabulary, instead of a Spark job that counts the vocabulary up to
+    its limit; the edges plan still broadcasts the map."""
+    from pdfmef_spark.operators import graph
+
+    b = F.pmod(F.xxhash64("url"), F.lit(3))
+    inc_dir = str(tmp_path / "inc")
+    P.run_pipeline_incremental(spark, smoke_pages.filter(b == 0), inc_dir)
+
+    df_cls = type(smoke_pages)
+    counted, built = [], []
+    real_count, real_materialize = df_cls.count, graph.materialize_graph
+
+    def count(self):
+        counted.append(self._jdf.queryExecution().logical().toString())
+        return real_count(self)
+
+    def materialize(*args, **kwargs):
+        built.append(real_materialize(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(df_cls, "count", count)
+    monkeypatch.setattr(graph, "materialize_graph", materialize)
+    P.run_pipeline_incremental(spark, smoke_pages.filter(b != 2), inc_dir)
+    monkeypatch.undo()
+    assert not [c for c in counted if c.startswith("GlobalLimit 100001")], counted
+    ((_, edges_df),) = built
+    plan = edges_df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan[:1500]

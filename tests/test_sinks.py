@@ -382,17 +382,13 @@ def test_point_path_over_multi_file_bucket_with_null_key(spark, tmp_path):
     assert sinks.lookup(dirs["point"], "doc_id", keys[0], N_BUCKETS)["val"].to_pylist() == [100]
 
 
-def test_point_ops_recover_an_interrupted_swap(spark, tmp_path):
-    """A process that dies between the two renames of a bucket swap
-    leaves the bucket renamed away; the next point operation rolls it
-    back, so no row is lost and the bucket count does not drop."""
+def _crash_mid_swap(table_dir: str, key: str) -> None:
+    """Run a point upsert of `key` in a child process that dies right
+    after the swap's first rename, leaving the key's bucket renamed
+    away."""
     import subprocess
     import sys
 
-    table_dir = _make_table(spark, tmp_path)
-    b = sinks.bucket_of_key("doc-5", N_BUCKETS)
-    part = f"{table_dir}/bucket={b}"
-    before = {r.doc_id: r.val for r in spark.read.parquet(part).collect()}
     child = f"""
 import os
 from pdfmef_spark import sinks
@@ -404,7 +400,7 @@ def rename(src, dst):
     os._exit(3)  # die after the swap's first rename
 
 os.rename = rename
-sinks.upsert_row({table_dir!r}, "doc_id", {{"doc_id": "doc-5", "val": -5}}, {N_BUCKETS})
+sinks.upsert_row({table_dir!r}, "doc_id", {{"doc_id": {key!r}, "val": -5}}, {N_BUCKETS})
 """
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     proc = subprocess.run(
@@ -412,7 +408,19 @@ sinks.upsert_row({table_dir!r}, "doc_id", {{"doc_id": "doc-5", "val": -5}}, {N_B
         env={**os.environ, "PYTHONPATH": repo},
     )
     assert proc.returncode == 3
+    part = f"{table_dir}/bucket={sinks.bucket_of_key(key, N_BUCKETS)}"
     assert not os.path.isdir(part)  # the crash left the bucket renamed away
+
+
+def test_point_ops_recover_an_interrupted_swap(spark, tmp_path):
+    """A process that dies between the two renames of a bucket swap
+    leaves the bucket renamed away; the next point operation rolls it
+    back, so no row is lost and the bucket count does not drop."""
+    table_dir = _make_table(spark, tmp_path)
+    b = sinks.bucket_of_key("doc-5", N_BUCKETS)
+    part = f"{table_dir}/bucket={b}"
+    before = {r.doc_id: r.val for r in spark.read.parquet(part).collect()}
+    _crash_mid_swap(table_dir, "doc-5")
 
     got = sinks.lookup(table_dir, "doc_id", "doc-5", N_BUCKETS)
     assert got is not None and got.to_pylist() == [{"doc_id": "doc-5", "val": 35}]
@@ -423,3 +431,37 @@ sinks.upsert_row({table_dir!r}, "doc_id", {{"doc_id": "doc-5", "val": -5}}, {N_B
     assert stats["rows_updated"] == 1 and stats["partitions_total"] == N_BUCKETS
     after = {r.doc_id: r.val for r in spark.read.parquet(part).collect()}
     assert after == {**before, other: 1}
+
+
+def test_bulk_ops_recover_an_interrupted_swap(spark, tmp_path):
+    """The bulk sinks roll back an interrupted swap of every bucket they
+    touch before listing it: a bulk delete then finds the bucket renamed
+    away and deletes from it, and a bulk upsert merges into its rows
+    instead of recreating it from the updates alone."""
+    table_dir = _make_table(spark, tmp_path)
+    b = sinks.bucket_of_key("doc-5", N_BUCKETS)
+    part = f"{table_dir}/bucket={b}"
+    before = {r.doc_id: r.val for r in spark.read.parquet(part).collect()}
+    victim, other = sorted(k for k in before if k != "doc-5")[:2]
+
+    _crash_mid_swap(table_dir, "doc-5")
+    doomed = spark.createDataFrame([(victim,)], "doc_id string")
+    stats = sinks.delete_by_key(spark, table_dir, "doc_id", doomed, n_buckets=N_BUCKETS)
+    assert stats == {
+        "rows_deleted": 1, "partitions_rewritten": 1, "partitions_total": N_BUCKETS
+    }
+    del before[victim]
+    assert {r.doc_id: r.val for r in spark.read.parquet(part).collect()} == before
+
+    _crash_mid_swap(table_dir, "doc-5")
+    updates = spark.createDataFrame([(other, 1)], "doc_id string, val long")
+    stats = sinks.upsert_by_key(spark, table_dir, "doc_id", updates, n_buckets=N_BUCKETS)
+    assert stats == {
+        "rows_updated": 1, "rows_inserted": 0,
+        "partitions_rewritten": 1, "partitions_total": N_BUCKETS,
+    }
+    assert {r.doc_id: r.val for r in spark.read.parquet(part).collect()} == {
+        **before, other: 1
+    }
+    assert not [n for n in os.listdir(table_dir) if n.startswith(".bucket=")]
+    assert spark.read.parquet(table_dir).count() == 999

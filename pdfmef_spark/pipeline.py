@@ -22,6 +22,7 @@ tests/test_pipeline.py::test_resume_*).
 from __future__ import annotations
 
 import functools
+import json
 import os
 import time
 from dataclasses import dataclass, field
@@ -94,7 +95,7 @@ def _write_stage(
     error_col: str | None = None,
     partition_by: list[str] | None = None,
     extra_obs=None,
-    out_metrics: dict | None = None,
+    metrics: dict | None = None,
     writer_options: dict | None = None,
     counts_path: str | None = None,
 ) -> tuple[DataFrame, int]:
@@ -110,6 +111,11 @@ def _write_stage(
     the same information by re-parsing its result log
     (src/extractor/main.py:23-41) — here it is observed once and
     stored as data, with zero re-scan of the stage output.
+
+    ``metrics`` (path decisions the caller took, e.g. the links mode)
+    go into the manifest ``complete`` row as JSON, with the write's
+    observed operator metrics (``extra_obs``) merged into the dict in
+    place.
     """
     path = f"{out_dir}/{stage}"
     err_expr = (
@@ -141,23 +147,18 @@ def _write_stage(
     rows_out = int(totals["rows_out"] or 0)
     # operator-level side metrics (e.g. linking cap drop counters) rode
     # the same write job via their own Observation — available now
-    metrics_json = None
+    metrics = {} if metrics is None else metrics
     if extra_obs is not None:
-        import json
-
         try:
-            vals = {k: int(v) for k, v in dict(extra_obs.get).items()}
+            metrics.update({k: int(v) for k, v in dict(extra_obs.get).items()})
         except Exception:
             # Spark 4.1 AQE empty-relation propagation drops sub-root
             # CollectMetrics rows when the stage output is EMPTY (the
             # root observation above still delivers). An empty stage has
             # no candidates to have capped — record the metrics as absent
             # rather than failing the write.
-            vals = None
-        if vals is not None:
-            if out_metrics is not None:
-                out_metrics.update(vals)
-            metrics_json = json.dumps(vals, sort_keys=True)
+            pass
+    metrics_json = json.dumps(metrics, sort_keys=True) if metrics else None
 
     counts = _per_partition_counts(counts_path or path)
     records = []
@@ -248,29 +249,23 @@ def _has_parquet(path: str) -> bool:
 
 
 def _timed_stage(
-    spark: SparkSession, run: "PipelineRun", name: str, build, **write_kw
+    spark: SparkSession, run: "PipelineRun", name: str, build,
+    metrics: dict | None = None, **write_kw
 ) -> DataFrame:
     """Build one stage's frame, write it with :func:`_write_stage`, and
     record the timed :class:`StageResult` (with the rows the write
-    emitted and any observed operator metrics) under
-    ``run.results[name]``."""
+    emitted, the caller's path decisions ``metrics`` and any observed
+    operator metrics) under ``run.results[name]``."""
     t0 = time.time()
-    metrics: dict = {}
+    metrics = dict(metrics or {})
     df, rows = _write_stage(
-        spark, run.out_dir, run.run_id, name, build(), out_metrics=metrics, **write_kw
+        spark, run.out_dir, run.run_id, name, build(), metrics=metrics, **write_kw
     )
     run.results[name] = StageResult(
         name, df, recomputed=True, rows=rows, seconds=round(time.time() - t0, 2),
         metrics=metrics or None,
     )
     return df
-
-
-def _add_metrics(run: "PipelineRun", name: str, **metrics) -> None:
-    """Merge path decisions into a stage's metrics, keeping any the
-    stage's write observed."""
-    res = run.results[name]
-    res.metrics = {**(res.metrics or {}), **metrics}
 
 
 def _graph_tail(
@@ -522,11 +517,6 @@ def run_pipeline_incremental(
         norms_now = keys.select("type", "norm").distinct()
         bk_dir = f"{out_dir}/bucket_keys"
         have_prev_bk = _has_parquet(bk_dir)
-        links_delta_ok = (
-            not retry
-            and have_prev_bk
-            and os.path.exists(f"{out_dir}/links")
-        )
         if have_prev_bk:
             # always delta the key table itself (even on full-rebuild
             # ticks): a norm must live in exactly ONE batch partition,
@@ -547,13 +537,21 @@ def run_pipeline_incremental(
         else:
             new_norms = norms_now  # bootstrap: key the whole vocabulary
         inc_stage("bucket_keys", linking.tag_block_keys(new_norms))
-        links_mode = "full"
-        if links_delta_ok:
+        # the links decision and its reason go into the manifest links
+        # row, with the seconds the decision took (its crossed probe and
+        # the prev_links checkpoint are Spark jobs outside every stage)
+        t0 = time.time()
+        if not (have_prev_bk and os.path.exists(f"{out_dir}/links")):
+            reason = "bootstrap"
+        elif retry:
+            reason = "retry"
+        else:
             keyed_all = spark.read.parquet(bk_dir).withColumn(
                 "is_new", F.col("batch_id") == F.lit(batch_id)
             )
             d_pairs, crossed = linking.delta_candidate_pairs(keyed_all)
-            if crossed.limit(1).count() == 0:
+            reason = "crossed" if crossed.limit(1).count() else "delta"
+            if reason == "delta":
                 # checkpoint BEFORE the overwrite of the links dir; the
                 # explicit schema keeps a zero-link table readable (a
                 # file-less dir cannot infer one)
@@ -563,10 +561,14 @@ def run_pipeline_incremental(
                     .localCheckpoint()
                 )
                 delta_links = linking.score_pairs(d_pairs, threshold=link_threshold)
-                links_mode = "delta"
-        if links_mode == "delta":
+        decided = {
+            "links_mode": "delta" if reason == "delta" else "full",
+            "links_reason": reason,
+            "decide_s": round(time.time() - t0, 3),
+        }
+        if reason == "delta":
             links = stage(
-                "links", lambda: prev_links.unionByName(delta_links)
+                "links", lambda: prev_links.unionByName(delta_links), metrics=decided
             )
         else:
             # a full rebuild caps hot buckets like run_pipeline does:
@@ -577,9 +579,8 @@ def run_pipeline_incremental(
                 lambda: linking.link_entities(
                     threshold=link_threshold, cap_obs=cap_obs, keys=keys
                 ),
-                extra_obs=cap_obs,
+                extra_obs=cap_obs, metrics=decided,
             )
-        _add_metrics(run, "links", links_mode=links_mode)
 
         _graph_tail(
             stage, _merged("triples").drop("batch_id"), keys, links,

@@ -23,14 +23,19 @@ JVM<->Python round trips; the point path costs milliseconds):
   serving and batch share one implementation and cannot drift (pinned
   by tests/test_service.py against the Spark operator chain);
 * upload/delete are the point MERGE/DELETE sinks (sinks.upsert_row,
-  sinks.delete_key): copy-on-write of only the affected bucket with
-  pyarrow, through the same temp-dir-then-rename swap as the bulk
-  DataFrame sinks, with the reference's 5 MB upload cap enforced as a
-  rejected request rather than a cgi.maxlen crash;
+  sinks.delete_key): a new version of only the affected bucket, made
+  with pyarrow and swapped in through the same temp-dir-then-rename
+  swap as the bulk DataFrame sinks. Uploading a new document and
+  deleting it again rewrite only the bucket's small delta file and
+  hard-link its base files; updating or deleting a document held in a
+  base file rewrites the bucket. The reference's 5 MB upload cap is
+  enforced as a rejected request rather than a cgi.maxlen crash;
 * xml/json rendering mirrors the reference's ``output=xml|json`` param
   (stdlib only — the reference shells out to xmltodict).
 
 Only :meth:`DocService.init_from`, the bulk load, is a Spark job.
+:meth:`DocService.stats` counts the requests of each verb and the
+seconds they took.
 
 ``serve()`` wraps the service in a stdlib ``http.server`` for live
 parity demos. It is single-threaded (``HTTPServer``, not
@@ -42,9 +47,12 @@ does, with writes serialized against reads of the same bucket.
 
 from __future__ import annotations
 
+import collections
 import datetime
+import functools
 import hashlib
 import json
+import time
 from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -76,6 +84,23 @@ def citations_of(rows) -> list[str]:
     return sorted({r[3] for r in rows if r[2] == "cites"})
 
 
+def _counted(verb):
+    """Count a :class:`DocService` verb's requests and the seconds they
+    took (raised errors included) in the service's ``_stats``."""
+
+    @functools.wraps(verb)
+    def counted(self, *args, **kwargs):
+        t0 = time.perf_counter()
+        try:
+            return verb(self, *args, **kwargs)
+        finally:
+            c = self._stats[verb.__name__]
+            c[0] += 1
+            c[1] += time.perf_counter() - t0
+
+    return counted
+
+
 class DocService:
     """Per-document serving over a bucket-partitioned parquet store."""
 
@@ -83,6 +108,13 @@ class DocService:
         self.spark = spark
         self.table_dir = table_dir
         self.n_buckets = n_buckets
+        self._stats = collections.defaultdict(lambda: [0, 0.0])
+
+    def stats(self) -> dict:
+        """``{verb: {"requests": n, "seconds": total}}`` for every verb
+        served so far (the counters are not locked: requests run one at
+        a time, as in :func:`serve`)."""
+        return {v: {"requests": n, "seconds": s} for v, (n, s) in self._stats.items()}
 
     # -- store management ---------------------------------------------------
 
@@ -127,6 +159,7 @@ class DocService:
 
     # -- GET verbs (reference Extractor.GET methods) ------------------------
 
+    @_counted
     def text(self, url: str) -> str | None:
         """Extracted plain text (reference `method == 'text'`); None for a
         missing document or one whose extraction recorded an error."""
@@ -135,17 +168,20 @@ class DocService:
             return None
         return ex[0]
 
+    @_counted
     def header(self, url: str) -> dict | None:
         """Title/authors/keywords/affiliations/abstract as a dict
         (reference `method == 'header'` -> TEItoHeader fields)."""
         rows = self._triples(url)
         return None if rows is None else header_of(url, rows)
 
+    @_counted
     def citations(self, url: str) -> list[str] | None:
         """Outgoing cites targets (reference `method == 'citations'`)."""
         rows = self._triples(url)
         return None if rows is None else citations_of(rows)
 
+    @_counted
     def raw(self, url: str) -> bytes | None:
         """The stored source bytes (reference `method == 'file'`); None
         for a missing document or one stored without bytes."""
@@ -153,6 +189,7 @@ class DocService:
 
     # -- mutation verbs -----------------------------------------------------
 
+    @_counted
     def upload(self, url: str, html: str | bytes, warc_ts=None) -> dict:
         """POST analog: MERGE the document into its bucket (one-match
         contract; oversized payloads rejected like the reference's cap).
@@ -174,6 +211,7 @@ class DocService:
         }
         return sinks.upsert_row(self.table_dir, "url", row, self.n_buckets)
 
+    @_counted
     def delete(self, url: str) -> dict:
         """DELETE analog: copy-on-write delete of one url's bucket."""
         return sinks.delete_key(self.table_dir, "url", url, self.n_buckets)

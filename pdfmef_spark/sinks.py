@@ -37,11 +37,23 @@ writer as a callable):
   setup alone costs about 2 ms per call): it reads each file's key
   column first, and the requested columns only from files that hold the
   key. A serving store starts with one file per bucket
-  (``service.DocService.init_from``), and a point rewrite leaves one.
-  A rewrite streams the bucket's record batches into one parquet
-  writer and writes a row group per :data:`_SCAN_ROWS` rows, so driver
-  memory per write is about one row group, not the bucket (the bytes
-  rewritten still grow with the bucket). The point path writes files
+  (``service.DocService.init_from``).
+
+  A point write makes a new version of the key's bucket in a temp dir
+  and swaps it in. A bucket is its base files plus at most one
+  ``delta-<uuid>.parquet`` file of at most :data:`_SCAN_ROWS` rows, one
+  row group. A write whose key no base file holds (an upload of a new
+  document, and its delete) hard-links every base file into the new
+  version and writes only the delta's other rows plus the new row as
+  the new delta file: the bytes written are the delta's, not the
+  bucket's. Every other write (the key is in a base file, or the delta
+  would outgrow :data:`_SCAN_ROWS`) compacts: it streams the bucket's
+  record batches, delta included, into one parquet writer at a row
+  group per :data:`_SCAN_ROWS` rows, so driver memory per write is
+  about one row group, not the bucket. Spark and the bulk path read a
+  delta file as an ordinary data file, and a bulk rewrite of the
+  bucket folds it in. Each data file's key column is read once per
+  write (:func:`_scan`). The point path writes files
   Spark reads back as the same table: rows take the store's own schema
   with its schema metadata (Spark's row-schema key rides along), and
   timestamps are written as INT96 like Spark's own parquet output —
@@ -276,7 +288,10 @@ def upsert_by_key(
 # -- point path: one key, driver-side pyarrow, no Spark job ------------------
 
 BUCKET_COL = "bucket"  # the point path's hive partition column
-_SCAN_ROWS = 1024  # rows per batch a rewrite streams, and per row group it writes
+# rows per batch a rewrite streams and per row group it writes, and the
+# most a bucket's delta file holds before a point write compacts it
+_SCAN_ROWS = 1024
+_DELTA = "delta-"  # name prefix of a bucket's delta file
 
 
 def _bucket_dirs(table_dir: str, n_buckets: int) -> list[str]:
@@ -342,8 +357,25 @@ def _key_masks(part_dir: str, key_col: str, key: str):
         yield pf, pc.equal(pf.read(columns=[key_col])[key_col], key)
 
 
-def _matches(part_dir: str, key_col: str, key: str) -> int:
-    return sum(pc.sum(m).as_py() or 0 for _pf, m in _key_masks(part_dir, key_col, key))
+def _scan(part_dir: str, key_col: str, key: str):
+    """One read of each data file of an existing bucket for a point
+    write: the key column of a base file, all of a delta file (at most
+    _SCAN_ROWS rows). Returns (base files, rows keyed `key` in them,
+    the delta's rows not keyed `key` as tables, rows keyed `key` in the
+    delta)."""
+    bases, base_hits, kept, delta_hits = [], 0, [], 0
+    for path in _data_files(part_dir):
+        pf = pq.ParquetFile(path)
+        if os.path.basename(path).startswith(_DELTA):
+            t = pf.read()
+            hit = pc.fill_null(pc.equal(t[key_col], key), False)
+            delta_hits += pc.sum(hit).as_py() or 0
+            kept.append(t.filter(pc.invert(hit)))
+        else:
+            bases.append(path)
+            hit = pc.equal(pf.read(columns=[key_col])[key_col], key)
+            base_hits += pc.sum(hit).as_py() or 0
+    return bases, base_hits, kept, delta_hits
 
 
 def _kept(part_dir: str, key_col: str, key: str, schema: pa.Schema):
@@ -358,15 +390,22 @@ def _kept(part_dir: str, key_col: str, key: str, schema: pa.Schema):
                 yield pa.Table.from_batches([kept]).cast(schema)
 
 
+def _writer(path: str, schema: pa.Schema) -> pq.ParquetWriter:
+    """A parquet file Spark reads back as part of the table (INT96
+    timestamps, as Spark writes them)."""
+    return pq.ParquetWriter(
+        path, schema, compression="zstd", use_deprecated_int96_timestamps=True
+    )
+
+
 def _rewrite(
     part_dir: str | None, key_col: str, key: str, schema: pa.Schema,
     new: pa.Table | None = None,
 ) -> Callable[[str], None]:
-    """Writer for _swap_in: streams `part_dir`'s rows minus those keyed
-    `key` (:func:`_kept`), then `new`, into one parquet file Spark reads
-    back as part of the table (INT96 timestamps, as Spark writes them).
-    Rows are written a row group once _SCAN_ROWS of them have gathered,
-    so a bucket does not gain a row group per upload, and driver memory
+    """Writer for _swap_in that compacts the bucket: streams every data
+    file of `part_dir`, base and delta, minus the rows keyed `key`
+    (:func:`_kept`), then `new`, into one parquet file. Rows are written
+    a row group once _SCAN_ROWS of them have gathered, and driver memory
     holds about one row group of the input (Spark writes them at up to
     128 MB) plus one of the output, never the whole bucket."""
 
@@ -375,12 +414,7 @@ def _rewrite(
         pieces = [] if part_dir is None else _kept(part_dir, key_col, key, schema)
         if new is not None:
             pieces = itertools.chain(pieces, [new])
-        with pq.ParquetWriter(
-            os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"),
-            schema,
-            compression="zstd",
-            use_deprecated_int96_timestamps=True,
-        ) as out:
+        with _writer(os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"), schema) as out:
             buf, rows = [], 0
             for t in pieces:
                 buf.append(t)
@@ -392,6 +426,50 @@ def _rewrite(
                 out.write_table(pa.concat_tables(buf))
 
     return write
+
+
+def _relink(bases: list[str], delta: pa.Table) -> Callable[[str], None]:
+    """Writer for _swap_in that leaves the base files as they are: each
+    is hard-linked into the new bucket version (same inode, no bytes
+    copied), and the `delta` rows become its one delta file, a single
+    row group. No delta file when there are no rows."""
+
+    def write(path: str) -> None:
+        os.makedirs(path)
+        for f in bases:
+            os.link(f, os.path.join(path, os.path.basename(f)))
+        if delta.num_rows:
+            name = os.path.join(path, f"{_DELTA}{uuid.uuid4().hex}.parquet")
+            with _writer(name, delta.schema) as out:
+                out.write_table(delta)
+
+    return write
+
+
+def _point_write(
+    part_dir: str, key_col: str, key: str, schema: pa.Schema | None,
+    new: pa.Table | None = None,
+) -> int:
+    """Swap in the existing bucket `part_dir` minus its rows keyed
+    `key`, plus the row `new` of an upsert; return how many rows were
+    keyed `key` (a delete of an absent key writes nothing). When no base
+    file holds the key and the delta's other rows plus `new` fit in
+    _SCAN_ROWS, only the delta file is rewritten (:func:`_relink`);
+    otherwise the bucket is compacted into one file (:func:`_rewrite`).
+    `schema` None takes the bucket's own."""
+    bases, base_hits, kept, delta_hits = _scan(part_dir, key_col, key)
+    if new is None and not base_hits + delta_hits:
+        return 0
+    if schema is None:
+        schema = _nullable_schema(part_dir)
+    delta = pa.concat_tables(
+        [schema.empty_table(), *(t.cast(schema) for t in kept), *([] if new is None else [new])]
+    )
+    if bases and not base_hits and delta.num_rows <= _SCAN_ROWS:
+        _swap_in(part_dir, _relink(bases, delta))
+    else:
+        _swap_in(part_dir, _rewrite(part_dir, key_col, key, schema, new))
+    return base_hits + delta_hits
 
 
 def lookup(
@@ -432,7 +510,11 @@ def upsert_row(table_dir: str, key_col: str, row: dict, n_buckets: int) -> dict:
     The row takes the STORE's schema — every field nullable, the
     store's schema metadata kept — so columns the row omits are null and
     stores with extra per-document columns work unchanged. Same reply as
-    the bulk path; only the row's bucket is rewritten."""
+    the bulk path; only the row's bucket gets a new version. A key no
+    base file holds (a new document, or one in the delta) rewrites only
+    the bucket's small delta file and hard-links its base files; an
+    update of a key in a base file rewrites the whole bucket into one
+    file (:func:`_point_write`). A brand-new bucket is one file."""
     key = row[key_col]
     part = _bucket_dir(table_dir, key, n_buckets)
     _recover(part)
@@ -442,8 +524,7 @@ def upsert_row(table_dir: str, key_col: str, row: dict, n_buckets: int) -> dict:
         [{f.name: _as_utc(row.get(f.name)) for f in schema}], schema=schema
     )
     if os.path.isdir(part):
-        matched = _matches(part, key_col, key)
-        _swap_in(part, _rewrite(part, key_col, key, schema, new))
+        matched = _point_write(part, key_col, key, schema, new)
     else:  # brand-new bucket: an insert
         matched = 0
         _swap_in(part, _rewrite(None, key_col, key, schema, new))
@@ -458,13 +539,13 @@ def upsert_row(table_dir: str, key_col: str, row: dict, n_buckets: int) -> dict:
 def delete_key(table_dir: str, key_col: str, key: str, n_buckets: int) -> dict:
     """Point DELETE: :func:`delete_by_key` for one key, run driver-side
     with pyarrow. Same reply; idempotent (a bucket without the key is
-    not rewritten)."""
+    not rewritten). A key held only by the bucket's delta file rewrites
+    that file alone; a key in a base file rewrites the whole bucket into
+    one file (:func:`_point_write`)."""
     part = _bucket_dir(table_dir, key, n_buckets)
     _recover(part)
     part_dirs = _bucket_dirs(table_dir, n_buckets)
-    doomed = _matches(part, key_col, key) if os.path.isdir(part) else 0
-    if doomed:
-        _swap_in(part, _rewrite(part, key_col, key, _nullable_schema(part)))
+    doomed = _point_write(part, key_col, key, None) if os.path.isdir(part) else 0
     return {
         "rows_deleted": doomed,
         "partitions_rewritten": int(doomed > 0),

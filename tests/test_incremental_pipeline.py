@@ -240,6 +240,31 @@ def test_legacy_layout_tick_rebuilds_full(spark, smoke_pages, tmp_path):
     assert a == want
 
 
+def test_tick_links_decision_reaches_the_manifest(spark, smoke_pages, tmp_path):
+    """The manifest links row of a bootstrap tick and of a delta tick
+    holds the links mode, its reason and the seconds the decision took,
+    the same dict as the tick's stage metrics."""
+    import json
+
+    b = F.pmod(F.xxhash64("url"), F.lit(3))
+    inc_dir = str(tmp_path / "inc")
+    r1 = P.run_pipeline_incremental(spark, smoke_pages.filter(b == 0), inc_dir)
+    r2 = P.run_pipeline_incremental(spark, smoke_pages.filter(b != 2), inc_dir)
+    rows = {
+        r.run_id: r.metrics
+        for r in spark.read.parquet(f"{inc_dir}/manifest")
+        .filter((F.col("stage") == "links") & (F.col("status") == "complete"))
+        .collect()
+    }
+    assert rows[r1.run_id] is not None and rows[r2.run_id] is not None, rows
+    boot, delta = json.loads(rows[r1.run_id]), json.loads(rows[r2.run_id])
+    assert (boot["links_mode"], boot["links_reason"]) == ("full", "bootstrap")
+    assert (delta["links_mode"], delta["links_reason"]) == ("delta", "delta")
+    assert boot["decide_s"] >= 0 and delta["decide_s"] > 0
+    assert boot == r1.results["links"].metrics
+    assert delta == r2.results["links"].metrics
+
+
 def test_tick_leaves_nothing_cached(spark, smoke_pages, tmp_path, monkeypatch):
     """Every frame a tick persists is unpersisted by the time the
     tick returns: a streaming driver runs one tick per micro-batch, so a
@@ -283,6 +308,7 @@ def test_delta_tail_crash_retry_falls_back_to_full(spark, smoke_pages, tmp_path)
     # prev links already contain this batch's delta, so a delta union
     # would dup
     assert retry.results["links"].metrics["links_mode"] == "full"
+    assert retry.results["links"].metrics["links_reason"] == "retry"
     run_full = P.run_pipeline(spark, pages, str(tmp_path / "full"))
     assert _links_set(retry) == _links_set(run_full)
     assert _graph_sets(retry) == _graph_sets(run_full)
@@ -400,6 +426,7 @@ def test_full_links_tick_records_cap_drops(spark, tmp_path, monkeypatch):
     caps = json.loads(rows[0].metrics)
     # the t:systems bucket (3 members) is over the cap of 2
     assert caps["buckets_dropped"] >= 1 and caps["members_dropped"] >= 3
+    assert caps["links_reason"] == "crossed"
     assert r2.results["links"].metrics == {"links_mode": "full", **caps}
 
 

@@ -227,3 +227,26 @@ def test_http_round_trip(svc):
             assert e.code == 404
     finally:
         server.shutdown()
+
+
+def test_stats_count_requests_and_seconds_per_verb(spark, tmp_path):
+    """DocService.stats() counts each verb's requests, a rejected one
+    included, and the seconds they took."""
+    s = DocService(spark, str(tmp_path / "docs"), n_buckets=8)
+    s.init_from(spark.createDataFrame(
+        [("https://stats.example/0", b"<html><body><p>stored</p></body></html>")],
+        "url string, html binary",
+    ))
+    assert s.stats() == {}
+    url = "https://stats.example/new"
+    s.upload(url, "<html><body><h1>New</h1><p>Alpha beta gamma.</p></body></html>")
+    assert s.text(url)
+    assert s.delete(url)["rows_deleted"] == 1
+    assert s.raw(url) is None
+    with pytest.raises(ValueError, match="5 MB"):
+        s.upload(url, "z" * (5 * 1024 * 1024 + 1))
+    got = s.stats()
+    assert {v: c["requests"] for v, c in got.items()} == {
+        "upload": 2, "text": 1, "delete": 1, "raw": 1
+    }
+    assert all(c["seconds"] > 0 for c in got.values())

@@ -292,12 +292,14 @@ def _keys_in_bucket(b: int, n: int, prefix: str = "doc-") -> list[str]:
     return keys
 
 
-def test_point_uploads_do_not_add_row_groups(spark, tmp_path):
-    """Twenty point uploads into one bucket leave it with no more row
-    groups than its rows need at _SCAN_ROWS rows per group (not one
-    group per upload)."""
-    import math
+def _delta_files(part_dir: str) -> list[str]:
+    return [f for f in _bucket_files(part_dir) if os.path.basename(f).startswith("delta-")]
 
+
+def test_point_uploads_do_not_add_row_groups(spark, tmp_path):
+    """Point uploads of new keys into one bucket leave its base files as
+    they are (same inodes) and gather in one delta file of one row
+    group, so forty uploads leave as many row groups as twenty."""
     import pyarrow.parquet as pq
 
     table_dir = str(tmp_path / "rg")
@@ -306,13 +308,80 @@ def test_point_uploads_do_not_add_row_groups(spark, tmp_path):
     ).withColumn("bucket", sinks.bucket_of(F.col("doc_id"), N_BUCKETS)).write.partitionBy(
         "bucket"
     ).parquet(table_dir)
-    for i, k in enumerate(_keys_in_bucket(3, 20, prefix="new-")):
+    part = f"{table_dir}/bucket=3"
+    base = {f: os.stat(f).st_ino for f in _bucket_files(part)}
+
+    def row_groups() -> int:
+        return sum(pq.ParquetFile(f).metadata.num_row_groups for f in _bucket_files(part))
+
+    keys = _keys_in_bucket(3, 40, prefix="new-")
+    for i, k in enumerate(keys[:20]):
         sinks.upsert_row(table_dir, "doc_id", {"doc_id": k, "val": i}, N_BUCKETS)
-    metas = [pq.ParquetFile(f).metadata for f in _bucket_files(f"{table_dir}/bucket=3")]
-    rows = sum(m.num_rows for m in metas)
-    groups = sum(m.num_row_groups for m in metas)
-    assert rows >= 20
-    assert groups <= math.ceil(rows / sinks._SCAN_ROWS), (rows, groups)
+    (delta,) = _delta_files(part)
+    assert {f: os.stat(f).st_ino for f in _bucket_files(part) if f != delta} == base
+    meta = pq.ParquetFile(delta).metadata
+    assert (meta.num_row_groups, meta.num_rows) == (1, 20)
+    groups = row_groups()
+    for i, k in enumerate(keys[20:]):
+        sinks.upsert_row(table_dir, "doc_id", {"doc_id": k, "val": i}, N_BUCKETS)
+    assert row_groups() == groups
+
+
+def test_delta_compacts_past_scan_rows_and_on_base_key_writes(spark, tmp_path, monkeypatch):
+    """With the delta capped at 4 rows: a fifth new key compacts the
+    bucket into one file, and an update and a delete of a key in a base
+    file each fold the delta in. After every step the replies and the
+    bucket's rows equal the bulk path's."""
+    monkeypatch.setattr(sinks, "_SCAN_ROWS", 4)
+    b = 3
+    dirs = {}
+    for side in ("point", "bulk"):
+        dirs[side] = str(tmp_path / side)
+        spark.createDataFrame(
+            [(f"doc-{i}", i) for i in range(300)], "doc_id string, val long"
+        ).withColumn("bucket", sinks.bucket_of(F.col("doc_id"), N_BUCKETS)).write.partitionBy(
+            "bucket"
+        ).parquet(dirs[side])
+    part = f"{dirs['point']}/bucket={b}"
+    stored = _keys_in_bucket(b, 2)
+    new = _keys_in_bucket(b, 7, prefix="new-")
+
+    def step(k: str, v: int | None) -> None:
+        if v is None:
+            got = sinks.delete_key(dirs["point"], "doc_id", k, N_BUCKETS)
+            want = sinks.delete_by_key(
+                spark, dirs["bulk"], "doc_id",
+                spark.createDataFrame([(k,)], "doc_id string"), n_buckets=N_BUCKETS,
+            )
+        else:
+            got = sinks.upsert_row(dirs["point"], "doc_id", {"doc_id": k, "val": v}, N_BUCKETS)
+            want = sinks.upsert_by_key(
+                spark, dirs["bulk"], "doc_id",
+                spark.createDataFrame([(k, v)], "doc_id string, val long"),
+                n_buckets=N_BUCKETS,
+            )
+        assert got == want, k
+        rows = {
+            side: sorted(tuple(r) for r in spark.read.parquet(f"{d}/bucket={b}").collect())
+            for side, d in dirs.items()
+        }
+        assert rows["point"] == rows["bulk"], k
+
+    n_base = len(_bucket_files(part))
+    for i, k in enumerate(new[:4]):
+        step(k, i)
+    assert len(_bucket_files(part)) == n_base + 1 and len(_delta_files(part)) == 1
+    step(new[4], 4)  # the delta would hold 5 rows: compact
+    assert len(_bucket_files(part)) == 1 and not _delta_files(part)
+    step(new[5], 5)
+    assert len(_delta_files(part)) == 1
+    step(stored[0], -1)  # update of a base key folds the delta in
+    assert len(_bucket_files(part)) == 1 and not _delta_files(part)
+    step(new[6], 6)
+    assert len(_delta_files(part)) == 1
+    step(stored[1], None)  # delete of a base key folds the delta in
+    assert len(_bucket_files(part)) == 1 and not _delta_files(part)
+    assert sinks.lookup(dirs["point"], "doc_id", new[6], N_BUCKETS)["val"].to_pylist() == [6]
 
 
 def test_point_path_over_multi_file_bucket_with_null_key(spark, tmp_path):
@@ -465,3 +534,28 @@ def test_bulk_ops_recover_an_interrupted_swap(spark, tmp_path):
     }
     assert not [n for n in os.listdir(table_dir) if n.startswith(".bucket=")]
     assert spark.read.parquet(table_dir).count() == 999
+
+
+def test_point_ops_recover_an_interrupted_delta_swap(spark, tmp_path):
+    """A process that dies between the renames of a new key's upload (a
+    swap of hard-linked base files plus a rewritten delta file) leaves
+    the bucket renamed away; recovery keeps every base and delta row,
+    and a full Spark read still counts the whole table."""
+    table_dir = _make_table(spark, tmp_path)
+    b = sinks.bucket_of_key("doc-5", N_BUCKETS)
+    part = f"{table_dir}/bucket={b}"
+    new = _keys_in_bucket(b, 3, prefix="new-")
+    for i, k in enumerate(new[:2]):
+        sinks.upsert_row(table_dir, "doc_id", {"doc_id": k, "val": i}, N_BUCKETS)
+    assert len(_delta_files(part)) == 1
+    before = {r.doc_id: r.val for r in spark.read.parquet(part).collect()}
+
+    _crash_mid_swap(table_dir, new[2])
+    assert sinks.lookup(table_dir, "doc_id", new[2], N_BUCKETS).num_rows == 0
+    assert not [n for n in os.listdir(table_dir) if n.startswith(f".bucket={b}.")]
+    for k in ("doc-5", new[0], new[1]):
+        assert sinks.lookup(table_dir, "doc_id", k, N_BUCKETS).to_pylist() == [
+            {"doc_id": k, "val": before[k]}
+        ]
+    assert {r.doc_id: r.val for r in spark.read.parquet(part).collect()} == before
+    assert spark.read.parquet(table_dir).count() == 1002

@@ -445,6 +445,10 @@ def run_pipeline_incremental(
             f"{out_dir} holds a non-incremental pipeline output (no ledger); "
             "incremental mode needs a fresh out_dir"
         )
+    # the ledger work (its read, the max(batch_id) job and the isEmpty
+    # job) runs before any stage: its seconds go into the extracted
+    # stage's metrics
+    t0 = time.time()
     ledger = Ledger(spark, f"{out_dir}/ledger", key="url")
     prev = ledger.read()
     batch_id = (prev.agg(F.coalesce(F.max("batch_id"), F.lit(-1))).first()[0] or 0) + 1
@@ -461,6 +465,7 @@ def run_pipeline_incremental(
                     name, spark.read.parquet(p), recomputed=False
                 )
         return run
+    ledger_s = round(time.time() - t0, 3)
     # batch_id stays the same across retries until the ledger commits.
     # If this batch already wrote its extracted partition, an earlier
     # attempt crashed before the commit and may have folded its delta
@@ -470,17 +475,19 @@ def run_pipeline_incremental(
     dyn = {"partitionOverwriteMode": "dynamic"}
     stage = functools.partial(_timed_stage, spark, run)
 
-    def inc_stage(name: str, df: DataFrame, error_col: str | None = None) -> None:
+    def inc_stage(name: str, df: DataFrame, **write_kw) -> None:
         stage(
             name, lambda: df.withColumn("batch_id", F.lit(batch_id)),
-            error_col=error_col, partition_by=["batch_id"],
-            writer_options=dyn,
-            counts_path=f"{out_dir}/{name}/batch_id={batch_id}",
+            partition_by=["batch_id"], writer_options=dyn,
+            counts_path=f"{out_dir}/{name}/batch_id={batch_id}", **write_kw,
         )
 
     extracted_d = extract.extract_pages(delta).persist()
     try:
-        inc_stage("extracted", extracted_d, error_col="error")
+        inc_stage(
+            "extracted", extracted_d, error_col="error",
+            metrics={"ledger_s": ledger_s},
+        )
         triples_d = triples_op.extract_triples(extracted_d).persist()
         try:
             inc_stage("triples", triples_d)

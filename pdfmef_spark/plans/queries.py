@@ -2540,75 +2540,3 @@ def kg_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("reach2"), "node")
         .limit(100)
     )
-
-
-# ---------------------------------------------------------------------------
-# Registration-order rotation for the driver's 50-query check window
-# ---------------------------------------------------------------------------
-# The driver's correctness gate checks the FIRST 50 registered queries
-# per round. The catalog has 66, so 16 entries would otherwise never
-# get an official CORRECTNESS row. Rotation policy (round 6, VERDICT r5
-# #3): the queries whose official row is OLDEST are registered first;
-# the slots they displace are exactly the 16 that received a fresh
-# official row LAST round, so every catalog entry's most recent
-# official row is at most one round old (asserted by
-# tests/test_plans.py::test_rotation_keeps_official_rows_fresh). Every
-# rotated-out query remains in catalog()/oracles() and in the pytest
-# oracle gate (tools/oracle_check.py runs the full 66 locally).
-
-_FRONT_OF_WINDOW = [
-    # 16 veterans rotated out in round 5 — their newest official rows
-    # are r1-r4, the oldest in the catalog
-    "q5_region_revenue",
-    "customers_without_orders",
-    "segment_set_ops",
-    "orders_rollup",
-    "events_json_extract",
-    "lang_sources_arrays",
-    "value_percentiles",
-    "part_string_funcs",
-    "user_sessions",
-    "orders_pivot_status",
-    "supplier_part_distincts",
-    "customers_with_big_orders",
-    "user_value_zscores",
-    "orders_above_customer_avg",
-    "events_moving_avg",
-    "lineitem_cube",
-]
-
-# rotated OUT this round: the 16 that round 5's window checked (fresh
-# official rows in CORRECTNESS_r05.json; still verified by the local
-# full-catalog gate + pytest)
-_ROTATED_OUT = [
-    "event_value_quantiles",
-    "event_value_quantiles_approx",   # rows-only by design (sketch)
-    "kg_two_hop_reach_hll",           # rows-only by design (sketch)
-    "kg_entity_cooccurrence",
-    "kg_triangle_count",
-    "big_order_customers",
-    "order_rank_functions",
-    "disjunctive_brand_revenue",
-    "kg_clustering_coefficients",
-    "doc_deterministic_sample",
-    "event_value_histogram",
-    "kg_pagerank_weighted",
-    "kg_two_hop_reach",
-    "kg_pagerank",
-    "late_shipment_priorities",
-    "promo_revenue_by_year",
-]
-
-
-def _rotate() -> None:
-    order = list(_FRONT_OF_WINDOW)
-    order += [n for n in _QUERIES if n not in order and n not in _ROTATED_OUT]
-    order += [n for n in _ROTATED_OUT if n in _QUERIES]
-    assert sorted(order) == sorted(_QUERIES), "rotation must be a permutation"
-    for d in (_QUERIES, _ORACLES):
-        snap = dict(d)
-        d.clear()
-        d.update({n: snap[n] for n in order if n in snap})
-
-
-_rotate()

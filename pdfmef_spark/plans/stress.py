@@ -1,23 +1,21 @@
-"""Vocabulary-growth stress for entity linking.
+"""Vocabulary-growth inputs for entity linking and the full pipeline.
 
-The synthetic corpus draws surfaces from fixed pools (corpus.py), so the
-links stage looks ~constant in doc count there. Real web surface forms
-grow with corpus size; this module generates a mentions table whose
-DISTINCT surface count grows linearly with n and drives the full
-link_entities path (LSH bands + token/prefix blocks + Arrow scoring)
-over it at two sizes, recording throughput scaling. Validates the
-"caps keep candidate generation bucketed" claim under vocabulary growth
-(reference analog: pdfmef's author/affiliation strings grow with the
-crawl, src/extractor/csxextract/extractors/tei.py:45-65).
+The synthetic corpus draws surfaces from fixed pools (corpus.py), so its
+vocabulary saturates after about 1,500 pages. Real web surface forms
+grow with corpus size (reference analog: pdfmef's author/affiliation
+strings grow with the crawl, src/extractor/csxextract/extractors/
+tei.py:45-65). This module generates inputs whose vocabulary grows
+linearly with n:
 
-Everything is a pure function of the row index — deterministic at any
-parallelism, nothing collected to the driver but the final count.
+* :func:`stress_mentions`, a mentions table for ``link_entities``;
+* :func:`stress_pages`, a page corpus for ``run_pipeline``, used by
+  ``tools/scaling_run.py``.
+
+Everything is a pure function of the row index, so the output is the
+same at any parallelism and nothing is collected to the driver.
 """
 
 from __future__ import annotations
-
-import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -47,43 +45,6 @@ def stress_mentions(spark: SparkSession, n_entities: int) -> DataFrame:
         .otherwise(F.concat(first, F.lit(" "), last, F.lit(" Labs")))
     )
     return base.select(F.lit("PERSON").alias("type"), surface.alias("surface"))
-
-
-def linking_scaling(
-    spark: SparkSession, n_small: int = 10_000, growth: int = 4, reps: int = 2
-) -> dict:
-    """Run link_entities at n and growth*n entities; report best-of-reps
-    wall-clock, surfaces/sec, and the time ratio (linear growth => ratio
-    ~= growth; an unbucketed quadratic path would show ~growth**2).
-
-    Reps ALTERNATE between the two sizes (small, large, small, large)
-    so a throttle phase on this burstable VM cannot land entirely on one
-    side and invert the ratio (same discipline as tools/scaling_run.py).
-    """
-    from pdfmef_spark.operators.linking import link_entities
-
-    sizes = {"small": n_small, "large": n_small * growth}
-    best: dict[str, float] = {}
-    links_n: dict[str, int] = {}
-    for _ in range(reps):
-        for tag, n in sizes.items():
-            m = stress_mentions(spark, n)
-            t0 = time.time()
-            links_n[tag] = link_entities(m).count()
-            dt = time.time() - t0
-            best[tag] = min(best.get(tag, dt), dt)
-
-    out: dict = {"growth": growth, "reps": reps}
-    for tag, n in sizes.items():
-        out[tag] = {
-            "entities": n,
-            "surfaces": VARIANTS_PER_ENTITY * n,
-            "links": links_n[tag],
-            "sec": round(best[tag], 3),
-            "surfaces_per_sec": round(VARIANTS_PER_ENTITY * n / best[tag], 1),
-        }
-    out["time_ratio"] = round(out["large"]["sec"] / out["small"]["sec"], 3)
-    return out
 
 
 def stress_pages(spark: SparkSession, n_pages: int) -> DataFrame:
@@ -204,214 +165,3 @@ def stress_pages(spark: SparkSession, n_pages: int) -> DataFrame:
         F.encode(html, "UTF-8").alias("html"),
         F.lit("en").alias("lang"),
     )
-
-
-def stress_embeddings(
-    spark: SparkSession, n: int, dim: int = 32, clusters: int = 64
-) -> DataFrame:
-    """Deterministic clustered embedding table (vec_id, embedding).
-
-    Every component is a pure function of (vec_id, j): cluster center +
-    bounded noise, so the table is identical at any parallelism and
-    needs no seed state. Clustered structure (not uniform noise) is what
-    makes IVF a fair test — real embedding spaces are clustered, and a
-    coarse quantizer over uniform noise has nothing to exploit."""
-    def comp(j: int):
-        c = F.pmod(F.col("id"), F.lit(clusters))
-        center = F.pmod(F.xxhash64(c, F.lit(j)), F.lit(2001)) / 1000.0 - 1.0
-        noise = (
-            F.pmod(F.xxhash64(F.col("id"), F.lit(j + 7919)), F.lit(2001)) / 1000.0
-            - 1.0
-        ) * 0.15
-        return (center + noise).cast("float")
-
-    return spark.range(n).select(
-        F.col("id").alias("vec_id"),
-        F.array(*[comp(j) for j in range(dim)]).alias("embedding"),
-    )
-
-
-def ann_scaling(
-    spark: SparkSession,
-    n_small: int = 100_000,
-    growth: int = 4,
-    k: int = 10,
-    n_queries: int = 8,
-    nprobe: int = 16,
-    reps: int = 2,
-) -> dict:
-    """IVF ANN at n and growth*n vectors: wall-clock, time ratio, and
-    recall@k vs the brute-force oracle at BOTH sizes.
-
-    Mirrors linking_scaling's evidence shape for the similarity-search
-    family: centroid count grows ~sqrt(N) (the standard IVF sizing), so
-    near-linear time ratio + stable recall evidences that probe cost
-    stays bucketed as the table grows. Reps alternate sizes
-    (interleaved best-of-N, the scaling_run.py discipline). Input
-    tables are materialized to .cache parquet once (deterministic), so
-    generation cost never rides the measurement."""
-    import math
-    import os
-
-    from pdfmef_spark.operators.similarity import brute_force_topk, ivf_topk
-    from pdfmef_spark.sources.store import DEFAULT_CACHE
-
-    sizes = {"small": n_small, "large": n_small * growth}
-    paths: dict[str, str] = {}
-    for tag, n in sizes.items():
-        p = f"{DEFAULT_CACHE}/ann_stress_{n}"
-        if not os.path.exists(p):
-            stress_embeddings(spark, n).write.mode("overwrite").parquet(p)
-        paths[tag] = p
-
-    best: dict[str, float] = {}
-    recalls: dict[str, float] = {}
-    for _ in range(reps):
-        for tag, n in sizes.items():
-            emb = spark.read.parquet(paths[tag])
-            queries = spark.createDataFrame(
-                [
-                    (int(r.vec_id), list(map(float, r.embedding)))
-                    for r in emb.filter(
-                        F.pmod(F.col("vec_id"), F.lit(n // n_queries)) == 17
-                    ).limit(n_queries).collect()
-                ],
-                "q_id long, q_vec array<double>",
-            )
-            n_cent = int(math.sqrt(n))
-            t0 = time.time()
-            ivf = ivf_topk(
-                emb, queries, k=k, n_centroids=n_cent, nprobe=nprobe
-            ).collect()
-            dt = time.time() - t0
-            best[tag] = min(best.get(tag, dt), dt)
-            if tag not in recalls:
-                truth = brute_force_topk(emb, queries, k=k).collect()
-                t_set = {(r.q_id, r.vec_id) for r in truth}
-                i_set = {(r.q_id, r.vec_id) for r in ivf}
-                recalls[tag] = round(len(t_set & i_set) / max(len(t_set), 1), 4)
-
-    out: dict = {"growth": growth, "k": k, "nprobe": nprobe, "reps": reps}
-    for tag, n in sizes.items():
-        out[tag] = {
-            "vectors": n,
-            "centroids": int(math.sqrt(n)),
-            "sec": round(best[tag], 3),
-            "vectors_per_sec": round(n / best[tag], 1),
-            "recall_at_k": recalls[tag],
-        }
-    out["time_ratio"] = round(out["large"]["sec"] / out["small"]["sec"], 3)
-    return out
-
-
-def streaming_tick_scaling(
-    spark: SparkSession,
-    n_batches: int = 20,
-    total_docs: int = 8000,
-    keep_dirs: bool = False,
-) -> dict:
-    """Per-tick latency as streamed batches ACCUMULATE (~n_batches drops).
-
-    What it shows: a tick's doc-local stages and links are O(delta),
-    while its graph tail (assignments, nodes, edges) is rebuilt from
-    all triples, the same tail ``run_pipeline`` writes. The per-stage
-    growth below separates the two as batches 1..n accumulate, and the
-    processed-url ledger's anti-join must stay cheap as the ledger
-    grows. Each tick drops one parquet file of NEW urls into the
-    arrival dir, restarts the availableNow stream against the same
-    checkpoint (file-source dedup skips everything already processed),
-    and times (a) the whole tick and (b) a standalone ledger anti-join
-    probe of the next batch against the accumulated ledger. Reported:
-    per-tick walls, first-3 vs last-3 means, and their ratio — a ratio
-    near 1 means fixed per-job cost still outweighs the tail's
-    corpus-sized work; a ratio near ~n_batches/3 means it no longer
-    does.
-    """
-    import shutil
-    import tempfile
-
-    from pdfmef_spark.streaming.incremental import Ledger
-    from pdfmef_spark.streaming.ingest import run_streaming_kg_updates
-
-    root = tempfile.mkdtemp(prefix="stream_ticks_")
-    arrival, out, ckpt = f"{root}/arrive", f"{root}/kg", f"{root}/ckpt"
-    os.makedirs(arrival, exist_ok=True)
-
-    pages = stress_pages(spark, total_docs).withColumn(
-        "batch", F.pmod(F.xxhash64("url"), F.lit(n_batches))
-    )
-    staged = f"{root}/staged"
-    pages.write.partitionBy("batch").mode("overwrite").parquet(staged)
-
-    tick_secs: list[float] = []
-    ledger_probe_secs: list[float] = []
-    stage_secs: list[dict] = []  # per tick: stage -> wall seconds
-    try:
-        for b in range(n_batches):
-            # one drop = one batch's parquet files moved into arrival
-            src = f"{staged}/batch={b}"
-            for i, f_ in enumerate(sorted(os.listdir(src)) if os.path.exists(src) else []):
-                if f_.endswith(".parquet"):
-                    shutil.copy(f"{src}/{f_}", f"{arrival}/b{b}_{i}.parquet")
-            tick_stages: dict = {}
-
-            def _collect(run, epoch_id, sink=tick_stages):
-                for name, res in run.results.items():
-                    sink[name] = round(sink.get(name, 0.0) + res.seconds, 2)
-
-            t0 = time.time()
-            q = run_streaming_kg_updates(
-                spark, arrival, out, checkpoint_dir=ckpt, on_batch=_collect
-            )
-            q.awaitTermination()
-            tick_secs.append(round(time.time() - t0, 2))
-            stage_secs.append(tick_stages)
-
-            # controlled probe: anti-join the SAME fixed-size snapshot
-            # against the growing ledger each tick — isolates the
-            # ledger-side cost from batch-size variation
-            snap = spark.read.parquet(staged)
-            t0 = time.time()
-            Ledger(spark, f"{out}/ledger", key="url").unprocessed(snap).count()
-            ledger_probe_secs.append(round(time.time() - t0, 2))
-        edges = spark.read.parquet(f"{out}/edges").count()
-        urls = spark.read.parquet(f"{out}/ledger").count()
-    finally:
-        if not keep_dirs:
-            shutil.rmtree(root, ignore_errors=True)
-
-    head = tick_secs[:3]
-    tail = tick_secs[-3:]
-    # per-stage first-3 vs last-3 means: names WHICH component grows as
-    # batches accumulate (O(vocab) links/tail work) and which stays flat
-    # (fixed stream/commit overhead) — the attribution behind the
-    # aggregate last_over_first ratio
-    stage_growth = {}
-    for name in stage_secs[0] if stage_secs else ():
-        h = [s.get(name, 0.0) for s in stage_secs[:3]]
-        t = [s.get(name, 0.0) for s in stage_secs[-3:]]
-        hm, tm = sum(h) / len(h), sum(t) / len(t)
-        stage_growth[name] = {
-            "first3_mean_sec": round(hm, 2),
-            "last3_mean_sec": round(tm, 2),
-            "last_over_first": round(tm / max(hm, 1e-9), 3),
-        }
-    return {
-        "stage_growth": stage_growth,
-        "batches": n_batches,
-        "docs": total_docs,
-        "urls_in_ledger": urls,
-        "edges": edges,
-        "tick_secs": tick_secs,
-        "ledger_probe_secs": ledger_probe_secs,
-        "first3_mean_sec": round(sum(head) / len(head), 2),
-        "last3_mean_sec": round(sum(tail) / len(tail), 2),
-        "last_over_first": round(
-            (sum(tail) / len(tail)) / max(sum(head) / len(head), 1e-9), 3
-        ),
-        "ledger_probe_last_over_first": round(
-            (sum(ledger_probe_secs[-3:]) / 3)
-            / max(sum(ledger_probe_secs[:3]) / 3, 1e-9),
-            3,
-        ),
-    }

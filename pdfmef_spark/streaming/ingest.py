@@ -82,7 +82,6 @@ def run_streaming_kg_updates(
     out_dir: str,
     checkpoint_dir: str | None = None,
     cap_bytes: int = UPLOAD_CAP_BYTES,
-    on_batch=None,
 ):
     """Page drops -> incremental KG refresh, one batch per micro-batch.
 
@@ -96,20 +95,13 @@ def run_streaming_kg_updates(
     becomes a no-op, so the graph never double-counts a page (the
     streaming generalization of the reference's polling daemon,
     src/extractor/main.py:139-176).
-
-    ``on_batch(run, epoch_id)``, when given, is called in the driver
-    after each micro-batch with the completed incremental run — the
-    hook latency/scaling harnesses use to read per-stage wall seconds
-    without touching the data path.
     """
     from pdfmef_spark import pipeline as P
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        run = P.run_pipeline_incremental(
+        P.run_pipeline_incremental(
             spark, batch_df, out_dir, run_id=f"stream-{epoch_id}"
         )
-        if on_batch is not None:
-            on_batch(run, epoch_id)
 
     ok = (
         gate_upload_size(read_page_uploads(spark, input_dir), cap_bytes)

@@ -265,6 +265,29 @@ def test_tick_links_decision_reaches_the_manifest(spark, smoke_pages, tmp_path):
     assert delta == r2.results["links"].metrics
 
 
+def test_tick_ledger_work_reaches_the_manifest(spark, smoke_pages, tmp_path):
+    """A tick's ledger read, its max(batch_id) job and its isEmpty job
+    run before any stage; their seconds land in the manifest extracted
+    row as ``ledger_s``, the same dict as the tick's stage metrics."""
+    import json
+
+    inc_dir = str(tmp_path / "inc")
+    run = P.run_pipeline_incremental(spark, smoke_pages, inc_dir)
+    (row,) = (
+        spark.read.parquet(f"{inc_dir}/manifest")
+        .filter(
+            (F.col("run_id") == run.run_id)
+            & (F.col("stage") == "extracted")
+            & (F.col("status") == "complete")
+        )
+        .collect()
+    )
+    assert row.metrics is not None
+    got = json.loads(row.metrics)
+    assert got["ledger_s"] > 0
+    assert got == run.results["extracted"].metrics
+
+
 def test_tick_leaves_nothing_cached(spark, smoke_pages, tmp_path, monkeypatch):
     """Every frame a tick persists is unpersisted by the time the
     tick returns: a streaming driver runs one tick per micro-batch, so a

@@ -168,28 +168,3 @@ def test_deterministic_sample_is_pushed_scan_filter(spark):
     # the only exchange allowed is the final presentation orderBy
     assert plan.count("Exchange rangepartitioning") <= 1
     assert "Exchange hashpartitioning" not in plan
-
-
-def test_rotation_keeps_official_rows_fresh():
-    """Rotation policy (VERDICT r5 #3): every catalog query OUTSIDE the
-    driver's first-50 check window must hold an official row from the
-    MOST RECENT round's CORRECTNESS file — so no entry's official row
-    is ever more than two rounds old (the window itself refreshes the
-    other 50 this round)."""
-    import glob
-    import json
-    import os
-    import re
-
-    from pdfmef_spark.plans import queries as Q
-
-    order = list(Q.catalog())
-    window = set(order[:50])
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    files = glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-    assert files, "no official correctness files"
-    latest = max(files, key=lambda p: int(re.search(r"r(\d+)", p).group(1)))
-    with open(latest) as fh:
-        fresh = set(json.load(fh))
-    stale = [n for n in order if n not in window and n not in fresh]
-    assert stale == [], f"queries with no recent official row: {stale}"

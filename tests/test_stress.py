@@ -1,7 +1,12 @@
-"""Vocabulary-growth linking stress: determinism and recall bounds."""
+"""Vocabulary-growth stress inputs: linking recall and precision bounds,
+and a full pipeline over the growing page corpus."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
+from pdfmef_spark import pipeline as P
+from pdfmef_spark.operators import linking
 from pdfmef_spark.operators.linking import link_entities
 from pdfmef_spark.plans import stress
 
@@ -43,47 +48,40 @@ def test_stress_linking_recall_and_precision(spark):
         assert la == lb, pair
 
 
-def test_stress_embeddings_deterministic_and_clustered(spark):
-    """Embedding components are pure functions of (vec_id, j): identical at
-    any parallelism, and clustered (same pmod-cluster vectors are near one
-    another, cross-cluster vectors are not) so IVF has real structure."""
-    a = stress.stress_embeddings(spark, 256).repartition(1).collect()
-    b = stress.stress_embeddings(spark, 256).repartition(7).collect()
-    assert {r.vec_id: r.embedding for r in a} == {r.vec_id: r.embedding for r in b}
+def test_stress_pages_pipeline_links_within_planted_entities(
+    spark, tmp_path, monkeypatch
+):
+    """run_pipeline over 300 stress pages (100 persons, 20 orgs, one
+    page per alias variant): no link joins two planted name stems, each
+    person's canonical and initialed norms share a component, and with
+    the token-block cap below the hot "jr"/"labs" blocks the links
+    manifest row reports the dropped buckets."""
+    import hashlib
+    import json
+    import re
 
-    import math
+    monkeypatch.setattr(linking, "TOKEN_BLOCK_CAP", 8)
+    out = str(tmp_path / "kg")
+    run = P.run_pipeline(spark, stress.stress_pages(spark, 300), out)
 
-    vecs = {r.vec_id: r.embedding for r in a}
+    links = run.df("links").collect()
+    assert links
+    for stem in (r"\bln[0-9a-f]{8}\b", r"\bog[0-9a-f]{8}\b"):
+        for r in links:
+            a, b = re.findall(stem, r.src), re.findall(stem, r.dst)
+            assert not (a and b) or a == b, r
 
-    def dist(u, v):
-        return math.sqrt(sum((x - y) ** 2 for x, y in zip(u, v)))
+    comp = {
+        r.norm: r.component
+        for r in run.df("assignments").filter(F.col("type") == "PERSON").collect()
+    }
+    for e in range(100):
+        last = "ln" + hashlib.md5(str(e).encode()).hexdigest()[:8]
+        assert comp[f"fn{e % 37} {last}"] == comp[f"f {last}"], e
 
-    same = dist(vecs[0], vecs[64])  # 64 = one full cluster cycle -> same center
-    cross = dist(vecs[0], vecs[1])
-    assert same < cross
-
-
-def test_ann_scaling_harness_small(spark):
-    """The bench harness itself: both sizes report recall vs brute force,
-    and the planted clustered corpus keeps IVF recall high at both."""
-    out = stress.ann_scaling(spark, n_small=2000, growth=2, reps=1, n_queries=4)
-    assert out["small"]["vectors"] == 2000 and out["large"]["vectors"] == 4000
-    assert out["small"]["recall_at_k"] >= 0.9
-    assert out["large"]["recall_at_k"] >= 0.9
-    assert out["time_ratio"] > 0
-
-
-def test_streaming_tick_scaling_harness(spark):
-    """3 accumulated drops: every url lands in the ledger exactly once,
-    every tick produces a wall + ledger-probe measurement, and the final
-    graph is non-trivial (the stream really ran the pipeline)."""
-    out = stress.streaming_tick_scaling(spark, n_batches=3, total_docs=120)
-    assert out["batches"] == 3
-    assert out["urls_in_ledger"] == 120
-    assert len(out["tick_secs"]) == 3
-    assert len(out["ledger_probe_secs"]) == 3
-    assert out["edges"] > 0
-    # per-stage decomposition rides along: every pipeline stage has a
-    # first-3/last-3 growth row with nonzero wall
-    assert "links" in out["stage_growth"]
-    assert out["stage_growth"]["links"]["last3_mean_sec"] > 0
+    (row,) = (
+        spark.read.parquet(f"{out}/manifest")
+        .filter((F.col("stage") == "links") & (F.col("status") == "complete"))
+        .collect()
+    )
+    assert json.loads(row.metrics)["buckets_dropped"] >= 1

@@ -66,7 +66,7 @@ def _session(cores: int):
     stages it reads as a fixed cost that distorts the N-vs-4N ratio
     (measured: the links stage at 8 cores ran 45 s with AQE, 29 s
     without, on identical input; the 2-core side moved ~5%). AQE stays
-    ON in the engine defaults (session.py), in bench.py, and in every
+    ON in the engine defaults (session.py), in perfbench, and in every
     correctness run."""
     import os as _os
 
